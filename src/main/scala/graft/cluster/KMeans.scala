@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 
-import graft.functions.VectorOps
+import graft.functions.{ExactVectorSumAgg, VectorOps}
 
 /** Spark-native Lloyd's K-Means with explicit initial centers —
   * the reference program's semantics (Flink batch KMeans example:
@@ -12,14 +12,16 @@ import graft.functions.VectorOps
   * inside a bulk iteration; SURVEY.md §2.1 rows 4–10 [R]) re-expressed
   * Spark-first:
   *
-  *  - assignment is a pure Catalyst expression (broadcast-free literal
-  *    argmin for small k): `array_min` over `struct(dist, cid)` gives
-  *    the min-distance centroid with the reference's lowest-id
-  *    tie-break, entirely inside whole-stage codegen — no UDF, no
-  *    shuffle of points, embarrassingly parallel at any scale;
-  *  - the per-iteration aggregate shuffles only k×numPartitions partial
-  *    rows (Catalyst plans partial+final HashAggregate = Flink's
-  *    combiner);
+  *  - assignment is one compiled Catalyst expression over driver-held
+  *    centers ([[argminColumns]]): the min-distance centroid with the
+  *    reference's lowest-id tie-break, inside whole-stage codegen — no
+  *    UDF, no shuffle of points, embarrassingly parallel at any scale;
+  *  - the per-round aggregate is one typed vector-sum `Aggregator` per
+  *    cluster — the double [[graft.functions.VectorSumAgg]] in [[fit]],
+  *    the exact [[graft.functions.ExactVectorSumAgg]] in [[fitExact]],
+  *    [[accumulate]] and the streaming model — so only k×numPartitions
+  *    partial buffers shuffle (Catalyst's partial+final
+  *    ObjectHashAggregate = Flink's combiner);
   *  - like MLlib, the k·d centers (a few KB) are the only data that
   *    ever crosses back to the driver, so the loop scales to 100 TB
   *    inputs unchanged.
@@ -73,40 +75,37 @@ object KMeansNative {
       .collect()
       .map(_.getSeq[Double](0).toArray)
 
-  /** Seeded-random init: k rows chosen by a deterministic hash-rank of
-    * the id column (stable across runs and partitionings, unlike
-    * `sample`). */
-  def randomCenters(points: DataFrame, idCol: String, vecCol: String,
-                    k: Int, seed: Long): Array[Array[Double]] =
-    points
-      .orderBy(xxhash64(lit(seed), col(idCol)), col(idCol))
-      .limit(k)
-      .select(VectorOps.toDouble(col(vecCol)))
-      .collect()
-      .map(_.getSeq[Double](0).toArray)
-
-  /** One Lloyd's round: per-cluster component sums + counts + partial
-    * WCSS, computed via posexplode + hash aggregate. Shuffle volume is
-    * k × dim × numPartitions after map-side partial agg — independent
-    * of input size.
+  /** One Lloyd's round's accumulator: per-cluster exact component
+    * sums and counts as (cluster_id, dim, coord_sum, n) rows — the k
+    * rows of [[clusterSums]] exploded ×dim on the way out, so only k
+    * buffers per partition shuffle whatever the input size.
     *
-    * Sums go through DECIMAL(38,12) so cross-partition summation order
-    * cannot perturb the result (decimal addition is exact/associative),
-    * making the output hash-deterministic (SURVEY.md §5.2).
+    * Sums are exact (see [[graft.functions.ExactVectorSumAgg]]): each
+    * coord_sum is `CAST(SUM(CAST(x AS DECIMAL(38,12))) AS DOUBLE)` bit
+    * for bit, so cross-partition summation order cannot perturb the
+    * result and the output is hash-deterministic (SURVEY.md §5.2).
+    * Points the argmin leaves unassigned (null or dimension-mismatched
+    * vectors) join no cluster; a null coordinate is skipped by its sum
+    * and still counted in n, as SQL's sum and count(*) do.
     */
   def accumulate(assignedDf: DataFrame, vec: Column): DataFrame =
-    assignedDf
-      .select(col("cluster_id"), posexplode(vec).as(Seq("dim", "coord")))
-      .groupBy(col("cluster_id"), col("dim"))
-      .agg(
-        sum(col("coord").cast("decimal(38,12)")).cast("double").as("coord_sum"),
-        count(lit(1)).as("n"))
+    clusterSums(assignedDf, vec)
+      .select(col("cluster_id"), posexplode(col("s")).as(Seq("dim", "coord_sum")), col("n"))
 
   /** Centroid update from [[accumulate]] output: component mean. */
   def average(accumulated: DataFrame): DataFrame =
     accumulated.select(
       col("cluster_id"), col("dim"),
       (col("coord_sum") / col("n")).as("coord"), col("n"))
+
+  /** k rows (cluster_id, n, s): the point count and the exact vector
+    * sum of each non-empty cluster — ONE partial+final aggregate, the
+    * reference's `CentroidAccumulator` combiner shape. */
+  private def clusterSums(assignedDf: DataFrame, vec: Column): DataFrame =
+    assignedDf
+      .filter(col("cluster_id").isNotNull)
+      .groupBy(col("cluster_id"))
+      .agg(count(lit(1)).as("n"), ExactVectorSumAgg.exact_vec_sum(vec).as("s"))
 
   final case class FitResult(
       centers: Array[Array[Double]],
@@ -120,9 +119,8 @@ object KMeansNative {
     *
     * Determinism note: per-cluster sums use double partial aggregation,
     * so center coordinates are stable only up to partial-merge order
-    * (low-ULP variation across runs) — which is why the full fit is a
-    * rows-only declared query, while the single-round operators
-    * ([[accumulate]]/[[average]]) use the exact decimal bridge and are
+    * (low-ULP variation across runs) — which is why the declared fit is
+    * [[fitExact]], whose sums (like [[accumulate]]'s) are exact and
     * hash-checked. */
   def fit(
       points: DataFrame,
@@ -167,11 +165,13 @@ object KMeansNative {
     } finally pts.unpersist()
   }
 
-  /** Lloyd's loop with EXACT per-round arithmetic: every cross-
-    * partition sum goes through the decimal bridge of [[accumulate]]
-    * (decimal addition is exact and associative), and the per-round
-    * center update is one correctly-rounded double division — so the
-    * whole center TRAJECTORY is bit-deterministic across runs,
+  /** Lloyd's loop with EXACT per-round arithmetic: each round is one
+    * job of k rows — per cluster, the point count and the exact vector
+    * sum of [[graft.functions.ExactVectorSumAgg]], whose components
+    * equal `CAST(SUM(CAST(x AS DECIMAL(38,12))) AS DOUBLE)` bit for bit
+    * in any summation order — and the center update is one
+    * correctly-rounded double division per coordinate on the driver.
+    * So the whole center TRAJECTORY is bit-deterministic across runs,
     * partitionings and engines. That makes the full iterative fit
     * hash-checkable: the declared `kmeans_fit_native` query is
     * compared against a fixed-depth UNROLLED DuckDB oracle (one
@@ -179,11 +179,11 @@ object KMeansNative {
     * Runs exactly `iters` rounds — an extra round from a fixpoint is
     * the identity, so early stopping is unnecessary for parity and
     * would make the oracle depth data-dependent. Empty clusters keep
-    * their previous center (reference semantics). One job per round;
-    * only k·d doubles ever cross to the driver, so the loop scales to
-    * 100 TB inputs unchanged ([[fit]] remains the single-aggregate
-    * performance path; its double partial sums are run-to-run stable
-    * only up to ULPs, which is why it is not the declared query). */
+    * their previous center (reference semantics); unassignable points
+    * (null vectors) join no cluster. Only k·d doubles ever cross to the
+    * driver, so the loop scales to 100 TB inputs unchanged ([[fit]]
+    * sums in double instead, stable run to run only up to ULPs, which
+    * is why it is not the declared query). */
   def fitExact(points: DataFrame, vecCol: String, init: Array[Array[Double]],
                iters: Int): Array[Array[Double]] = {
     val pts = points.select(VectorOps.toDouble(col(vecCol)).as("v"))
@@ -193,10 +193,17 @@ object KMeansNative {
       var centers = init.map(_.clone())
       var it = 0
       while (it < iters) {
-        val rows = average(accumulate(assigned(work, col("v"), centers), col("v")))
-          .select("cluster_id", "dim", "coord").collect()
+        val rows = clusterSums(assigned(work, col("v"), centers), col("v")).collect()
         val next = centers.map(_.clone())
-        rows.foreach(r => next(r.getInt(0))(r.getInt(1)) = r.getDouble(2))
+        rows.foreach { r =>
+          val cid = r.getInt(0)
+          val n = r.getLong(1).toDouble
+          next(cid) = r.getSeq[java.lang.Double](2).zipWithIndex.map { case (s, d) =>
+            if (s == null) throw new IllegalStateException(
+              s"fitExact: cluster $cid has only null coordinates in component $d")
+            s / n
+          }.toArray
+        }
         centers = next
         it += 1
       }
@@ -204,13 +211,14 @@ object KMeansNative {
     } finally pts.unpersist()
   }
 
-  /** Exploded values one round's aggregate pushes through one task.
-    * The DECIMAL(38,12) partial aggregate processes ~1M values/s per
-    * task (measured: 1.28M values in one task = 1.3 s/round at 10×),
-    * so 64 k values ≈ 60 ms of task compute — comfortably amortizing
-    * ~10 ms of dispatch without serializing the round. The first cut
-    * (4M) optimized dispatch only and single-tasked the 10× fit:
-    * 12.9 s; this value holds both scales (ScaleUp row). */
+  /** Vector components one round's aggregate pushes through one task.
+    * The exact vector-sum aggregate takes ~10 M values/s per task
+    * (1.28 M values in one task: 0.12 s/round; [[fit]]'s double sum:
+    * 0.15 s), so 64 k values ≈ 6 ms of task compute — on the order of
+    * one task's dispatch. A 4× larger target (one wave of tasks on 4
+    * cores at 10×) measured no faster on ScaleUp's `kmeans_fit_native`
+    * row (2.72 vs 2.53 s, 3 interleaved pairs), and a 64× larger one
+    * single-tasked the 10× fit, so this value holds both scales. */
   private val RoundValuesPerTask = 65536L
 
   /** Right-size an (already persisted) per-round frame: an iterative
@@ -218,7 +226,7 @@ object KMeansNative {
     * spread over many cache partitions is pure overhead ×iters
     * (measured: 2 k vectors × 32 partitions = 0.4 s/round of which
     * ~0.25 s was task dispatch). Coalesce — narrow, cache-reading —
-    * to ~[[RoundValuesPerTask]] exploded values per task; inputs big
+    * to ~[[RoundValuesPerTask]] vector components per task; inputs big
     * enough to use the cluster are left untouched (ideal ≥ current
     * partitions), so at 100 TB this is the identity. Triggers one
     * count() job on the cached frame — amortized over iters rounds. */

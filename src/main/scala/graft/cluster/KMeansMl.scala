@@ -41,9 +41,4 @@ object KMeansMl {
       .fit(feat)
     (model, model.transform(feat).drop("features"))
   }
-
-  /** fit + transform: original columns + integer `prediction`. */
-  def fitPredict(df: DataFrame, vecCol: String, k: Int, seed: Long = 42L,
-                 maxIter: Int = 20): DataFrame =
-    fitPredictModel(df, vecCol, k, seed, maxIter)._2
 }

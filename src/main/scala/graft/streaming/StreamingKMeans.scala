@@ -33,13 +33,13 @@ final class StreamingKMeansModel(init: Array[Array[Double]], decay: Double) {
   /** Fold one batch of points (column `vecCol`: array<double>) into
     * the model. Safe to call from foreachBatch (serial per query).
     *
-    * Sums go through [[KMeansNative.accumulate]]'s exact-decimal
-    * bridge rather than a double-summing UDAF: partial-buffer merge
-    * order is nondeterministic across partitions, and the streaming
-    * model is oracle-checked (`stream_kmeans_parity`) — per the
-    * engine's determinism rule, cross-partition float sums must be
-    * exact. Cost: the batch explodes ×dim for the aggregate; only
-    * k·d sums ever reach the driver. */
+    * Sums go through [[KMeansNative.accumulate]]'s exact vector sum
+    * rather than a double-summing UDAF: partial-buffer merge order is
+    * nondeterministic across partitions, and the streaming model is
+    * oracle-checked (`stream_kmeans_parity`) — per the engine's
+    * determinism rule, cross-partition float sums must be exact. The
+    * batch is one aggregate of k rows, the same kernel as
+    * [[KMeansNative.fitExact]]; only k·d sums ever reach the driver. */
   def update(batch: DataFrame, vecCol: String): Unit = {
     if (batch.isEmpty) return
     val (cs, ws) = state.get()

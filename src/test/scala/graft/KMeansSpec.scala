@@ -13,6 +13,21 @@ class KMeansSpec extends SparkSpec {
     .select(col("vec_id"), VectorOps.toDouble(col("embedding")).as("v"))
     .cache()
   private lazy val init = KMeansNative.firstKCenters(pts, "vec_id", "v", 10)
+  private def bits(c: Array[Array[Double]]): Seq[Seq[Long]] =
+    c.map(_.map(java.lang.Double.doubleToRawLongBits).toSeq).toSeq
+  /** (cluster_id, dim, value bits, n) rows of an accumulate/average
+    * frame, value null-safe. */
+  private def rowBits(df: org.apache.spark.sql.DataFrame): Set[(Int, Int, Option[Long], Long)] =
+    df.collect().map { r =>
+      (r.getInt(0), r.getInt(1),
+        if (r.isNullAt(2)) None else Some(java.lang.Double.doubleToRawLongBits(r.getDouble(2))),
+        r.getLong(3))
+    }.toSet
+  private def withConf[T](kv: (String, String))(f: => T): T = {
+    val prev = spark.conf.getOption(kv._1)
+    spark.conf.set(kv._1, kv._2)
+    try f finally prev.fold(spark.conf.unset(kv._1))(spark.conf.set(kv._1, _))
+  }
   private lazy val fit = KMeansNative.fit(pts, "v", init, maxIter = 10, tol = 0.0)
   // Lloyd's on this data converges (assignment fixpoint) in ~11 rounds.
   private lazy val converged = KMeansNative.fit(pts, "v", init, maxIter = 40, tol = 1e-12)
@@ -97,13 +112,39 @@ class KMeansSpec extends SparkSpec {
   test("fitExact is bit-deterministic across partitionings and tracks fit") {
     val a = KMeansNative.fitExact(pts, "v", init, iters = 5)
     val b = KMeansNative.fitExact(pts.repartition(7), "v", init, iters = 5)
-    // the decimal bridge makes the trajectory partition-invariant to
-    // the BIT — this is what licenses the unrolled DuckDB oracle
-    assert(a.map(_.toSeq).toSeq === b.map(_.toSeq).toSeq)
+    // exact sums make the trajectory partition-invariant to the BIT —
+    // this is what licenses the unrolled DuckDB oracle
+    assert(bits(a) === bits(b))
     // the double-summing fast path agrees to float tolerance
     val fast = KMeansNative.fit(pts, "v", init, maxIter = 5, tol = 0.0)
     a.zip(fast.centers).foreach { case (ce, cf) =>
       ce.zip(cf).foreach { case (x, y) => assert(math.abs(x - y) < 1e-8) }
+    }
+    // ... and bit-equal to the exploded DECIMAL(38,12) round that
+    // defines it, as are accumulate and average, over both fixture
+    // scales, three k, 1/7/37 partitions, AQE off, and coordinates
+    // scaled past the exact conversion's fast path
+    val sf1 = new java.io.File(sf01).toPath.resolveSibling("sf0.1").toString
+    for (dir <- Seq(sf01, sf1); scale <- Seq(1.0, 1234.5678)) {
+      val base = Tables.embeddings(spark, dir).select(col("vec_id"),
+        transform(VectorOps.toDouble(col("embedding")), x => x * lit(scale)).as("v")).cache()
+      try for (k <- Seq(3, 10, 37)) {
+        val at = s"$dir scale=$scale k=$k"
+        val kInit = KMeansNative.firstKCenters(base, "vec_id", "v", k)
+        val ref = bits(LegacyLloyd.fitExact(base, "v", kInit, iters = 4))
+        val assignedRef = KMeansNative.assigned(base, col("v"), kInit)
+        val accRef = rowBits(LegacyLloyd.accumulate(assignedRef, col("v")))
+        val avgRef = rowBits(LegacyLloyd.average(assignedRef, col("v")))
+        def check(df: org.apache.spark.sql.DataFrame, how: String): Unit = {
+          assert(bits(KMeansNative.fitExact(df, "v", kInit, iters = 4)) === ref, s"fitExact $at $how")
+          val acc = KMeansNative.accumulate(KMeansNative.assigned(df, col("v"), kInit), col("v"))
+          assert(rowBits(acc) === accRef, s"accumulate $at $how")
+          assert(rowBits(KMeansNative.average(acc)) === avgRef, s"average $at $how")
+        }
+        check(base, "as read")
+        Seq(1, 7, 37).foreach(p => check(base.repartition(p), s"repartition($p)"))
+        withConf("spark.sql.adaptive.enabled" -> "false")(check(base.repartition(7), "AQE off"))
+      } finally base.unpersist()
     }
   }
 
