@@ -1,10 +1,12 @@
 package graft.cluster
 
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 
 import graft.functions.{ExactVectorSumAgg, VectorOps}
+import graft.plans.ArgminKernel
 
 /** Spark-native Lloyd's K-Means with explicit initial centers —
   * the reference program's semantics (Flink batch KMeans example:
@@ -16,12 +18,16 @@ import graft.functions.{ExactVectorSumAgg, VectorOps}
   *    centers ([[argminColumns]]): the min-distance centroid with the
   *    reference's lowest-id tie-break, inside whole-stage codegen — no
   *    UDF, no shuffle of points, embarrassingly parallel at any scale;
-  *  - the per-round aggregate is one typed vector-sum `Aggregator` per
-  *    cluster — the double [[graft.functions.VectorSumAgg]] in [[fit]],
-  *    the exact [[graft.functions.ExactVectorSumAgg]] in [[fitExact]],
-  *    [[accumulate]] and the streaming model — so only k×numPartitions
-  *    partial buffers shuffle (Catalyst's partial+final
-  *    ObjectHashAggregate = Flink's combiner);
+  *  - a fit ([[fit]], [[fitExact]]) reads its points once into
+  *    persisted per-partition arrays and runs each round as ONE
+  *    shuffle-free job over them: every task runs the same argmin
+  *    kernel per point and keeps k exact vector-sum buffers
+  *    ([[graft.functions.ExactVectorSumAgg]]), which the driver merges
+  *    (each task's k partials = Flink's combiner, the driver merge =
+  *    its reduce) — no plan is analysed or shuffled per round;
+  *  - [[accumulate]], [[average]] and the streaming model, which
+  *    return frames or run inside a stream, use the same aggregate as
+  *    the `exact_vec_sum` column function;
   *  - like MLlib, the k·d centers (a few KB) are the only data that
   *    ever crosses back to the driver, so the loop scales to 100 TB
   *    inputs unchanged.
@@ -112,128 +118,141 @@ object KMeansNative {
       wcssHistory: Seq[Double],
       iterations: Int)
 
-  /** Full Lloyd's loop, driver-held centers (MLlib's own structure:
-    * one Spark job per iteration, k·d doubles collected per round).
-    * Empty clusters keep their previous center (reference behavior: a
-    * centroid nobody selects receives no update).
-    *
-    * Determinism note: per-cluster sums use double partial aggregation,
-    * so center coordinates are stable only up to partial-merge order
-    * (low-ULP variation across runs) — which is why the declared fit is
-    * [[fitExact]], whose sums (like [[accumulate]]'s) are exact and
-    * hash-checked. */
+  /** Lloyd's loop ([[lloyd]]) until no center moves more than `tol`
+    * (Euclidean; NaN counts as moved) or `maxIter` rounds have run;
+    * `wcssHistory` holds each round's within-cluster sum of squares
+    * under the centers it assigned to. Empty clusters keep their
+    * previous center (reference behavior: a centroid nobody selects
+    * receives no update); null vectors join no cluster; a cluster
+    * component with only null coordinates raises a named
+    * `IllegalStateException`. The centers are [[fitExact]]'s (bit for
+    * bit with a negative `tol`), so no partitioning changes them; the
+    * WCSS history is a double sum, stable only up to summation order. */
   def fit(
       points: DataFrame,
       vecCol: String,
       init: Array[Array[Double]],
       maxIter: Int = 10,
-      tol: Double = 1e-6): FitResult = {
+      tol: Double = 1e-6): FitResult =
+    lloyd("fit", points, vecCol, init, maxIter, tol)
+
+  /** Lloyd's loop ([[lloyd]]) for exactly `iters` rounds. Each round's
+    * sums are exact ([[graft.functions.ExactVectorSumAgg]]: component i
+    * equals `CAST(SUM(CAST(x[i] AS DECIMAL(38,12))) AS DOUBLE)` in any
+    * summation order) and each coordinate is one correctly-rounded
+    * division, so the center TRAJECTORY is bit-deterministic across
+    * runs, partitionings and engines: the declared `kmeans_fit_native`
+    * query is compared cell-exactly against a fixed-depth UNROLLED
+    * DuckDB oracle (one assign→accumulate→average CTE stage per round).
+    * No early stop, not even on a NaN center: a data-dependent depth
+    * would break the oracle. Edge cases as in [[fit]]. */
+  def fitExact(points: DataFrame, vecCol: String, init: Array[Array[Double]],
+               iters: Int): Array[Array[Double]] =
+    lloyd("fitExact", points, vecCol, init, iters, Double.NegativeInfinity).centers
+
+  /** Vector components one round pushes through one task. A round
+    * task runs the argmin and the exact sum at ~10 M values/s, so 64 k
+    * values ≈ 6 ms of task compute — on the order of one task's
+    * dispatch. Re-measured on ScaleUp's `kmeans_fit_native` row (10×:
+    * 20 k 64-dim vectors, 4 cores, 4 interleaved runs each) once
+    * rounds stopped planning: median 1.15 s at 16384, 1.17 s at this
+    * value, 1.35 s at 262144 (2.77 s with per-round plans), so it
+    * holds. */
+  private val RoundValuesPerTask = 65536L
+
+  /** One task's share of a round: per cluster, the point count, the
+    * sqdist sum and the exact vector-sum buffer. */
+  private final case class Partial(n: Array[Long], w: Array[Double], s: Array[Array[Long]])
+  private object Partial {
+    def empty(k: Int): Partial =
+      Partial(new Array[Long](k), new Array[Double](k), Array.fill(k)(Array.emptyLongArray))
+  }
+
+  /** The Lloyd loop behind [[fit]] and [[fitExact]], MLlib's RDD shape
+    * with graft's kernels:
+    *  - the points are read ONCE through the plan's `toRdd` into one
+    *    array of vectors per partition (null for a null vector),
+    *    persisted and coalesced to ~[[RoundValuesPerTask]] components
+    *    per task (inputs big enough to use the cluster stay as they are);
+    *  - each round is ONE `mapPartitions…collect` job: one stage, no
+    *    shuffle, no plan to analyse. Each vector goes through
+    *    [[graft.plans.ArgminKernel]] (the `vec_argmin` kernel, so the
+    *    plan's assignments and distances to the bit) into its cluster's
+    *    [[graft.functions.ExactVectorSumAgg]] buffer; the driver merges
+    *    the k-cluster partials with the aggregate's own `merge`/`finish`
+    *    and divides by n.
+    * A round's job is described as `KMeansNative.<name> round
+    * i/maxIter`; the caller's job description is restored on exit. */
+  private def lloyd(name: String, points: DataFrame, vecCol: String,
+                    init: Array[Array[Double]], maxIter: Int, tol: Double): FitResult = {
+    val sc = points.sparkSession.sparkContext
+    val callerDescription = sc.getLocalProperty("spark.job.description")
     val k = init.length
-    val pts = points
-      .select(VectorOps.toDouble(col(vecCol)).as("v"))
+    val dim = init(0).length
+    val parts = points.select(VectorOps.toDouble(col(vecCol))).queryExecution.toRdd
+      .mapPartitions(rows => Iterator.single(
+        rows.map(r => if (r.isNullAt(0)) null else r.getArray(0).copy()).toArray))
+      .setName(s"KMeansNative.$name points")
       .persist(StorageLevel.MEMORY_AND_DISK)
     try {
-      val dim = init(0).length
-      val work = roundSized(pts, dim)
+      sc.setJobDescription(s"KMeansNative.$name points")
+      val n = parts.map(_.length.toLong).collect().sum
+      val ideal = math.max(1L, n * dim / RoundValuesPerTask)
+      val work = if (ideal < parts.getNumPartitions) parts.coalesce(ideal.toInt) else parts
+      val agg = new ExactVectorSumAgg
       var centers = init.map(_.clone())
       val history = scala.collection.mutable.ArrayBuffer.empty[Double]
       var iter = 0
-      var moved = Double.MaxValue
-      while (iter < maxIter && moved > tol) {
-        val a = assigned(work, col("v"), centers)
-        // Single job per iteration: k rows of (cid, n, wcss, sum-vec)
-        // via the typed vector-sum Aggregator — partial+final
-        // ObjectHashAggregate, shuffle = k × numPartitions buffers.
-        val rows = a
-          .groupBy("cluster_id")
-          .agg(count(lit(1)).as("n"), sum("sqdist").as("w"),
-            graft.functions.VectorSumAgg.vec_sum(dim)(col("v")).as("s"))
+      var moved = Double.PositiveInfinity
+      while (iter < maxIter && !(moved <= tol)) {
+        sc.setJobDescription(s"KMeansNative.$name round ${iter + 1}/$maxIter")
+        val flat = centers.flatten
+        val total = work.mapPartitions(arrays => Iterator.single(roundPartial(arrays, flat, k, dim)))
           .collect()
-        history += rows.map(_.getDouble(2)).sum
+          .foldLeft(Partial.empty(k)) { (a, b) =>
+            for (c <- 0 until k) {
+              a.n(c) += b.n(c); a.w(c) += b.w(c); a.s(c) = agg.merge(a.s(c), b.s(c))
+            }
+            a
+          }
+        history += total.w.sum
         val next = centers.map(_.clone())
-        rows.foreach { r =>
-          val n = r.getLong(1).toDouble
-          next(r.getInt(0)) = r.getSeq[Double](3).map(_ / n).toArray
+        for (c <- 0 until k if total.n(c) > 0) {
+          val count = total.n(c).toDouble
+          next(c) = agg.finish(total.s(c)).zipWithIndex.map { case (s, d) =>
+            if (s == null) throw new IllegalStateException(
+              s"$name: cluster $c has only null coordinates in component $d")
+            s / count
+          }.toArray
         }
         moved = centers.zip(next).map { case (o, nw) =>
           math.sqrt(o.zip(nw).map { case (a0, b0) => (a0 - b0) * (a0 - b0) }.sum)
-        }.max
+        }.foldLeft(0.0)(math.max)
         centers = next
         iter += 1
       }
       FitResult(centers, history.toSeq, iter)
-    } finally pts.unpersist()
+    } finally {
+      sc.setJobDescription(callerDescription)
+      parts.unpersist()
+    }
   }
 
-  /** Lloyd's loop with EXACT per-round arithmetic: each round is one
-    * job of k rows — per cluster, the point count and the exact vector
-    * sum of [[graft.functions.ExactVectorSumAgg]], whose components
-    * equal `CAST(SUM(CAST(x AS DECIMAL(38,12))) AS DOUBLE)` bit for bit
-    * in any summation order — and the center update is one
-    * correctly-rounded double division per coordinate on the driver.
-    * So the whole center TRAJECTORY is bit-deterministic across runs,
-    * partitionings and engines. That makes the full iterative fit
-    * hash-checkable: the declared `kmeans_fit_native` query is
-    * compared against a fixed-depth UNROLLED DuckDB oracle (one
-    * assign→accumulate→average CTE stage per round) cell-exactly.
-    * Runs exactly `iters` rounds — an extra round from a fixpoint is
-    * the identity, so early stopping is unnecessary for parity and
-    * would make the oracle depth data-dependent. Empty clusters keep
-    * their previous center (reference semantics); unassignable points
-    * (null vectors) join no cluster. Only k·d doubles ever cross to the
-    * driver, so the loop scales to 100 TB inputs unchanged ([[fit]]
-    * sums in double instead, stable run to run only up to ULPs, which
-    * is why it is not the declared query). */
-  def fitExact(points: DataFrame, vecCol: String, init: Array[Array[Double]],
-               iters: Int): Array[Array[Double]] = {
-    val pts = points.select(VectorOps.toDouble(col(vecCol)).as("v"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    try {
-      val work = roundSized(pts, init(0).length)
-      var centers = init.map(_.clone())
-      var it = 0
-      while (it < iters) {
-        val rows = clusterSums(assigned(work, col("v"), centers), col("v")).collect()
-        val next = centers.map(_.clone())
-        rows.foreach { r =>
-          val cid = r.getInt(0)
-          val n = r.getLong(1).toDouble
-          next(cid) = r.getSeq[java.lang.Double](2).zipWithIndex.map { case (s, d) =>
-            if (s == null) throw new IllegalStateException(
-              s"fitExact: cluster $cid has only null coordinates in component $d")
-            s / n
-          }.toArray
-        }
-        centers = next
-        it += 1
+  /** One task of a round: assign each vector, accumulate its cluster. */
+  private def roundPartial(arrays: Iterator[Array[ArrayData]], flat: Array[Double],
+                           k: Int, dim: Int): Partial = {
+    val agg = new ExactVectorSumAgg
+    val p = Partial.empty(k)
+    arrays.foreach(_.foreach { v =>
+      val best = if (v == null) null else ArgminKernel.compute(v, flat, k, dim)
+      if (best != null) {
+        val c = best.getInt(0)
+        p.n(c) += 1
+        p.w(c) += best.getDouble(1)
+        p.s(c) = agg.reduceArray(p.s(c), v)
       }
-      centers
-    } finally pts.unpersist()
-  }
-
-  /** Vector components one round's aggregate pushes through one task.
-    * The exact vector-sum aggregate takes ~10 M values/s per task
-    * (1.28 M values in one task: 0.12 s/round; [[fit]]'s double sum:
-    * 0.15 s), so 64 k values ≈ 6 ms of task compute — on the order of
-    * one task's dispatch. A 4× larger target (one wave of tasks on 4
-    * cores at 10×) measured no faster on ScaleUp's `kmeans_fit_native`
-    * row (2.72 vs 2.53 s, 3 interleaved pairs), and a 64× larger one
-    * single-tasked the 10× fit, so this value holds both scales. */
-  private val RoundValuesPerTask = 65536L
-
-  /** Right-size an (already persisted) per-round frame: an iterative
-    * fit pays per-TASK scheduling cost every round, so a small input
-    * spread over many cache partitions is pure overhead ×iters
-    * (measured: 2 k vectors × 32 partitions = 0.4 s/round of which
-    * ~0.25 s was task dispatch). Coalesce — narrow, cache-reading —
-    * to ~[[RoundValuesPerTask]] vector components per task; inputs big
-    * enough to use the cluster are left untouched (ideal ≥ current
-    * partitions), so at 100 TB this is the identity. Triggers one
-    * count() job on the cached frame — amortized over iters rounds. */
-  private def roundSized(pts: DataFrame, dim: Int): DataFrame = {
-    val cur = pts.rdd.getNumPartitions
-    val ideal = math.max(1L, pts.count() * dim / RoundValuesPerTask)
-    if (ideal < cur) pts.coalesce(ideal.toInt) else pts
+    })
+    p
   }
 
   /** Total within-cluster sum of squares for fixed centers

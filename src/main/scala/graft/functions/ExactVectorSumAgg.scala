@@ -6,6 +6,7 @@ import scala.collection.immutable.ArraySeq
 
 import org.apache.spark.sql.{Column, Encoder, GraftShims}
 import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
+import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.expressions.Aggregator
 import org.apache.spark.sql.functions.udaf
 import org.apache.spark.sql.types.Decimal
@@ -33,6 +34,12 @@ import org.apache.spark.sql.types.Decimal
   * DECIMAL(38,12) raises the cast's error, a running or merged sum
   * outside it raises the sum's. All vectors of one group must have the
   * same length (the buffer is sized by the first).
+  *
+  * Two entry points share the per-element conversion and add: the
+  * typed [[reduce]] behind the `exact_vec_sum` column, and
+  * [[reduceArray]] over Catalyst's internal arrays, which
+  * `KMeansNative`'s Lloyd loop feeds before merging task buffers with
+  * [[merge]] and [[finish]] on the driver.
   */
 class ExactVectorSumAgg
     extends Aggregator[Array[java.lang.Double], Array[Long], Seq[java.lang.Double]] {
@@ -46,25 +53,26 @@ class ExactVectorSumAgg
   override def reduce(buf0: Array[Long], row: Array[java.lang.Double]): Array[Long] = {
     if (row == null) return buf0
     val dim = row.length
-    val buf = if (buf0.length == 0) newBuffer(dim) else buf0
-    require(buf.length == bufferLength(dim), s"vector of length $dim in a group of another length")
+    val buf = sized(buf0, dim)
     var i = 0
     while (i < dim) {
       val b = row(i)
-      if (b != null) {
-        val x = b.doubleValue
-        val u = fastUnscaled(x)
-        if (u != NoFast) {
-          add(buf, i, u >> 63, u)
-          markSeen(buf, dim, i)
-        } else {
-          val big = slowUnscaled(x)
-          if (big != null) {
-            add(buf, i, big.shiftRight(64).longValue, big.longValue)
-            markSeen(buf, dim, i)
-          }
-        }
-      }
+      if (b != null) addValue(buf, dim, i, b.doubleValue)
+      i += 1
+    }
+    buf
+  }
+
+  /** [[reduce]] over Catalyst's internal form of an `array<double>`
+    * value (a null `row` is a null vector), for loops that read rows
+    * straight from a plan's `toRdd`. */
+  def reduceArray(buf0: Array[Long], row: ArrayData): Array[Long] = {
+    if (row == null) return buf0
+    val dim = row.numElements()
+    val buf = sized(buf0, dim)
+    var i = 0
+    while (i < dim) {
+      if (!row.isNullAt(i)) addValue(buf, dim, i, row.getDouble(i))
       i += 1
     }
     buf
@@ -159,7 +167,12 @@ object ExactVectorSumAgg {
     else GraftShims.decimalCast(Decimal(x), Precision, Scale).toJavaBigDecimal.unscaledValue
 
   private def bufferLength(dim: Int): Int = 2 * dim + (dim + 63) / 64
-  private def newBuffer(dim: Int): Array[Long] = new Array[Long](bufferLength(dim))
+  /** `buf`, or a fresh buffer for the first vector of a group. */
+  private def sized(buf: Array[Long], dim: Int): Array[Long] = {
+    val b = if (buf.length == 0) new Array[Long](bufferLength(dim)) else buf
+    require(b.length == bufferLength(dim), s"vector of length $dim in a group of another length")
+    b
+  }
   /** d from a buffer length 2d + ceil(d/64): 64·length lies in
     * [129d, 129d + 63]. */
   private def dimOf(buf: Array[Long]): Int = buf.length * 64 / 129
@@ -167,6 +180,22 @@ object ExactVectorSumAgg {
     buf(2 * dim + (i >>> 6)) |= 1L << i
   private def seen(buf: Array[Long], dim: Int, i: Int): Boolean =
     (buf(2 * dim + (i >>> 6)) & (1L << i)) != 0
+
+  /** Component i of a dim-d buffer += x converted as the cast does;
+    * NaN/±Infinity (null after the cast) are skipped. */
+  private def addValue(buf: Array[Long], dim: Int, i: Int, x: Double): Unit = {
+    val u = fastUnscaled(x)
+    if (u != NoFast) {
+      add(buf, i, u >> 63, u)
+      markSeen(buf, dim, i)
+    } else {
+      val big = slowUnscaled(x)
+      if (big != null) {
+        add(buf, i, big.shiftRight(64).longValue, big.longValue)
+        markSeen(buf, dim, i)
+      }
+    }
+  }
 
   /** buf[i] += (bh, bl), both in range, raising if the sum leaves it. */
   private def add(buf: Array[Long], i: Int, bh: Long, bl: Long): Unit = {

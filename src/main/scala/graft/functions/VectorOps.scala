@@ -8,10 +8,11 @@ import org.apache.spark.sql.functions._
   * `transform`) — no UDFs, so everything stays inside whole-stage
   * codegen and scales linearly with no serialization cost.
   *
-  * Reference semantics: the Flink KMeans example's `Point` arithmetic
-  * (`Point.add`, `Point.div`, `Point.euclideanDistance` — see
-  * SURVEY.md §2.1 rows 15–16 [R]) generalized from fixed (x, y) arity
-  * to n-dim arrays.
+  * Reference semantics: the Flink KMeans example's `Point` distance
+  * (`Point.euclideanDistance` — see SURVEY.md §2.1 rows 15–16 [R])
+  * generalized from fixed (x, y) arity to n-dim arrays; its centroid
+  * arithmetic (`Point.add`, `Point.div`) is the exact Lloyd round of
+  * [[graft.cluster.KMeansNative]].
   *
   * Determinism note: every kernel folds left-to-right over the array,
   * so the floating-point summation order is fixed per row and matches a
@@ -44,18 +45,6 @@ object VectorOps {
 
   /** Cosine similarity; NaN-safe only insofar as inputs are non-zero. */
   def cosine(a: Column, b: Column): Column = dot(a, b) / (norm2(a) * norm2(b))
-
-  /** Component-wise vector add (reference `Point.add`). */
-  def vecAdd(a: Column, b: Column): Column = zip_with(a, b, _ + _)
-
-  /** Scalar divide (reference `Point.div`). */
-  def vecDiv(a: Column, n: Column): Column = transform(a, _ / n)
-
-  /** Scalar multiply. */
-  def vecScale(a: Column, s: Column): Column = transform(a, _ * s)
-
-  /** Zero vector of dimension d (reference `Point.clear`). */
-  def vecZero(d: Int): Column = array_repeat(lit(0.0d), d)
 
   // ---- driver/executor-side primitive kernels -----------------------
   // The ONLY implementations of these folds: their left-to-right

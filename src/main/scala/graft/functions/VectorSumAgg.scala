@@ -9,7 +9,9 @@ import org.apache.spark.sql.functions.udaf
   * §2.2 "UDF/UDAF/UDTF"). Catalyst plans it as partial + final
   * ObjectHashAggregate, so only k×numPartitions buffers shuffle: the
   * same combiner shape as the reference's grouped reduce, without
-  * exploding rows ×dim like the posexplode formulation.
+  * exploding rows ×dim like the posexplode formulation. No Lloyd loop
+  * uses it (the fits sum exactly, see [[ExactVectorSumAgg]]); it is the
+  * double-summing member of the function surface.
   */
 class VectorSumAgg(dim: Int) extends Aggregator[Seq[Double], Array[Double], Seq[Double]] {
   override def zero: Array[Double] = new Array[Double](dim)

@@ -38,8 +38,10 @@ final class StreamingKMeansModel(init: Array[Array[Double]], decay: Double) {
     * nondeterministic across partitions, and the streaming model is
     * oracle-checked (`stream_kmeans_parity`) — per the engine's
     * determinism rule, cross-partition float sums must be exact. The
-    * batch is one aggregate of k rows, the same kernel as
-    * [[KMeansNative.fitExact]]; only k·d sums ever reach the driver. */
+    * batch is one aggregate of k rows over the exact vector sum
+    * [[KMeansNative.fitExact]] also runs
+    * ([[graft.functions.ExactVectorSumAgg]]); only k·d sums ever reach
+    * the driver. */
   def update(batch: DataFrame, vecCol: String): Unit = {
     if (batch.isEmpty) return
     val (cs, ws) = state.get()

@@ -2,7 +2,6 @@ package graft
 
 import java.math.{BigDecimal => JBigDecimal, BigInteger}
 
-import org.apache.spark.SparkThrowable
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -89,13 +88,6 @@ class ExactVectorSumSpec extends SparkSpec {
   }
 
   /** The Spark error condition `f` raises, wherever it sits in the cause chain. */
-  private def conditionOf(f: => Any): String = {
-    val e = intercept[Throwable](f)
-    Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
-      .collectFirst { case t: SparkThrowable if t.getCondition != null => t.getCondition }
-      .getOrElse(fail(s"no Spark error condition in $e", e))
-  }
-
   test("coordinates past DECIMAL(38,12) raise as the ANSI cast does") {
     for (x <- Seq(1e26, -1e26, 1e30, Double.MaxValue)) {
       val want = conditionOf(catalystUnscaled(Seq(x)))
@@ -177,13 +169,18 @@ class ExactVectorSumSpec extends SparkSpec {
     val fine = Seq(v(1.0, nul, 2.0), v(3.0, 5.0, Double.NaN), null,
       v(9.0, 11.0, 10.0), v(11.0, 12.0, Double.PositiveInfinity)).toDF("v")
     lloydParity(fine)
-    assert(KMeansNative.fitExact(fine, "v", centers, 3).map(_.toSeq).toSeq ===
-      LegacyLloyd.fitExact(fine, "v", centers, 3).map(_.toSeq).toSeq)
+    val exact = KMeansNative.fitExact(fine, "v", centers, 3).map(_.toSeq).toSeq
+    assert(exact === LegacyLloyd.fitExact(fine, "v", centers, 3).map(_.toSeq).toSeq)
+    // fit runs the same round, so it skips the null vector too
+    assert(KMeansNative.fit(fine, "v", centers, 3, tol = -1.0).centers.map(_.toSeq).toSeq === exact)
     // ... and an all-null component fails the round, as reading the
     // null average it stands for did (now with a named error)
     assert(conditionOf(LegacyLloyd.fitExact(pts, "v", centers, 1)) === "ROW_VALUE_IS_NULL")
-    val e = intercept[IllegalStateException](KMeansNative.fitExact(pts, "v", centers, 1))
-    assert(e.getMessage.contains("cluster 0") && e.getMessage.contains("component 1"))
+    for (run <- Seq(() => KMeansNative.fitExact(pts, "v", centers, 1),
+                    () => KMeansNative.fit(pts, "v", centers, 1))) {
+      val e = intercept[IllegalStateException](run())
+      assert(e.getMessage.contains("cluster 0") && e.getMessage.contains("component 1"))
+    }
   }
 
   test("sums past DECIMAL(38,12) raise as the ANSI sum does") {

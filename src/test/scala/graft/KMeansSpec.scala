@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerTaskEnd}
 import org.apache.spark.sql.functions._
 
 import graft.cluster.{KMeansMl, KMeansNative}
@@ -115,13 +116,33 @@ class KMeansSpec extends SparkSpec {
     // exact sums make the trajectory partition-invariant to the BIT —
     // this is what licenses the unrolled DuckDB oracle
     assert(bits(a) === bits(b))
-    // the double-summing fast path agrees to float tolerance
-    val fast = KMeansNative.fit(pts, "v", init, maxIter = 5, tol = 0.0)
-    a.zip(fast.centers).foreach { case (ce, cf) =>
-      ce.zip(cf).foreach { case (x, y) => assert(math.abs(x - y) < 1e-8) }
+    // fit runs the same exact round: with a negative tol it is fitExact
+    // to the bit, and its tolerance stop lands on the same centers and
+    // round count however the points are partitioned
+    assert(bits(KMeansNative.fit(pts, "v", init, maxIter = 5, tol = -1.0).centers) === bits(a))
+    val stopped = Seq(1, 7, 37).map { p =>
+      val r = KMeansNative.fit(pts.repartition(p), "v", init, maxIter = 40, tol = 1e-3)
+      (bits(r.centers), r.iterations)
+    }
+    assert(stopped.distinct.size === 1, "fit differs across repartition(1/7/37)")
+    assert(stopped.head._2 < 40)
+    // a NaN center (no point picks it) moves by NaN every round, which
+    // must not read as convergence: all rounds run
+    val nanInit = init.updated(1, Array.fill(init(1).length)(Double.NaN))
+    assert(bits(KMeansNative.fitExact(pts, "v", nanInit, iters = 4)) ===
+      bits(LegacyLloyd.fitExact(pts, "v", nanInit, iters = 4)))
+    assert(KMeansNative.fit(pts, "v", nanInit, maxIter = 4, tol = 0.0).iterations === 4)
+    // coordinates, and sums, past DECIMAL(38,12) fail as the decimal
+    // round does
+    import spark.implicits._
+    for (xs <- Seq(Seq(1e26, 1.0), Seq(6e25, 6e25))) {
+      val big = xs.map(x => Array(x, 0.0)).toDF("v")
+      val c2 = Array(Array(0.0, 0.0))
+      assert(conditionOf(KMeansNative.fitExact(big, "v", c2, 1)) ===
+        conditionOf(LegacyLloyd.fitExact(big, "v", c2, 1)), s"coordinates $xs")
     }
     // ... and bit-equal to the exploded DECIMAL(38,12) round that
-    // defines it, as are accumulate and average, over both fixture
+    // defines it, as are fit, accumulate and average, over both fixture
     // scales, three k, 1/7/37 partitions, AQE off, and coordinates
     // scaled past the exact conversion's fast path
     val sf1 = new java.io.File(sf01).toPath.resolveSibling("sf0.1").toString
@@ -137,6 +158,8 @@ class KMeansSpec extends SparkSpec {
         val avgRef = rowBits(LegacyLloyd.average(assignedRef, col("v")))
         def check(df: org.apache.spark.sql.DataFrame, how: String): Unit = {
           assert(bits(KMeansNative.fitExact(df, "v", kInit, iters = 4)) === ref, s"fitExact $at $how")
+          assert(bits(KMeansNative.fit(df, "v", kInit, maxIter = 4, tol = -1.0).centers) === ref,
+            s"fit $at $how")
           val acc = KMeansNative.accumulate(KMeansNative.assigned(df, col("v"), kInit), col("v"))
           assert(rowBits(acc) === accRef, s"accumulate $at $how")
           assert(rowBits(KMeansNative.average(acc)) === avgRef, s"average $at $how")
@@ -146,6 +169,41 @@ class KMeansSpec extends SparkSpec {
         withConf("spark.sql.adaptive.enabled" -> "false")(check(base.repartition(7), "AQE off"))
       } finally base.unpersist()
     }
+  }
+
+  test("a fitExact round is one shuffle-free job, described by its round") {
+    val points = Tables.embeddings(spark, sf01)
+    val kInit = KMeansNative.firstKCenters(points, "vec_id", "embedding", 10)
+    val group = "kmeans-round-shape"
+    val descriptions = new java.util.concurrent.ConcurrentLinkedQueue[String]
+    val stages = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
+    val shuffleBytes = new java.util.concurrent.atomic.LongAdder
+    val listener = new SparkListener {
+      override def onJobStart(j: SparkListenerJobStart): Unit =
+        if (j.properties != null && j.properties.getProperty("spark.jobGroup.id") == group) {
+          descriptions.add(String.valueOf(j.properties.getProperty("spark.job.description")))
+          j.stageIds.foreach(stages.add)
+        }
+      override def onTaskEnd(t: SparkListenerTaskEnd): Unit =
+        if (t.taskMetrics != null && stages.contains(t.stageId))
+          shuffleBytes.add(t.taskMetrics.shuffleWriteMetrics.bytesWritten)
+    }
+    val sc = spark.sparkContext
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup(group, "caller's description")
+      KMeansNative.fitExact(points, "embedding", kInit, iters = 5)
+      assert(sc.getLocalProperty("spark.job.description") === "caller's description")
+      org.apache.spark.GraftSparkShims.drainListenerBus(sc)
+    } finally {
+      sc.clearJobGroup()
+      sc.removeSparkListener(listener)
+    }
+    val jobs = descriptions.toArray.toSeq.map(_.toString)
+    assert(jobs.size <= 5 + 2, s"jobs: $jobs")
+    assert(shuffleBytes.sum() === 0L)
+    assert(jobs.filter(_.contains(" round ")) ===
+      (1 to 5).map(i => s"KMeansNative.fitExact round $i/5"))
   }
 
   test("declared kmeans queries return deterministic, non-empty output") {

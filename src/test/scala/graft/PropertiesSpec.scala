@@ -33,10 +33,10 @@ class PropertiesSpec extends SparkSpec {
   test("law: vecAdd is commutative; vecDiv inverts vecScale") {
     val df = sample(vecPair, 100).toDF("a", "b")
     val bad = df.filter(
-      VectorOps.vecAdd(col("a"), col("b")) =!= VectorOps.vecAdd(col("b"), col("a")))
+      PointOps.vecAdd(col("a"), col("b")) =!= PointOps.vecAdd(col("b"), col("a")))
     assert(bad.count() === 0)
     val bad2 = df.select(col("a"),
-        VectorOps.vecDiv(VectorOps.vecScale(col("a"), lit(3.0)), lit(3.0)).as("r"))
+        PointOps.vecDiv(PointOps.vecScale(col("a"), lit(3.0)), lit(3.0)).as("r"))
       .select(explode(zip_with(col("a"), col("r"), (x, y) => abs(x - y))).as("d"))
       .filter(col("d") > 1e-9)
     assert(bad2.count() === 0)

@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.SparkThrowable
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -8,6 +9,15 @@ trait SparkSpec extends AnyFunSuite {
   lazy val spark: SparkSession = SparkSpec.session
   val sf001 = "/root/testdata/sf0.001"
   val sf01 = "/root/testdata/sf0.01"
+
+  /** The Spark error condition `f` raises, looked up along its causes
+    * (a task's error reaches the driver wrapped). */
+  def conditionOf(f: => Any): String = {
+    val e = intercept[Throwable](f)
+    Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .collectFirst { case t: SparkThrowable if t.getCondition != null => t.getCondition }
+      .getOrElse(fail(s"no Spark error condition in $e", e))
+  }
 }
 
 object SparkSpec {

@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 import graft.functions.VectorOps._
+import graft.PointOps._
 
 class VectorOpsSpec extends SparkSpec {
   import spark.implicits._
