@@ -64,12 +64,6 @@ object TextOps {
   def hamming64(a: Column, b: Column): Column =
     bit_count(a.bitwiseXOR(b))
 
-  /** 16-bit band j (0..3) of a 64-bit fingerprint, for banded LSH
-    * candidate generation (hamming ≤ 3 ⇒ at least one of 4 bands
-    * matches exactly, by pigeonhole). */
-  def simhashBand(sh: Column, band: Int): Column =
-    call_function("shiftright", sh, lit(band * 16)).bitwiseAND(lit(0xFFFFL))
-
   /** Polynomial rolling-hash fingerprint of the whole text:
     * fold h = (h*31 + codepoint) mod (1e9+7) over the characters.
     * The modulus keeps every intermediate < 2^36, so the fold is safe

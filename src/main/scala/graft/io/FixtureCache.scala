@@ -1,61 +1,87 @@
 package graft.io
 
-/** Process-wide memo for values derived from a fixture table file,
-  * keyed by the file's (path, mtime, size) — so regenerating the data
-  * under the same path invalidates the entry instead of silently
-  * serving stale results (a plain path-keyed cache would). Entries are
-  * small derived artifacts (k·d init centers, an index handle, a temp
-  * dir path), never table-sized data. */
-object FixtureCache {
-  private val cache =
-    scala.collection.concurrent.TrieMap.empty[(String, String, Long, Long), Any]
+import org.apache.spark.scheduler.{SparkListener, SparkListenerApplicationEnd}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
-  def memo[T](tag: String, sfDir: String, table: String)(compute: => T): T = {
+/** The one process-wide memo for values derived from a fixture table
+  * file: it alone decides how such a value is keyed, which session it
+  * belongs to, how it is materialized and when it is evicted. An entry
+  * is keyed by its tag plus the file's (absolute path, mtime, size), so
+  * regenerating the data under the same path recomputes instead of
+  * silently serving a stale value (a plain path-keyed cache would).
+  *
+  * One lifetime rule, by entry point:
+  *  - [[memo]] holds driver-only values that reference no session
+  *    (k·d centers, collected rows, temp-dir paths, covariance cells);
+  *    they live as long as the process.
+  *  - [[session]] holds values that reference a session (index
+  *    handles, persisted frames, catalog tables). The session object is
+  *    part of the key, so another session computes its own entry, and
+  *    the session's entries are dropped when its context stops: an
+  *    entry must not outlive its session, or stopped-session frames
+  *    would accumulate and pin their sessions against GC.
+  *  - [[frame]] is [[session]] for a DataFrame: persisted at the
+  *    default level and materialized by one `count()` before any
+  *    consumer sees it, so every consumer reads the cached rows. A
+  *    frame holds derived rows (pair lists, fingerprints, refined edge
+  *    lists), never a copy of a fixture table.
+  *
+  * Memos nest (a compute may consult other entries, e.g. winnow pairs
+  * build on the winnow fingerprint frame), which is why this is a
+  * TrieMap with `getOrElseUpdate`: `ConcurrentHashMap.computeIfAbsent`
+  * throws on a recursive update. */
+object FixtureCache {
+  private final case class Key(tag: String, path: String, mtime: Long, size: Long,
+                               owner: Option[SparkSession])
+
+  private val cache = scala.collection.concurrent.TrieMap.empty[Key, Any]
+  /** Sessions whose context already carries an eviction listener. */
+  private val watched = scala.collection.concurrent.TrieMap.empty[SparkSession, Unit]
+
+  private def key(tag: String, sfDir: String, table: String,
+                  owner: Option[SparkSession]): Key = {
     val f = new java.io.File(Tables.path(sfDir, table))
-    val key = (tag, f.getAbsolutePath, f.lastModified, f.length)
-    cache.getOrElseUpdate(key, compute).asInstanceOf[T]
+    Key(tag, f.getAbsolutePath, f.lastModified, f.length, owner)
   }
 
-  /** Stable unique key for a session, for memo tags that cache
-    * session-bound values (persisted DataFrames bind to the session
-    * that built them): one minted UUID per live session, weakly held.
-    * Unlike `System.identityHashCode`, a UUID is never reused — an
-    * identity hash can collide with a fresh session after the old one
-    * is GC'd, serving a cached frame bound to a stopped session
-    * (r9 ADVICE). (Spark's own `sessionUUID` is `private[sql]`.)
-    *
-    * EVICTION (r13 ADVICE): a session-bound memo value strongly
-    * references its SparkSession, so the entry must not outlive the
-    * session — otherwise stopped-session frames accumulate for the
-    * process lifetime (and pin their sessions against GC). Callers
-    * embed this key IN the memo tag (the `dedup_sem_pairs` /
-    * `ann_margin_*_pairs` convention); the first mint for a session
-    * registers a listener on its SparkContext that drops every entry
-    * whose tag embeds the key when the context stops (the frames
-    * themselves die with the context — only the map references need
-    * releasing). */
-  def sessionKey(s: org.apache.spark.sql.SparkSession): String =
-    sessionKeys.synchronized {
-      var k = sessionKeys.get(s)
-      if (k == null) {
-        k = java.util.UUID.randomUUID.toString
-        sessionKeys.put(s, k)
-        val minted = k
-        s.sparkContext.addSparkListener(
-          new org.apache.spark.scheduler.SparkListener {
-            override def onApplicationEnd(
-                e: org.apache.spark.scheduler.SparkListenerApplicationEnd): Unit =
-              evictSession(minted)
-          })
-      }
-      k
+  /** A driver-only value computed once per (tag, fixture file). */
+  def memo[T](tag: String, sfDir: String, table: String)(compute: => T): T =
+    cache.getOrElseUpdate(key(tag, sfDir, table, None), compute).asInstanceOf[T]
+
+  /** A value bound to `s`, computed once per (tag, fixture file,
+    * session) and dropped when `s`'s context stops. The jobs that
+    * build it are described `FixtureCache <tag>`; the caller's job
+    * description is restored afterwards. */
+  def session[T](s: SparkSession, tag: String, sfDir: String, table: String)
+                (compute: => T): T = {
+    if (watched.putIfAbsent(s, ()).isEmpty)
+      s.sparkContext.addSparkListener(new SparkListener {
+        override def onApplicationEnd(e: SparkListenerApplicationEnd): Unit = evict(s)
+      })
+    cache.getOrElseUpdate(key(tag, sfDir, table, Some(s)), {
+      val sc = s.sparkContext
+      val callerDescription = sc.getLocalProperty("spark.job.description")
+      sc.setJobDescription(s"FixtureCache $tag")
+      try compute finally sc.setJobDescription(callerDescription)
+    }).asInstanceOf[T]
+  }
+
+  /** [[session]] for a DataFrame: `build` persisted at the default
+    * level and counted once, so the entry is materialized when it is
+    * first returned. */
+  def frame(s: SparkSession, tag: String, sfDir: String, table: String)
+           (build: => DataFrame): DataFrame =
+    session(s, tag, sfDir, table) {
+      val df = build.persist()
+      df.count()
+      df
     }
 
-  /** Drop every memo entry whose tag embeds `key` (minted by
-    * [[sessionKey]]). Idempotent; also callable directly by tests. */
-  def evictSession(key: String): Unit =
-    cache.keys.foreach { k => if (k._1.contains(key)) cache.remove(k) }
-
-  private val sessionKeys =
-    new java.util.WeakHashMap[org.apache.spark.sql.SparkSession, String]
+  /** Drop every [[session]]/[[frame]] entry owned by `s` (the frames
+    * themselves die with their context; only the references go).
+    * Idempotent; the context-stop listener calls it, tests can too. */
+  def evict(s: SparkSession): Unit = {
+    cache.keys.foreach { k => if (k.owner.contains(s)) cache.remove(k) }
+    watched.remove(s)
+  }
 }

@@ -45,13 +45,9 @@ object DedupQueries {
     * pair graph (same n/threshold) — sharing the memo keeps Bench reps
     * of `pipeline_training_set` from re-running the self-join. */
   private[queries] def jaccardPairs(s: SparkSession, dir: String): DataFrame =
-    FixtureCache.memo(
-        s"dedup_pairs:n=3:t=$JaccardThreshold:${graft.io.FixtureCache.sessionKey(s)}",
-        dir, "documents") {
-      val p = Dedup.ngramJaccard(Tables.documents(s, dir), "doc_id", "text",
-        n = 3, threshold = JaccardThreshold).persist()
-      p.count() // materialize now so every consumer hits the cached rows
-      p
+    FixtureCache.frame(s, s"dedup_pairs:n=3:t=$JaccardThreshold", dir, "documents") {
+      Dedup.ngramJaccard(Tables.documents(s, dir), "doc_id", "text",
+        n = 3, threshold = JaccardThreshold)
     }
 
   def ngramJaccard(s: SparkSession, dir: String): DataFrame =
@@ -73,13 +69,9 @@ object DedupQueries {
     * corpus-sized. */
   val ContainmentThreshold = 0.9
   def containmentQ(s: SparkSession, dir: String): DataFrame =
-    FixtureCache.memo(
-        s"dedup_contain:n=3:t=$ContainmentThreshold:${graft.io.FixtureCache.sessionKey(s)}",
-        dir, "documents") {
-      val c = Dedup.ngramContainment(Tables.documents(s, dir), "doc_id", "text",
-        n = 3, threshold = ContainmentThreshold).persist()
-      c.count()
-      c
+    FixtureCache.frame(s, s"dedup_contain:n=3:t=$ContainmentThreshold", dir, "documents") {
+      Dedup.ngramContainment(Tables.documents(s, dir), "doc_id", "text",
+        n = 3, threshold = ContainmentThreshold)
     }
       .select(col("inner_id"), col("outer_id"),
         round(col("containment"), 6).as("containment"))
@@ -98,12 +90,9 @@ object DedupQueries {
     * Verify+Bench) hash the corpus once; keyed by fixture identity +
     * session so regenerated data or a fresh session recomputes. */
   private def simhashFps(s: SparkSession, dir: String): DataFrame =
-    FixtureCache.memo(
-        s"simhash_fps:${graft.io.FixtureCache.sessionKey(s)}", dir, "documents") {
-      val fp = Dedup.simhashFingerprints(
-        Tables.documents(s, dir), "doc_id", "text").persist()
-      fp.count() // materialize now so every consumer hits the cached rows
-      fp
+    FixtureCache.frame(s, "simhash_fps", dir, "documents") {
+      Dedup.simhashFingerprints(
+        Tables.documents(s, dir), "doc_id", "text")
     }
 
   def simhash(s: SparkSession, dir: String): DataFrame =
@@ -139,14 +128,11 @@ object DedupQueries {
     * the expensive part — memoize it materialized, the [[simhashFps]]
     * pattern. ~32 fps/doc × 16 bytes: index-sized, not text-sized. */
   private def winnowFps(s: SparkSession, dir: String): DataFrame =
-    FixtureCache.memo(
-        s"winnow_fps:k=${TextQueries.WinnowK}:w=${TextQueries.WinnowW}:" +
-          graft.io.FixtureCache.sessionKey(s),
+    FixtureCache.frame(s,
+        s"winnow_fps:k=${TextQueries.WinnowK}:w=${TextQueries.WinnowW}",
         dir, "documents") {
-      val fp = Dedup.winnow(Tables.documents(s, dir), "doc_id", "text",
-        k = TextQueries.WinnowK, w = TextQueries.WinnowW).persist()
-      fp.count() // materialize now so every consumer hits the cached rows
-      fp
+      Dedup.winnow(Tables.documents(s, dir), "doc_id", "text",
+        k = TextQueries.WinnowK, w = TextQueries.WinnowW)
     }
 
   /** The FILTERED winnow pair list feeds two declared queries (pairs
@@ -154,14 +140,11 @@ object DedupQueries {
     * sf0.1) — memoized like [[jaccardPairs]], so the inverted-index
     * join runs once per fixture per process. */
   private def winnowPairList(s: SparkSession, dir: String): DataFrame =
-    FixtureCache.memo(
-        s"winnow_pairs:t=$WinnowMinShared:cap=$WinnowMaxFpFreq:" +
-          graft.io.FixtureCache.sessionKey(s),
+    FixtureCache.frame(s,
+        s"winnow_pairs:t=$WinnowMinShared:cap=$WinnowMaxFpFreq",
         dir, "documents") {
-      val p = Dedup.winnowPairsFromFps(winnowFps(s, dir),
-        minShared = WinnowMinShared, maxFpFreq = Some(WinnowMaxFpFreq)).persist()
-      p.count() // materialize now so every consumer hits the cached rows
-      p
+      Dedup.winnowPairsFromFps(winnowFps(s, dir),
+        minShared = WinnowMinShared, maxFpFreq = Some(WinnowMaxFpFreq))
     }
 
   def winnowPairs(s: SparkSession, dir: String): DataFrame =
@@ -181,14 +164,11 @@ object DedupQueries {
     * component-membership-sized (nodes that appear in a pair), never
     * corpus-sized. */
   private def winnowGroupFrame(s: SparkSession, dir: String): DataFrame =
-    FixtureCache.memo(
-        s"winnow_groups:t=$WinnowMinShared:cap=$WinnowMaxFpFreq:" +
-          graft.io.FixtureCache.sessionKey(s),
+    FixtureCache.frame(s,
+        s"winnow_groups:t=$WinnowMinShared:cap=$WinnowMaxFpFreq",
         dir, "documents") {
-      val g = Dedup.connectedComponents(winnowPairList(s, dir), "doc_a", "doc_b")
-        .select(col("node").as("doc_id"), col("component")).persist()
-      g.count() // materialize now so every consumer hits the cached rows
-      g
+      Dedup.connectedComponents(winnowPairList(s, dir), "doc_a", "doc_b")
+        .select(col("node").as("doc_id"), col("component"))
     }
 
   def winnowGroups(s: SparkSession, dir: String): DataFrame =
@@ -208,13 +188,9 @@ object DedupQueries {
     * oracle replays the exact side; the banded side's fixture-scale
     * behavior is oracle-pinned by `dedup_embedding_recall`. */
   private[queries] def embeddingPairs(s: SparkSession, dir: String): DataFrame =
-    FixtureCache.memo(
-        s"dedup_emb_pairs:auto:t=$CosineThreshold:${graft.io.FixtureCache.sessionKey(s)}",
-        dir, "embeddings") {
-      val p = Dedup.embeddingCosineAuto(Tables.embeddings(s, dir), "vec_id",
-        "embedding", threshold = CosineThreshold).persist()
-      p.count()
-      p
+    FixtureCache.frame(s, s"dedup_emb_pairs:auto:t=$CosineThreshold", dir, "embeddings") {
+      Dedup.embeddingCosineAuto(Tables.embeddings(s, dir), "vec_id",
+        "embedding", threshold = CosineThreshold)
     }
 
   def embedding(s: SparkSession, dir: String): DataFrame =
@@ -234,12 +210,9 @@ object DedupQueries {
     * `dedup_canonical_pick`, plus the source report via endpoints)
     * re-walked it per bench rep. Pair-graph-membership-sized. */
   private def ccGroupFrame(s: SparkSession, dir: String): DataFrame =
-    FixtureCache.memo(
-        s"cc_groups:${graft.io.FixtureCache.sessionKey(s)}", dir, "documents") {
-      val g = Dedup.connectedComponents(jaccardPairs(s, dir), "doc_a", "doc_b")
-        .select(col("node").as("doc_id"), col("component")).persist()
-      g.count()
-      g
+    FixtureCache.frame(s, "cc_groups", dir, "documents") {
+      Dedup.connectedComponents(jaccardPairs(s, dir), "doc_a", "doc_b")
+        .select(col("node").as("doc_id"), col("component"))
     }
 
   def ccGroups(s: SparkSession, dir: String): DataFrame =
@@ -258,13 +231,9 @@ object DedupQueries {
     * identical floor. */
   val CurveFloor = 0.5
   private def curvePairs(s: SparkSession, dir: String): DataFrame =
-    FixtureCache.memo(
-        s"curve_pairs:n=3:t=$CurveFloor:${graft.io.FixtureCache.sessionKey(s)}",
-        dir, "documents") {
-      val p = Dedup.ngramJaccard(Tables.documents(s, dir), "doc_id", "text",
-        n = 3, threshold = CurveFloor).persist()
-      p.count()
-      p
+    FixtureCache.frame(s, s"curve_pairs:n=3:t=$CurveFloor", dir, "documents") {
+      Dedup.ngramJaccard(Tables.documents(s, dir), "doc_id", "text",
+        n = 3, threshold = CurveFloor)
     }
 
   def thresholdCurve(s: SparkSession, dir: String): DataFrame = {
@@ -340,13 +309,9 @@ object DedupQueries {
     * the group-size agg are pair-graph-sized, never corpus-sized. */
   /** The embedding CC walk memoized like [[ccGroupFrame]]. */
   private def embeddingGroupFrame(s: SparkSession, dir: String): DataFrame =
-    FixtureCache.memo(
-        s"emb_groups:t=$CosineThreshold:${graft.io.FixtureCache.sessionKey(s)}",
-        dir, "embeddings") {
-      val g = Dedup.connectedComponents(embeddingPairs(s, dir), "id_a", "id_b")
-        .persist()
-      g.count()
-      g
+    FixtureCache.frame(s, s"emb_groups:t=$CosineThreshold", dir, "embeddings") {
+      Dedup.connectedComponents(embeddingPairs(s, dir), "id_a", "id_b")
+        
     }
 
   def embeddingGroups(s: SparkSession, dir: String): DataFrame =
@@ -371,16 +336,13 @@ object DedupQueries {
     // banded survivor pairs memoized like [[embeddingPairs]] (82 rows
     // at sf0.01) so bench reps measure the recall JOIN, not a rebuild
     // of the whole banded cascade
-    val banded = FixtureCache.memo(
-        s"dedup_emb_banded:L=$EmbLshTables:b=$EmbLshBits:t=$CosineThreshold:" +
-          FixtureCache.sessionKey(s),
+    val banded = FixtureCache.frame(s,
+        s"dedup_emb_banded:L=$EmbLshTables:b=$EmbLshBits:t=$CosineThreshold",
         dir, "embeddings") {
-      val b = Dedup.embeddingCosineLsh(Tables.embeddings(s, dir), "vec_id",
+      Dedup.embeddingCosineLsh(Tables.embeddings(s, dir), "vec_id",
           "embedding", threshold = CosineThreshold, nTables = EmbLshTables,
           bits = EmbLshBits, seed = EmbLshSeed)
-        .select(col("id_a"), col("id_b")).persist()
-      b.count()
-      b
+        .select(col("id_a"), col("id_b"))
     }
     val ne = exactPairs.agg(count(lit(1)).as("n_exact"))
     val nb = banded.agg(count(lit(1)).as("n_banded"))
@@ -415,13 +377,11 @@ object DedupQueries {
     import org.apache.spark.sql.expressions.Window
     val idx = SimilarityQueries.ivfIndex(s, dir)
     val pe = idx.cells // (id, v, cell): corpus assignment, v already double
-    val pairs = FixtureCache.memo(
-        s"dedup_sem_pairs:t=$CosineThreshold:${FixtureCache.sessionKey(s)}",
+    val pairs = FixtureCache.frame(s,
+        s"dedup_sem_pairs:t=$CosineThreshold",
         dir, "embeddings") {
-      val p = Dedup.embeddingCosineWithin(pe, "id", "v", "cell",
-        CosineThreshold).persist()
-      p.count() // survivor-pair-sized, never corpus-sized
-      p
+      Dedup.embeddingCosineWithin(pe, "id", "v", "cell",
+        CosineThreshold)
     }
     // r14 (r13 verdict task 6): the CC walk — an ITERATIVE RDD loop,
     // several exchanges per invocation — was the board's heaviest
@@ -429,12 +389,8 @@ object DedupQueries {
     // the walk's RESULT (survivor-pair-bounded, evicted with the
     // session), the covCells/ivfIndex discipline. memo ≡ rebuild is
     // spec-pinned in DedupSpec.
-    val comp = FixtureCache.memo(
-        s"dedup_sem_comp:t=$CosineThreshold:${FixtureCache.sessionKey(s)}",
-        dir, "embeddings") {
-      val c = Dedup.connectedComponents(pairs, "id_a", "id_b").persist()
-      c.count()
-      c
+    val comp = FixtureCache.frame(s, s"dedup_sem_comp:t=$CosineThreshold", dir, "embeddings") {
+      Dedup.connectedComponents(pairs, "id_a", "id_b")
     }
     val centersDf = {
       import s.implicits._

@@ -91,11 +91,8 @@ object MultimodalQueries {
     * so `mm_ahash_groups`, `mm_ahash_near_pairs`, and Bench reps pay
     * the codec exactly once. The persisted frame is 3 longs per doc. */
   private def ahashFrame(s: SparkSession, dir: String): DataFrame =
-    graft.io.FixtureCache.memo(
-        s"mm_ahash:${graft.io.FixtureCache.sessionKey(s)}", dir, "documents") {
-      val h = Multimodal.averageHash(blobs(s, dir)).persist()
-      h.count() // materialize now so every consumer hits the cached rows
-      h
+    graft.io.FixtureCache.frame(s, "mm_ahash", dir, "documents") {
+      Multimodal.averageHash(blobs(s, dir))
     }
 
   def ahashGroups(s: SparkSession, dir: String): DataFrame =
@@ -116,11 +113,8 @@ object MultimodalQueries {
     * session instead of once per consumer per Bench rep. The cached
     * frame is near-dup-pair-sized, never corpus-sized. */
   private def ahashPairs(s: SparkSession, dir: String): DataFrame =
-    graft.io.FixtureCache.memo(
-        s"mm_ahash_pairs:${graft.io.FixtureCache.sessionKey(s)}", dir, "documents") {
-      val p = Multimodal.ahashNearDupPairs(ahashFrame(s, dir)).persist()
-      p.count() // materialize now so every consumer hits the cached rows
-      p
+    graft.io.FixtureCache.frame(s, "mm_ahash_pairs", dir, "documents") {
+      Multimodal.ahashNearDupPairs(ahashFrame(s, dir))
     }
 
   def ahashNearPairs(s: SparkSession, dir: String): DataFrame =
@@ -157,12 +151,9 @@ object MultimodalQueries {
     // the CC walk memoized per fixture + session (the winnow-groups
     // pattern): the iterative RDD loop's per-round job cost dominated
     // the timed reps while the pair memo already served
-    val cc = graft.io.FixtureCache.memo(
-        s"ahash_cc:${graft.io.FixtureCache.sessionKey(s)}", dir, "documents") {
-      val g = graft.operators.Dedup.connectedComponents(
-        ahashPairs(s, dir).select("doc_a", "doc_b"), "doc_a", "doc_b").persist()
-      g.count()
-      g
+    val cc = graft.io.FixtureCache.frame(s, "ahash_cc", dir, "documents") {
+      graft.operators.Dedup.connectedComponents(
+        ahashPairs(s, dir).select("doc_a", "doc_b"), "doc_a", "doc_b")
     }
     cc.join(dh, col("node") === col("exemplar_doc"))
       .groupBy(col("component").as("cluster_id"))
@@ -178,11 +169,8 @@ object MultimodalQueries {
   /** The mosaic frame shares the ahashFrame memo discipline: one real
     * codec pass per fixture + session, 64 longs per doc persisted. */
   private def mosaicFrame(s: SparkSession, dir: String): DataFrame =
-    graft.io.FixtureCache.memo(
-        s"mm_mosaic:${graft.io.FixtureCache.sessionKey(s)}", dir, "documents") {
-      val m = Multimodal.mosaicVectors(blobs(s, dir)).persist()
-      m.count()
-      m
+    graft.io.FixtureCache.frame(s, "mm_mosaic", dir, "documents") {
+      Multimodal.mosaicVectors(blobs(s, dir))
     }
 
   /** Visual k-NN over the codec-real mosaic embeddings
@@ -208,12 +196,9 @@ object MultimodalQueries {
     * discipline: one extraction pass per fixture + session,
     * [[AudioKnnFrames]] longs per doc persisted. */
   private def audioVecFrame(s: SparkSession, dir: String): DataFrame =
-    graft.io.FixtureCache.memo(
-        s"mm_audio_vec:${graft.io.FixtureCache.sessionKey(s)}", dir, "documents") {
-      val m = Multimodal.audioFrameVectors(blobs(s, dir),
-        frameLen = AudioFrameLen, nFrames = AudioKnnFrames).persist()
-      m.count()
-      m
+    graft.io.FixtureCache.frame(s, "mm_audio_vec", dir, "documents") {
+      Multimodal.audioFrameVectors(blobs(s, dir),
+        frameLen = AudioFrameLen, nFrames = AudioKnnFrames)
     }
 
   /** AUDIO k-NN — the VAD front-end's active-frame features handed to
@@ -246,11 +231,8 @@ object MultimodalQueries {
     * memo discipline: one kernel pass per fixture + session, 2 longs
     * per payload persisted. */
   private def audioFpFrame(s: SparkSession, dir: String): DataFrame =
-    graft.io.FixtureCache.memo(
-        s"mm_audio_fp:${graft.io.FixtureCache.sessionKey(s)}", dir, "documents") {
-      val h = Multimodal.audioFingerprint(audioVecFrame(s, dir)).persist()
-      h.count()
-      h
+    graft.io.FixtureCache.frame(s, "mm_audio_fp", dir, "documents") {
+      Multimodal.audioFingerprint(audioVecFrame(s, dir))
     }
 
   /** The audio banded-Hamming pair frame — the IDENTICAL
@@ -260,11 +242,8 @@ object MultimodalQueries {
     * like [[ahashPairs]]. Modality parity at the operator level: one
     * banded join serves both fingerprint kinds. */
   private def audioPairs(s: SparkSession, dir: String): DataFrame =
-    graft.io.FixtureCache.memo(
-        s"mm_audio_pairs:${graft.io.FixtureCache.sessionKey(s)}", dir, "documents") {
-      val p = Multimodal.ahashNearDupPairs(audioFpFrame(s, dir)).persist()
-      p.count()
-      p
+    graft.io.FixtureCache.frame(s, "mm_audio_pairs", dir, "documents") {
+      Multimodal.ahashNearDupPairs(audioFpFrame(s, dir))
     }
 
   /** Near-dup AUDIO pairs within Hamming ≤ 3 of each other's
@@ -285,12 +264,9 @@ object MultimodalQueries {
   def audioGroupsQ(s: SparkSession, dir: String): DataFrame = {
     val dh = audioFpFrame(s, dir).groupBy("ahash_hi", "ahash_lo")
       .agg(count(lit(1)).as("n_docs"), min("id").as("exemplar_doc"))
-    val cc = graft.io.FixtureCache.memo(
-        s"audio_cc:${graft.io.FixtureCache.sessionKey(s)}", dir, "documents") {
-      val g = graft.operators.Dedup.connectedComponents(
-        audioPairs(s, dir).select("doc_a", "doc_b"), "doc_a", "doc_b").persist()
-      g.count()
-      g
+    val cc = graft.io.FixtureCache.frame(s, "audio_cc", dir, "documents") {
+      graft.operators.Dedup.connectedComponents(
+        audioPairs(s, dir).select("doc_a", "doc_b"), "doc_a", "doc_b")
     }
     cc.join(dh, col("node") === col("exemplar_doc"))
       .groupBy(col("component").as("cluster_id"))
@@ -327,13 +303,9 @@ object MultimodalQueries {
     * mean-threshold comparison (spec-pinned). Zero shuffle until the
     * final sort. */
   private def audioDecodedVecFrame(s: SparkSession, dir: String): DataFrame =
-    graft.io.FixtureCache.memo(
-        s"mm_audio_decoded_vec:${graft.io.FixtureCache.sessionKey(s)}",
-        dir, "documents") {
-      val m = Multimodal.audioFrameVectorsDecoded(blobs(s, dir),
-        frameLen = AudioFrameLen, nFrames = AudioKnnFrames).persist()
-      m.count()
-      m
+    graft.io.FixtureCache.frame(s, "mm_audio_decoded_vec", dir, "documents") {
+      Multimodal.audioFrameVectorsDecoded(blobs(s, dir),
+        frameLen = AudioFrameLen, nFrames = AudioKnnFrames)
     }
 
   def audioDecodedFpQ(s: SparkSession, dir: String): DataFrame = {

@@ -69,20 +69,17 @@ object PipelineQueries {
     // The near-dup stage itself is the SAME pair graph that
     // dedup_ngram_jaccard / dedup_cc_groups share (n=3, threshold =
     // DedupQueries.JaccardThreshold) via its fixture memo.
-    val kept = graft.io.FixtureCache.memo(
-        s"pipeline_kept:k=$SampleEvery:${graft.io.FixtureCache.sessionKey(s)}",
+    val kept = graft.io.FixtureCache.frame(s,
+        s"pipeline_kept:k=$SampleEvery",
         dir, "documents") {
       val docs = Tables.documents(s, dir)
       val sampled = TextAnalysis.stratifiedSample(
         docs.select("doc_id", "lang", "text"), "lang", "doc_id", SampleEvery)
       val dupHi = DedupQueries.jaccardPairs(s, dir)
         .select(col("doc_b").as("doc_id")).distinct()
-      val f = sampled.join(dupHi, Seq("doc_id"), "left_anti")
+      sampled.join(dupHi, Seq("doc_id"), "left_anti")
         .select(col("doc_id"), col("lang"),
           size(graft.functions.TextOps.words(col("text"))).as("n_tokens"))
-        .persist()
-      f.count() // materialize now so every consumer hits the cached rows
-      f
     }
     val w = Window.partitionBy("lang").orderBy("doc_id")
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)

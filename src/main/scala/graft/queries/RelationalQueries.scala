@@ -244,19 +244,18 @@ object RelationalQueries {
     * this query's plan). At 100 TB this is the nightly-join pattern:
     * pay the bucketed layout on write, never shuffle the fact tables
     * again. Table names carry a fixture discriminator so multi-fixture
-    * JVMs (specs) cannot cross-serve; the bucketed copies are
-    * fixture-memoized so Verify + repeated Bench reps write them
-    * once. */
+    * JVMs (specs) cannot cross-serve; the bucketed copies are a
+    * [[graft.io.FixtureCache.session]] entry (catalog tables belong to
+    * the session), so Verify + repeated Bench reps write them once. */
   def bucketedJoin(s: SparkSession, dir: String): DataFrame = {
     val suffix = (math.abs(new java.io.File(dir).getAbsolutePath.hashCode)).toString
     val (liT, ordT) = (s"graft_li_bkt_$suffix", s"graft_ord_bkt_$suffix")
-    graft.io.FixtureCache.memo(
-        s"bucketed_tables:$suffix:${s.sparkContext.applicationId}", dir, "lineitem") {
+    graft.io.FixtureCache.session(s, s"bucketed_tables:$suffix", dir, "lineitem") {
       // a FRESH JVM's in-memory catalog has forgotten these tables,
       // but their warehouse locations survive on disk — saveAsTable
       // then fails with LOCATION_ALREADY_EXISTS. Drop both faces
       // (catalog entry if known, stale directory if orphaned) so the
-      // rebuild is idempotent across processes; the per-app memo
+      // rebuild is idempotent across processes; the session memo
       // already makes it once-per-session.
       Seq(liT, ordT).foreach { t =>
         s.sql(s"DROP TABLE IF EXISTS $t")

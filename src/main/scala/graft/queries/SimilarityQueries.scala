@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.functions.VectorOps
-import graft.io.Tables
+import graft.io.{FixtureCache, Tables}
 import graft.operators.Similarity
 
 /** Declared similarity-search queries — ALL FOUR oracle-checked:
@@ -58,29 +58,17 @@ object SimilarityQueries {
   /** The IVF index lives on DISK, content-addressed by the fixture
     * file's identity + build params (Similarity.indexDirFor) —
     * build-once/probe-many across processes (Verify builds it; Bench
-    * in a later JVM only probes). In memory we hold at most ONE entry
-    * per fixture file, replaced when a different Spark app asks — a
-    * per-app memo key would pin DataFrames of stopped sessions for the
-    * JVM's lifetime. */
-  private val ivfCache = scala.collection.concurrent.TrieMap
-    .empty[(String, Long, Long), (String, Similarity.IvfIndex)]
-
-  private[graft] def ivfIndex(s: SparkSession, dir: String): Similarity.IvfIndex = {
-    val f = new java.io.File(Tables.path(dir, "embeddings"))
-    val key = (f.getAbsolutePath, f.lastModified, f.length)
-    val appId = s.sparkContext.applicationId
-    ivfCache.get(key) match {
-      case Some((app, idx)) if app == appId => idx
-      case _ =>
-        val indexDir = Similarity.indexDirFor(
-          f, IvfCells, IvfTrainIters, IvfTrainSample, IvfSeed)
-        val idx = Similarity.loadOrBuildIndex(
-          Tables.embeddings(s, dir), "vec_id", "embedding", indexDir,
-          IvfCells, IvfTrainIters, IvfTrainSample, IvfSeed)
-        ivfCache.put(key, (appId, idx))
-        idx
+    * in a later JVM only probes). In memory the handle is a
+    * [[FixtureCache.session]] entry: one per (fixture file, session),
+    * dropped when the session's context stops. */
+  private[graft] def ivfIndex(s: SparkSession, dir: String): Similarity.IvfIndex =
+    FixtureCache.session(s, "ann_ivf_index", dir, "embeddings") {
+      Similarity.loadOrBuildIndex(
+        Tables.embeddings(s, dir), "vec_id", "embedding",
+        Similarity.indexDirFor(new java.io.File(Tables.path(dir, "embeddings")),
+          IvfCells, IvfTrainIters, IvfTrainSample, IvfSeed),
+        IvfCells, IvfTrainIters, IvfTrainSample, IvfSeed)
     }
-  }
 
   def ivf(s: SparkSession, dir: String): DataFrame =
     Similarity.probe(ivfIndex(s, dir), queryVecs(s, dir), K, IvfNProbe)
@@ -150,28 +138,18 @@ object SimilarityQueries {
 
   /** The PQ index (codebooks + encoded corpus) lives on DISK like the
     * IVF index — content-addressed by fixture identity + build params
-    * ([[Similarity.pqIndexDirFor]]), in-memory one entry per fixture
-    * file (the [[ivfCache]] discipline: an appId-keyed memo would pin
-    * stopped sessions' DataFrames forever). Verify builds it; Bench in
-    * a later JVM reads codes straight off parquet. */
-  private val pqCache = scala.collection.concurrent.TrieMap
-    .empty[(String, Long, Long), (String, Similarity.PqIndex)]
-
-  private def pqIndex(s: SparkSession, dir: String): Similarity.PqIndex = {
-    val f = new java.io.File(Tables.path(dir, "embeddings"))
-    val key = (f.getAbsolutePath, f.lastModified, f.length)
-    val appId = s.sparkContext.applicationId
-    pqCache.get(key) match {
-      case Some((app, idx)) if app == appId => idx
-      case _ =>
-        val indexDir = Similarity.pqIndexDirFor(f, PqM, PqCodes, PqIters)
-        val idx = Similarity.loadOrBuildPqIndex(
-          Tables.embeddings(s, dir), "vec_id", "embedding", indexDir,
-          PqM, PqCodes, PqIters)
-        pqCache.put(key, (appId, idx))
-        idx
+    * ([[Similarity.pqIndexDirFor]]); in memory a
+    * [[FixtureCache.session]] entry, dropped with its session. Verify
+    * builds it; Bench in a later JVM reads codes straight off
+    * parquet. */
+  private def pqIndex(s: SparkSession, dir: String): Similarity.PqIndex =
+    FixtureCache.session(s, "ann_pq_index", dir, "embeddings") {
+      Similarity.loadOrBuildPqIndex(
+        Tables.embeddings(s, dir), "vec_id", "embedding",
+        Similarity.pqIndexDirFor(new java.io.File(Tables.path(dir, "embeddings")),
+          PqM, PqCodes, PqIters),
+        PqM, PqCodes, PqIters)
     }
-  }
 
   /** Product-quantization top-k ([[Similarity.pqTopK]]): PqM subspaces
     * × PqCodes exact-decimal Lloyd codewords → PqM codes/vector (16×
@@ -329,27 +307,20 @@ object SimilarityQueries {
       pmod(col("id"), lit(2)) === 0, pmod(col("id"), lit(2)) === 1,
       k = MarginK, nProbe = IvfNProbe)
 
-  /** The d²-bounded covariance-cells memo (r12 verdict task 2 — the
-    * [[ivfIndex]] memo pattern applied to the cells RESULT): ONE
+  /** The d²-bounded covariance-cells memo (r12 verdict task 2): ONE
     * corpus-wide `cov_cells` UDAF pass per fixture file serves
     * `ann_covariance`, `ann_pca_component` AND `ann_pca_project` —
     * each used to re-run the identical full-corpus aggregate per
     * invocation (3 × 416 M d12Long conversions per 100× board for
     * identical output). What's memoized is plain DRIVER-SIDE data
-    * (≤ d(d+1)/2 = 2 080 tuples, ~100 KB), not a session-bound
-    * DataFrame, so unlike [[ivfCache]] there is no stopped-session
-    * pinning hazard; the file-identity key ((path, mtime, size), the
-    * ivfCache key) still invalidates on any fixture change. The
-    * UDAF's cells are cell-for-cell identical to the batch decimal
-    * explode plan by the pinned d12Long ≡ CAST(… AS DECIMAL(38,12))
-    * contract (VectorOpsSpec), and memo ≡ per-invocation pass is
-    * spec-pinned in SimilaritySpec. */
-  private val covCellsCache = scala.collection.concurrent.TrieMap
-    .empty[(String, Long, Long), Array[(Int, Int, Long, Double, Double, Double)]]
-
-  private[graft] def covCells(s: SparkSession, dir: String): Array[(Int, Int, Long, Double, Double, Double)] = {
-    val f = new java.io.File(Tables.path(dir, "embeddings"))
-    covCellsCache.getOrElseUpdate((f.getAbsolutePath, f.lastModified, f.length),
+    * (≤ d(d+1)/2 = 2 080 tuples, ~100 KB) that references no session,
+    * so it is a plain [[FixtureCache.memo]] entry. The UDAF's cells
+    * are cell-for-cell identical to the batch decimal explode plan by
+    * the pinned d12Long ≡ CAST(… AS DECIMAL(38,12)) contract
+    * (VectorOpsSpec), and memo ≡ per-invocation pass is spec-pinned
+    * in SimilaritySpec. */
+  private[graft] def covCells(s: SparkSession, dir: String): Array[(Int, Int, Long, Double, Double, Double)] =
+    FixtureCache.memo("ann_cov_cells", dir, "embeddings") {
       Tables.embeddings(s, dir)
         .select(graft.functions.VectorOps.toDouble(col("embedding")).as("v"))
         .repartition(graft.GraftSession.envCpus)
@@ -357,8 +328,8 @@ object SimilarityQueries {
         .selectExpr("inline(cells)")
         .collect().map(r =>
           (r.getInt(0), r.getInt(1), r.getLong(2),
-            r.getDouble(3), r.getDouble(4), r.getDouble(5))))
-  }
+            r.getDouble(3), r.getDouble(4), r.getDouble(5)))
+    }
 
   /** Margin-mining RECALL eval (r13; SAMPLE-BOUNDED since r14 — r13
     * verdict task 1): mined (x, y) pairs of the IVF-candidate form vs
@@ -383,7 +354,7 @@ object SimilarityQueries {
   val MarginSampleQ = 32
   def marginRecall(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val (sampleIds, exactPairs) = graft.io.FixtureCache.memo(
+    val (sampleIds, exactPairs) = FixtureCache.memo(
         s"ann_margin_sampled_exact:k=$MarginK:q=$MarginSampleQ",
         dir, "embeddings") {
       val e = Tables.embeddings(s, dir)
@@ -397,16 +368,13 @@ object SimilarityQueries {
         .map(r => (r.getLong(0), r.getLong(1)))
       (ids, pairs)
     }
-    val ivf = graft.io.FixtureCache.memo(
-        s"ann_margin_ivf_pairs:k=$MarginK:np=$IvfNProbe:" +
-          graft.io.FixtureCache.sessionKey(s),
+    val ivf = FixtureCache.frame(s,
+        s"ann_margin_ivf_pairs:k=$MarginK:np=$IvfNProbe",
         dir, "embeddings") {
-      val f = Similarity.marginKnnMiningIvf(ivfIndex(s, dir),
+      Similarity.marginKnnMiningIvf(ivfIndex(s, dir),
           pmod(col("id"), lit(2)) === 0, pmod(col("id"), lit(2)) === 1,
           k = MarginK, nProbe = IvfNProbe)
-        .select(col("x_id"), col("y_id")).persist()
-      f.count()
-      f
+        .select(col("x_id"), col("y_id"))
     }
     val exactDf = exactPairs.toSeq.toDF("x_id", "y_id")
     val ivfSampled = ivf.filter(col("x_id").isin(sampleIds.map(Long.box): _*))
@@ -507,27 +475,16 @@ object SimilarityQueries {
     * reads it straight off parquet, and a serving reboot reloads the
     * graph exactly like the index (the `ann_ivf_probe_only`
     * precedent, applied to the store's second half). In memory: one
-    * persisted frame per (variant, fixture file), replaced when a
-    * different Spark app asks — the [[ivfCache]] discipline. */
-  private val graphCache = scala.collection.concurrent.TrieMap
-    .empty[(String, String, Long, Long), (String, DataFrame)]
-
+    * [[FixtureCache.frame]] per (variant, fixture file, session),
+    * dropped with its session. */
   private def diskGraph(s: SparkSession, dir: String, variant: String)
-                       (build: => DataFrame): DataFrame = {
-    val f = new java.io.File(Tables.path(dir, "embeddings"))
-    val key = (variant, f.getAbsolutePath, f.lastModified, f.length)
-    val appId = s.sparkContext.applicationId
-    graphCache.get(key) match {
-      case Some((app, df)) if app == appId => df
-      case _ =>
-        val gDir = Similarity.graphDirFor(f, GraphK, IvfCells, GraphSeedSalt,
-          rounds = 1, IvfCells, IvfTrainIters, IvfTrainSample, IvfSeed, variant)
-        val edges = Similarity.loadOrBuildGraph(s, gDir)(build).persist()
-        edges.count()
-        graphCache.put(key, (appId, edges))
-        edges
+                       (build: => DataFrame): DataFrame =
+    FixtureCache.frame(s, s"ann_graph_edges:$variant", dir, "embeddings") {
+      Similarity.loadOrBuildGraph(s, Similarity.graphDirFor(
+        new java.io.File(Tables.path(dir, "embeddings")), GraphK, IvfCells,
+        GraphSeedSalt, rounds = 1, IvfCells, IvfTrainIters, IvfTrainSample,
+        IvfSeed, variant))(build)
     }
-  }
 
   /** The pinned-form 1-round refined EDGE LIST, disk-resident
     * ([[diskGraph]]) and shared by the declared refined graph, the
@@ -567,16 +524,15 @@ object SimilarityQueries {
     * discipline). The result frame is memoized per (fixture,
     * session) — the iterative walk's RESULT, not just its inputs —
     * so bench reps price the emission, not two materialized rounds;
-    * the memo evicts with the session (FixtureCache's r13-ADVICE
-    * listener). Like the 1-round form, the declared query pins the
+    * as a [[FixtureCache.session]] entry it is dropped when its
+    * session's context stops. Like the 1-round form, the declared query pins the
     * oracle's nCells = 16 (disclosed); at scale each round is the
     * same k-bounded edge self-join, ~2× the refined_auto production
     * law per extra round. */
   val DescentRounds = 2
   def knnGraphRefined2(s: SparkSession, dir: String): DataFrame = {
-    val out = graft.io.FixtureCache.memo(
-        s"ann_knn_graph_refined2:r=$DescentRounds:" +
-          graft.io.FixtureCache.sessionKey(s),
+    val out = FixtureCache.session(s,
+        s"ann_knn_graph_refined2:r=$DescentRounds",
         dir, "embeddings") {
       val idx = ivfIndex(s, dir)
       Similarity.nnDescent(seedUnionOf(idx, IvfCells),
@@ -650,18 +606,15 @@ object SimilarityQueries {
     * persisted + counted here ([[Similarity.graphSearch]] returns a
     * lazy bounded plan), so bench reps price the emission. */
   private def searchResult(s: SparkSession, dir: String): DataFrame =
-    graft.io.FixtureCache.memo(
-        s"ann_graph_search:b=$SearchBeam:r=$SearchRounds:" +
-          graft.io.FixtureCache.sessionKey(s),
+    FixtureCache.frame(s,
+        s"ann_graph_search:b=$SearchBeam:r=$SearchRounds",
         dir, "embeddings") {
       val entries = Similarity.probe(ivfIndex(s, dir), queryVecs(s, dir),
           SearchBeam, nProbe = 1)
         .select(col("query_id"), col("neighbor_id").as("node"))
-      val out = Similarity.graphSearch(refinedEdges(s, dir),
+      Similarity.graphSearch(refinedEdges(s, dir),
         Tables.embeddings(s, dir), "vec_id", "embedding",
-        queryVecs(s, dir), entries, K, SearchBeam, SearchRounds).persist()
-      out.count()
-      out
+        queryVecs(s, dir), entries, K, SearchBeam, SearchRounds)
     }
 
   def graphSearchQ(s: SparkSession, dir: String): DataFrame =
@@ -710,10 +663,7 @@ object SimilarityQueries {
 
   def graphSearchCurveQ(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val rows = graft.io.FixtureCache.memo(
-        s"ann_graph_search_curve:r=$SearchRounds:" +
-          graft.io.FixtureCache.sessionKey(s),
-        dir, "embeddings") {
+    val rows = FixtureCache.memo(s"ann_graph_search_curve:r=$SearchRounds", dir, "embeddings") {
       val idx = ivfIndex(s, dir)
       val edges = refinedEdges(s, dir)
       val e = Tables.embeddings(s, dir)
@@ -781,25 +731,13 @@ object SimilarityQueries {
     * trigger) reloads both instead of rebuilding — which is what
     * collapsed `stream_graph_insert_parity`'s 40.5 s cold rep to the
     * serve cost (r14 verdict What's-wrong #3). In memory: one index
-    * per fixture file, the [[ivfCache]] replace-on-new-app
-    * discipline. */
-  private val settledIdxCache = scala.collection.concurrent.TrieMap
-    .empty[(String, Long, Long), (String, Similarity.IvfIndex)]
-
+    * per (fixture file, session), a [[FixtureCache.session]] entry. */
   private[queries] def settledGraph(s: SparkSession, dir: String): (Similarity.IvfIndex, DataFrame) = {
-    val f = new java.io.File(Tables.path(dir, "embeddings"))
-    val key = (f.getAbsolutePath, f.lastModified, f.length)
-    val appId = s.sparkContext.applicationId
-    val idx = settledIdxCache.get(key) match {
-      case Some((app, i)) if app == appId => i
-      case _ =>
-        val indexDir = Similarity.indexDirFor(f, IvfCells, IvfTrainIters,
-          IvfTrainSample, IvfSeed, variant = SettledVariant)
-        val i = Similarity.loadOrBuildIndex(settledEmb(s, dir),
-          "vec_id", "embedding", indexDir,
-          IvfCells, IvfTrainIters, IvfTrainSample, IvfSeed)
-        settledIdxCache.put(key, (appId, i))
-        i
+    val idx = FixtureCache.session(s, s"ann_ivf_index:$SettledVariant", dir, "embeddings") {
+      Similarity.loadOrBuildIndex(settledEmb(s, dir), "vec_id", "embedding",
+        Similarity.indexDirFor(new java.io.File(Tables.path(dir, "embeddings")),
+          IvfCells, IvfTrainIters, IvfTrainSample, IvfSeed, variant = SettledVariant),
+        IvfCells, IvfTrainIters, IvfTrainSample, IvfSeed)
     }
     val edges = diskGraph(s, dir, variant = SettledVariant) {
       Similarity.nnDescentRound(seedUnionOf(idx, IvfCells),
@@ -822,9 +760,8 @@ object SimilarityQueries {
     * chunking result-invisible (SimilaritySpec pins any-chunking ≡
     * one-batch row identity; the declared hashes are unchanged). */
   private def insertResult(s: SparkSession, dir: String): DataFrame =
-    graft.io.FixtureCache.memo(
-        s"ann_graph_insert:b=$SearchBeam:r=$SearchRounds:" +
-          graft.io.FixtureCache.sessionKey(s),
+    FixtureCache.session(s,
+        s"ann_graph_insert:b=$SearchBeam:r=$SearchRounds",
         dir, "embeddings") {
       val (idx, edges) = settledGraph(s, dir)
       Similarity.graphSearchBulk(edges, settledEmb(s, dir),
@@ -860,18 +797,15 @@ object SimilarityQueries {
     * queries. Oracle: the identical search CTE chain with the query
     * batch offset by Q. */
   private def probeOnlyResult(s: SparkSession, dir: String): DataFrame =
-    graft.io.FixtureCache.memo(
-        s"ann_graph_probe_only:b=$SearchBeam:r=$SearchRounds:" +
-          graft.io.FixtureCache.sessionKey(s),
+    FixtureCache.frame(s,
+        s"ann_graph_probe_only:b=$SearchBeam:r=$SearchRounds",
         dir, "embeddings") {
       val entries = Similarity.probe(ivfIndex(s, dir), queryVecsNext(s, dir),
           SearchBeam, nProbe = 1)
         .select(col("query_id"), col("neighbor_id").as("node"))
-      val out = Similarity.graphSearch(refinedEdges(s, dir),
+      Similarity.graphSearch(refinedEdges(s, dir),
         Tables.embeddings(s, dir), "vec_id", "embedding",
-        queryVecsNext(s, dir), entries, K, SearchBeam, SearchRounds).persist()
-      out.count()
-      out
+        queryVecsNext(s, dir), entries, K, SearchBeam, SearchRounds)
     }
 
   def graphProbeOnlyQ(s: SparkSession, dir: String): DataFrame =
@@ -899,9 +833,8 @@ object SimilarityQueries {
 
   def graphEntryCurveQ(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val rows = graft.io.FixtureCache.memo(
-        s"ann_graph_entry_curve:b=$SearchBeam:r=$SearchRounds:" +
-          graft.io.FixtureCache.sessionKey(s),
+    val rows = FixtureCache.memo(
+        s"ann_graph_entry_curve:b=$SearchBeam:r=$SearchRounds",
         dir, "embeddings") {
       val idx = ivfIndex(s, dir)
       val edges = refinedEdges(s, dir)
@@ -998,17 +931,14 @@ object SimilarityQueries {
     * per variant): the declared serving composition — nProbe = 1
     * entry via `entryIdx` + [[SearchRounds]] beam rounds over `edges`
     * against the FULL corpus — overlapped with the full-corpus exact
-    * cosine top-[[K]]. Q·K-bounded id sets, memoized per (variant,
-    * fixture, session) — the curve queries' discipline: the
+    * cosine top-[[K]]. Q·K-bounded driver-side counts, memoized per
+    * (variant, fixture file) — the curve queries' discipline: the
     * driver-loop search and the exact side run once, bench reps price
     * the 1-row emission. */
   private def servedRecallCounts(s: SparkSession, dir: String, key: String,
                                  edges: => DataFrame,
                                  entryIdx: => Similarity.IvfIndex): (Long, Long, Long) =
-    graft.io.FixtureCache.memo(
-        s"$key:b=$SearchBeam:r=$SearchRounds:" +
-          graft.io.FixtureCache.sessionKey(s),
-        dir, "embeddings") {
+    FixtureCache.memo(s"$key:b=$SearchBeam:r=$SearchRounds", dir, "embeddings") {
       val e = Tables.embeddings(s, dir)
       val qv = queryVecs(s, dir)
       val entries = Similarity.probe(entryIdx, qv, SearchBeam, nProbe = 1)
@@ -1230,19 +1160,16 @@ object SimilarityQueries {
     * answers. Work is the classic serve — the tombstone check is
     * one predicate on the k-bounded emission. */
   private def tombstoneResult(s: SparkSession, dir: String): DataFrame =
-    graft.io.FixtureCache.memo(
-        s"ann_graph_tombstone_search:b=$SearchBeam:r=$SearchRounds:" +
-          graft.io.FixtureCache.sessionKey(s),
+    FixtureCache.frame(s,
+        s"ann_graph_tombstone_search:b=$SearchBeam:r=$SearchRounds",
         dir, "embeddings") {
       val entries = Similarity.probe(ivfIndex(s, dir), queryVecs(s, dir),
           SearchBeam, nProbe = 1)
         .select(col("query_id"), col("neighbor_id").as("node"))
-      val out = Similarity.graphSearch(refinedEdges(s, dir),
+      Similarity.graphSearch(refinedEdges(s, dir),
         Tables.embeddings(s, dir), "vec_id", "embedding",
         queryVecs(s, dir), entries, K, SearchBeam, SearchRounds,
-        emitFilter = pmod(col("node"), lit(DeletedMod)) =!= 0).persist()
-      out.count()
-      out
+        emitFilter = pmod(col("node"), lit(DeletedMod)) =!= 0)
     }
 
   def graphTombstoneSearchQ(s: SparkSession, dir: String): DataFrame =
@@ -1308,9 +1235,8 @@ object SimilarityQueries {
       .collect().map(r => (r.getLong(0), r.getSeq[Double](1).toArray))
 
   def graphDeletedRecallQ(s: SparkSession, dir: String): DataFrame = {
-    val counts = graft.io.FixtureCache.memo(
-        s"ann_graph_deleted_recall:b=$SearchBeam:r=$SearchRounds:" +
-          graft.io.FixtureCache.sessionKey(s),
+    val counts = FixtureCache.memo(
+        s"ann_graph_deleted_recall:b=$SearchBeam:r=$SearchRounds",
         dir, "embeddings") {
       val e = remainingEmb(s, dir)
       val qv = queryVecsRemaining(s, dir)
@@ -1346,25 +1272,13 @@ object SimilarityQueries {
     * postings hold) exactly `vec_id % DeletedMod <> 0`. */
   private val RemainingVariant = s"remaining-mod$DeletedMod"
 
-  private val remainingIdxCache = scala.collection.concurrent.TrieMap
-    .empty[(String, Long, Long), (String, Similarity.IvfIndex)]
-
-  private[queries] def remainingIdx(s: SparkSession, dir: String): Similarity.IvfIndex = {
-    val f = new java.io.File(Tables.path(dir, "embeddings"))
-    val key = (f.getAbsolutePath, f.lastModified, f.length)
-    val appId = s.sparkContext.applicationId
-    remainingIdxCache.get(key) match {
-      case Some((app, i)) if app == appId => i
-      case _ =>
-        val indexDir = Similarity.indexDirFor(f, IvfCells, IvfTrainIters,
-          IvfTrainSample, IvfSeed, variant = RemainingVariant)
-        val i = Similarity.loadOrBuildIndex(remainingEmb(s, dir),
-          "vec_id", "embedding", indexDir,
-          IvfCells, IvfTrainIters, IvfTrainSample, IvfSeed)
-        remainingIdxCache.put(key, (appId, i))
-        i
+  private[queries] def remainingIdx(s: SparkSession, dir: String): Similarity.IvfIndex =
+    FixtureCache.session(s, s"ann_ivf_index:$RemainingVariant", dir, "embeddings") {
+      Similarity.loadOrBuildIndex(remainingEmb(s, dir), "vec_id", "embedding",
+        Similarity.indexDirFor(new java.io.File(Tables.path(dir, "embeddings")),
+          IvfCells, IvfTrainIters, IvfTrainSample, IvfSeed, variant = RemainingVariant),
+        IvfCells, IvfTrainIters, IvfTrainSample, IvfSeed)
     }
-  }
 
   /** Content-address tag for the published CRUD-compacted store: a
     * function of the consolidate identity AND the delete stratum. */
@@ -1402,9 +1316,8 @@ object SimilarityQueries {
     * maintain gate's serve row through one memo, so the gate's
     * number equals the composition row by construction. */
   private def crudRecallCounts(s: SparkSession, dir: String): (Long, Long, Long) =
-    graft.io.FixtureCache.memo(
-        s"ann_graph_crud_recall:b=$SearchBeam:r=$SearchRounds:" +
-          graft.io.FixtureCache.sessionKey(s),
+    FixtureCache.memo(
+        s"ann_graph_crud_recall:b=$SearchBeam:r=$SearchRounds",
         dir, "embeddings") {
       val e = remainingEmb(s, dir)
       val qv = queryVecsRemaining(s, dir)
@@ -1437,9 +1350,8 @@ object SimilarityQueries {
 
   def graphDeleteCurveQ(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val rows = graft.io.FixtureCache.memo(
-        s"ann_graph_delete_curve:b=$SearchBeam:r=$SearchRounds:" +
-          graft.io.FixtureCache.sessionKey(s),
+    val rows = FixtureCache.memo(
+        s"ann_graph_delete_curve:b=$SearchBeam:r=$SearchRounds",
         dir, "embeddings") {
       val nTotal = Tables.embeddings(s, dir).count()
       DeleteCurveMods.map { m =>
@@ -1710,7 +1622,7 @@ object SimilarityQueries {
     // memoized like covCells so bench reps price the two assignment
     // scans, not a per-rep retrain of the state being retired
     // (1.6 s/rep → ~0.4 s)
-    val centers0 = graft.io.FixtureCache.memo("ann_retrain_before_centers",
+    val centers0 = FixtureCache.memo("ann_retrain_before_centers",
         dir, "embeddings") {
       val idx0 = Similarity.buildIndex(
         e.filter(pmod(col("vec_id"), lit(5)) =!= 0), "vec_id", "embedding",

@@ -137,13 +137,11 @@ object TextQueries {
     * the dedup pair graphs; the cached frame is matched-occurrence-
     * sized (≤ 5·|docs| rows), never token-stream-sized. */
   private[queries] def bm25Scored(s: SparkSession, dir: String): DataFrame =
-    FixtureCache.memo(
-        s"bm25_scored:${Bm25Terms.mkString(",")}:${FixtureCache.sessionKey(s)}",
+    FixtureCache.frame(s,
+        s"bm25_scored:${Bm25Terms.mkString(",")}",
         dir, "documents") {
-      val sc = TextAnalysis.bm25Scores(Tables.documents(s, dir), "doc_id",
-        "text", _.filter(col("token").isin(Bm25Terms: _*))).persist()
-      sc.count()
-      sc
+      TextAnalysis.bm25Scores(Tables.documents(s, dir), "doc_id",
+        "text", _.filter(col("token").isin(Bm25Terms: _*)))
     }
 
   /** BM25 retrieval over the corpus for a fixed 5-term query (see
@@ -296,30 +294,19 @@ object TextQueries {
     TextAnalysis.bpeLearnMerges(Tables.documents(s, dir), "doc_id", "text",
       BpeMergeRounds)
 
-  /** Learned merge pairs, driver-cached per (fixture, app) like the
-    * IVF index — training runs once per process, encode reps pay
-    * only the apply chain. */
-  private val bpeMergesCache = scala.collection.concurrent.TrieMap
-    .empty[(String, Long, Long, String), Seq[(String, String)]]
-
   /** BPE encode ([[TextAnalysis.bpeEncodeReport]]): the learned
     * merges applied back to the corpus — per-language subword
-    * compression report. */
+    * compression report. The merge pairs are driver-only, a
+    * [[FixtureCache.memo]] entry: training runs once per fixture
+    * file, encode reps pay only the apply chain. */
   def bpeEncode(s: SparkSession, dir: String): DataFrame = {
-    val f = new java.io.File(Tables.path(dir, "documents"))
-    val key = (f.getAbsolutePath, f.lastModified, f.length,
-      s.sparkContext.applicationId)
-    val merges = bpeMergesCache.getOrElseUpdate(key,
+    val merges = FixtureCache.memo(s"bpe_merges:r=$BpeMergeRounds", dir, "documents") {
       TextAnalysis.bpeLearnMerges(Tables.documents(s, dir), "doc_id", "text",
           BpeMergeRounds)
-        .collect().map(r => (r.getString(1), r.getString(2))).toSeq)
+        .collect().map(r => (r.getString(1), r.getString(2))).toSeq
+    }
     TextAnalysis.bpeEncodeReport(Tables.documents(s, dir), "lang", "text", merges)
   }
-
-  /** Trained topic centers, driver-cached per (fixture, app) like the
-    * IVF index and BPE merges — k·d doubles. */
-  private val topicCentersCache = scala.collection.concurrent.TrieMap
-    .empty[(String, Long, Long, String), Array[Array[Double]]]
 
   val TopicBuckets = 32
   val TopicK = 8
@@ -328,17 +315,16 @@ object TextQueries {
   /** Topic clustering ([[TextAnalysis.topicClusters]]): hashed
     * bag-of-words k-means through the proven exact-decimal Lloyd
     * trajectory; per-cluster size + dominant language. */
-  /** Trained centers for the fixture — shared by the batch query and
-    * the streaming parity twin. */
-  private[graft] def topicCenters(s: SparkSession, dir: String): Array[Array[Double]] = {
-    val f = new java.io.File(Tables.path(dir, "documents"))
-    val key = (f.getAbsolutePath, f.lastModified, f.length,
-      s.sparkContext.applicationId)
-    topicCentersCache.getOrElseUpdate(key,
+  /** Trained centers for the fixture (k·d driver doubles, a
+    * [[FixtureCache.memo]] entry) — shared by the batch query and the
+    * streaming parity twin. */
+  private[graft] def topicCenters(s: SparkSession, dir: String): Array[Array[Double]] =
+    FixtureCache.memo(s"topic_centers:b=$TopicBuckets:k=$TopicK:it=$TopicIters",
+        dir, "documents") {
       TextAnalysis.trainTopicCenters(
         TextAnalysis.docVectors(Tables.documents(s, dir), "doc_id", "text",
-          TopicBuckets), TopicK, TopicIters))
-  }
+          TopicBuckets), TopicK, TopicIters)
+    }
 
   def topicClustersQ(s: SparkSession, dir: String): DataFrame =
     TextAnalysis.topicClusters(Tables.documents(s, dir), "doc_id", "lang",

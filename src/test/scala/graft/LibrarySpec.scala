@@ -49,14 +49,6 @@ class LibrarySpec extends SparkSpec {
         .collect().map(r => (r.getLong(0), r.getInt(1), r.getString(2), r.getLong(3))).toSet
     val plain = rows(li.join(dim.withColumnRenamed("l_returnflag", "_k"),
       col("l_returnflag") === col("_k")).drop("_k"))
-    val maxTask = new java.util.concurrent.atomic.AtomicLong
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onTaskEnd(t: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit = {
-        val m = t.taskMetrics
-        if (m != null) maxTask.getAndUpdate(p => math.max(p, m.shuffleReadMetrics.recordsRead))
-      }
-    }
-    spark.sparkContext.addSparkListener(listener)
     // AQE's partition coalescing folds this toy-sized shuffle into ONE
     // task regardless of keys, hiding the distribution under test;
     // disable it and widen the reduce side so the two regimes separate
@@ -66,23 +58,20 @@ class LibrarySpec extends SparkSpec {
     val prevParts = spark.conf.get("spark.sql.shuffle.partitions")
     spark.conf.set("spark.sql.adaptive.coalescePartitions.enabled", "false")
     spark.conf.set("spark.sql.shuffle.partitions", "32")
-    val salted =
-      try {
-        val got = rows(Skew.saltedJoin(li, dim, "l_returnflag", buckets = 16))
-        org.apache.spark.GraftSparkShims.drainListenerBus(spark.sparkContext)
-        got
-      } finally {
+    val (salted, tasks) =
+      try withTaskMetrics(rows(Skew.saltedJoin(li, dim, "l_returnflag", buckets = 16)))
+      finally {
         spark.conf.set("spark.sql.adaptive.coalescePartitions.enabled", prevCoalesce)
         spark.conf.set("spark.sql.shuffle.partitions", prevParts)
-        spark.sparkContext.removeSparkListener(listener)
       }
+    val maxTask = tasks.map(_.shuffleReadMetrics.recordsRead).maxOption.getOrElse(0L)
     assert(salted === plain)
     // 3 hot keys × 16 salts over 32 reduce tasks: a task holds a few
     // hundred rows; an unsalted 3-key join concentrates a whole flag
     // (~2000 rows, a third of the table) in one task
     val total = li.count()
-    assert(maxTask.get < total / 6,
-      s"a task read ${maxTask.get} of $total shuffle records — salt not spreading")
+    assert(maxTask < total / 6,
+      s"a task read ${maxTask} of $total shuffle records — salt not spreading")
   }
 
   test("incremental state merge equals the flat aggregate for any split") {

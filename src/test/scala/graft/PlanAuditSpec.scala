@@ -234,27 +234,17 @@ class PlanAuditSpec extends SparkSpec {
                                          // the winnow cut is the red bar here: losing it puts
                                          // the full position stream (≥ 150k at sf0.01) back
                                          // on the exchange
-    val records = new java.util.concurrent.atomic.LongAdder
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onTaskEnd(t: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit = {
-        val m = t.taskMetrics
-        if (m != null) records.add(m.shuffleWriteMetrics.recordsWritten)
-      }
-    }
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      val over = ceilings.flatMap { case (name, ceiling) =>
-        records.reset()
-        // noop sink, not count(): count() lets Catalyst prune the
-        // query's actual compute (the graft.Metrics rationale)
+    val over = ceilings.flatMap { case (name, ceiling) =>
+      // noop sink, not count(): count() lets Catalyst prune the
+      // query's actual compute (the graft.Metrics rationale)
+      val (_, tasks) = withTaskMetrics {
         SparkEntry.queries(name)(spark, sf01).write.mode("overwrite")
           .format("noop").save()
-        org.apache.spark.GraftSparkShims.drainListenerBus(spark.sparkContext)
-        val got = records.sum()
-        if (got > ceiling) Some(s"$name: $got shuffle records > ceiling $ceiling") else None
       }
-      assert(over.isEmpty, s"corpus-sized exchange regressions:\n${over.mkString("\n")}")
-    } finally spark.sparkContext.removeSparkListener(listener)
+      val got = tasks.map(_.shuffleWriteMetrics.recordsWritten).sum
+      if (got > ceiling) Some(s"$name: $got shuffle records > ceiling $ceiling") else None
+    }
+    assert(over.isEmpty, s"corpus-sized exchange regressions:\n${over.mkString("\n")}")
   }
 
   test("graph search: the final scoring scan is an IN-pruned pushed point lookup (r14)") {

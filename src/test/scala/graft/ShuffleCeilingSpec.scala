@@ -1,9 +1,5 @@
 package graft
 
-import java.util.concurrent.atomic.LongAdder
-
-import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
-
 /** Shuffle-record CEILINGS for the bounded-output query classes
   * (r8/r9 verdict task: "red-bar assertions so a refactor can't
   * re-introduce a corpus-sized exchange"). Each query below has a
@@ -204,25 +200,15 @@ class ShuffleCeilingSpec extends SparkSpec {
     ("text_lm_heldout_score", 44000L, "train-vocab bigram/unigram counts + doc report (10962)"))
 
   test("bounded-output queries shuffle bounded records at sf0.1") {
-    val records = new LongAdder
-    val listener = new SparkListener {
-      override def onTaskEnd(t: SparkListenerTaskEnd): Unit = {
-        val m = t.taskMetrics
-        if (m != null) records.add(m.shuffleWriteMetrics.recordsWritten)
-      }
-    }
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      val offenders = ceilings.flatMap { case (name, ceiling, bound) =>
-        records.reset()
+    val offenders = ceilings.flatMap { case (name, ceiling, bound) =>
+      val (_, tasks) = withTaskMetrics {
         SparkEntry.queries(name)(spark, sf1)
           .write.mode("overwrite").format("noop").save()
-        org.apache.spark.GraftSparkShims.drainListenerBus(spark.sparkContext)
-        val recs = records.sum()
-        if (recs > ceiling) Some(s"$name: $recs shuffle records > ceiling $ceiling ($bound)")
-        else None
       }
-      assert(offenders.isEmpty, offenders.mkString("\n"))
-    } finally spark.sparkContext.removeSparkListener(listener)
+      val recs = tasks.map(_.shuffleWriteMetrics.recordsWritten).sum
+      if (recs > ceiling) Some(s"$name: $recs shuffle records > ceiling $ceiling ($bound)")
+      else None
+    }
+    assert(offenders.isEmpty, offenders.mkString("\n"))
   }
 }

@@ -1488,22 +1488,97 @@ class SimilaritySpec extends SparkSpec {
   }
 
   test("FixtureCache: session-keyed entries evict when the owning session key is dropped (r13 ADVICE)") {
-    val fakeSession = java.util.UUID.randomUUID.toString
-    var computes = 0
-    def one() = graft.io.FixtureCache.memo(s"spec_evict:$fakeSession",
-      sf001, "embeddings") { computes += 1; computes }
-    assert(one() === 1); assert(one() === 1) // memoized
-    graft.io.FixtureCache.evictSession(fakeSession)
-    assert(one() === 2) // recomputed after eviction
-    // unrelated tags survive the eviction
-    var other = 0
-    def keep() = graft.io.FixtureCache.memo("spec_evict_keep",
-      sf001, "embeddings") { other += 1; other }
-    assert(keep() === 1)
-    graft.io.FixtureCache.evictSession(fakeSession)
-    assert(keep() === 1)
-    graft.io.FixtureCache.evictSession("spec_evict_keep") // cleanup
-    graft.io.FixtureCache.evictSession("spec_evict")
+    import graft.io.FixtureCache
+    import org.apache.spark.sql.SparkSession
+    val other = spark.newSession()
+    var memoRuns, sessionRuns, frameRuns = 0
+    def memoed(dir: String) =
+      FixtureCache.memo("spec_fc_memo", dir, "embeddings") { memoRuns += 1; new Object }
+    def bound(s: SparkSession) =
+      FixtureCache.session(s, "spec_fc_session", sf001, "embeddings") { sessionRuns += 1; new Object }
+    // every row the frame's source yields bumps `sourceRows`
+    val sourceRows = spark.sparkContext.longAccumulator("spec_fc_source_rows")
+    val tick = udf { (id: Long) => sourceRows.add(1); id }
+    def framed(s: SparkSession) =
+      FixtureCache.frame(s, "spec_fc_frame", sf001, "embeddings") {
+        frameRuns += 1
+        Tables.embeddings(s, sf001).select(tick(col("vec_id")).as("vec_id"))
+      }
+
+    // one compute per key; a hit returns the same object. The jobs of
+    // a session/frame build carry the entry's tag and the caller's
+    // description comes back afterwards.
+    val sc = spark.sparkContext
+    val group = "spec-fixture-cache"
+    val descriptions = new java.util.concurrent.ConcurrentLinkedQueue[String]
+    val jobs = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        if (j.properties != null && j.properties.getProperty("spark.jobGroup.id") == group)
+          descriptions.add(String.valueOf(j.properties.getProperty("spark.job.description")))
+    }
+    sc.addSparkListener(jobs)
+    val (m, b, f) =
+      try {
+        sc.setJobGroup(group, "caller's description")
+        val built = (memoed(sf001), bound(spark), framed(spark))
+        assert(sc.getLocalProperty("spark.job.description") === "caller's description")
+        org.apache.spark.GraftSparkShims.drainListenerBus(sc)
+        built
+      } finally {
+        sc.clearJobGroup()
+        sc.removeSparkListener(jobs)
+      }
+    val seen = descriptions.toArray.toSeq.map(_.toString)
+    assert(seen.nonEmpty && seen.forall(_ == "FixtureCache spec_fc_frame"), s"jobs: $seen")
+    assert(memoed(sf001) eq m); assert(bound(spark) eq b); assert(framed(spark) eq f)
+    assert((memoRuns, sessionRuns, frameRuns) === ((1, 1, 1)))
+
+    // a frame is persisted, materialized once, and a later action
+    // reads the cached rows, not its source
+    val n = Tables.embeddings(spark, sf001).count()
+    assert(f.storageLevel !== org.apache.spark.storage.StorageLevel.NONE)
+    assert(sourceRows.sum === n)
+    assert(f.count() === n)
+    assert(sourceRows.sum === n, "a second count re-read the frame's source")
+
+    // another session gets its own session/frame entries; memo is shared
+    val ob = bound(other)
+    val of = framed(other)
+    assert((ob ne b) && (of ne f))
+    assert(memoed(sf001) eq m)
+    assert((memoRuns, sessionRuns, frameRuns) === ((1, 2, 2)))
+
+    // evicting that session drops exactly its entries: they recompute,
+    // while the shared session's entries and the memo survive
+    FixtureCache.evict(other)
+    assert(bound(spark) eq b); assert(framed(spark) eq f); assert(memoed(sf001) eq m)
+    assert((memoRuns, sessionRuns, frameRuns) === ((1, 2, 2)))
+    assert(bound(other) ne ob)
+    assert(framed(other) ne of)
+    assert((memoRuns, sessionRuns, frameRuns) === ((1, 3, 3)))
+    FixtureCache.evict(other)
+
+    // the file identity is (path, mtime, size): a copy recomputes, and
+    // so does the copy after its mtime or its size changes
+    val tmp = java.nio.file.Files.createTempDirectory("graft-fixture-cache")
+    val copy = tmp.resolve("embeddings.parquet")
+    java.nio.file.Files.copy(java.nio.file.Paths.get(Tables.path(sf001, "embeddings")), copy)
+    try {
+      val c1 = memoed(tmp.toString)
+      assert(c1 ne m); assert(memoRuns === 2)
+      assert(memoed(tmp.toString) eq c1); assert(memoRuns === 2)
+      val file = copy.toFile
+      assert(file.setLastModified(file.lastModified + 10000L))
+      val c2 = memoed(tmp.toString)
+      assert(c2 ne c1); assert(memoRuns === 3)
+      val mtime = file.lastModified
+      java.nio.file.Files.write(copy, Array[Byte](0), java.nio.file.StandardOpenOption.APPEND)
+      assert(file.setLastModified(mtime))
+      assert(memoed(tmp.toString) ne c2); assert(memoRuns === 4)
+    } finally {
+      java.nio.file.Files.deleteIfExists(copy)
+      java.nio.file.Files.deleteIfExists(tmp)
+    }
   }
 
   test("autoNCells: the constant-occupancy law and its fixture floor") {

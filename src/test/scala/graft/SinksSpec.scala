@@ -1,8 +1,5 @@
 package graft
 
-import java.util.concurrent.atomic.AtomicLong
-
-import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
 import org.apache.spark.sql.functions._
 
 import graft.io.{Sinks, Tables}
@@ -13,21 +10,8 @@ import graft.io.{Sinks, Tables}
   * layout of the same rows. */
 class SinksSpec extends SparkSpec {
 
-  private def recordsRead(work: => Unit): Long = {
-    val read = new AtomicLong
-    val listener = new SparkListener {
-      override def onTaskEnd(t: SparkListenerTaskEnd): Unit = {
-        val m = t.taskMetrics
-        if (m != null) read.addAndGet(m.inputMetrics.recordsRead)
-      }
-    }
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      work
-      org.apache.spark.GraftSparkShims.drainListenerBus(spark.sparkContext)
-      read.get
-    } finally spark.sparkContext.removeSparkListener(listener)
-  }
+  private def recordsRead(work: => Unit): Long =
+    withTaskMetrics(work)._2.map(_.inputMetrics.recordsRead).sum
 
   test("z-ordered layout preserves rows exactly and prunes a 2-D range scan") {
     val li = Tables.lineitem(spark, sf01)

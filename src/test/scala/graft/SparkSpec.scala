@@ -1,6 +1,8 @@
 package graft
 
-import org.apache.spark.SparkThrowable
+import org.apache.spark.{GraftSparkShims, SparkThrowable}
+import org.apache.spark.executor.TaskMetrics
+import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -17,6 +19,23 @@ trait SparkSpec extends AnyFunSuite {
     Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
       .collectFirst { case t: SparkThrowable if t.getCondition != null => t.getCondition }
       .getOrElse(fail(s"no Spark error condition in $e", e))
+  }
+
+  /** Runs `body` and returns its result with the metrics of every
+    * task that ended while it ran (the listener bus is drained before
+    * the metrics are read). */
+  def withTaskMetrics[T](body: => T): (T, Seq[TaskMetrics]) = {
+    val metrics = new java.util.concurrent.ConcurrentLinkedQueue[TaskMetrics]
+    val listener = new SparkListener {
+      override def onTaskEnd(t: SparkListenerTaskEnd): Unit =
+        if (t.taskMetrics != null) metrics.add(t.taskMetrics)
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      val out = body
+      GraftSparkShims.drainListenerBus(spark.sparkContext)
+      (out, metrics.toArray(Array.empty[TaskMetrics]).toSeq)
+    } finally spark.sparkContext.removeSparkListener(listener)
   }
 }
 

@@ -208,27 +208,17 @@ class StatsSpec extends SparkSpec {
       .agg(qs.map(q => expr(s"percentile(x, $q)").as(s"q$q")).head,
         qs.map(q => expr(s"percentile(x, $q)").as(s"q$q")).tail: _*)
       .collect().map(r => qs.indices.map(i => r.getDouble(i + 1))).head
-    val maxTask = new java.util.concurrent.atomic.AtomicLong
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onTaskEnd(t: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit = {
-        val m = t.taskMetrics
-        if (m != null) maxTask.getAndUpdate(p => math.max(p, m.shuffleReadMetrics.recordsRead))
-      }
+    val (mine, tasks) = withTaskMetrics {
+      graft.operators.Quantiles.exactQuantiles(df, "g", "x", qs)
+        .collect().map(r => r.getDouble(1) -> r.getDouble(2)).toMap
     }
-    spark.sparkContext.addSparkListener(listener)
-    val mine =
-      try {
-        val got = graft.operators.Quantiles.exactQuantiles(df, "g", "x", qs)
-          .collect().map(r => r.getDouble(1) -> r.getDouble(2)).toMap
-        org.apache.spark.GraftSparkShims.drainListenerBus(spark.sparkContext)
-        got
-      } finally spark.sparkContext.removeSparkListener(listener)
+    val maxTask = tasks.map(_.shuffleReadMetrics.recordsRead).maxOption.getOrElse(0L)
     qs.zip(builtin).foreach { case (q, v) => assert(mine(q) === v, s"q=$q") }
     // histogram partials peak ≈ mapTasks × occupied buckets ≈ 16 k here;
     // the funnel this test guards against reads the dominant 180 k rows
     // in ONE task. 30 k cleanly separates the two regimes.
-    assert(maxTask.get < 30000,
-      s"a task read ${maxTask.get} shuffle records — refinement funnel is back")
+    assert(maxTask < 30000,
+      s"a task read ${maxTask} shuffle records — refinement funnel is back")
   }
 
   test("KMV distinct estimate is close to exact and invariant to bucket count") {
