@@ -7,6 +7,7 @@ import org.apache.spark.storage.StorageLevel
 
 import graft.functions.{ExactVectorSumAgg, VectorOps}
 import graft.plans.ArgminKernel
+import graft.util.Jobs.described
 
 /** Spark-native Lloyd's K-Means with explicit initial centers —
   * the reference program's semantics (Flink batch KMeans example:
@@ -186,7 +187,6 @@ object KMeansNative {
   private def lloyd(name: String, points: DataFrame, vecCol: String,
                     init: Array[Array[Double]], maxIter: Int, tol: Double): FitResult = {
     val sc = points.sparkSession.sparkContext
-    val callerDescription = sc.getLocalProperty("spark.job.description")
     val k = init.length
     val dim = init(0).length
     val parts = points.select(VectorOps.toDouble(col(vecCol))).queryExecution.toRdd
@@ -195,8 +195,8 @@ object KMeansNative {
       .setName(s"KMeansNative.$name points")
       .persist(StorageLevel.MEMORY_AND_DISK)
     try {
-      sc.setJobDescription(s"KMeansNative.$name points")
-      val n = parts.map(_.length.toLong).collect().sum
+      val n = described(sc, s"KMeansNative.$name points")(
+        parts.map(_.length.toLong).collect().sum)
       val ideal = math.max(1L, n * dim / RoundValuesPerTask)
       val work = if (ideal < parts.getNumPartitions) parts.coalesce(ideal.toInt) else parts
       val agg = new ExactVectorSumAgg
@@ -205,10 +205,10 @@ object KMeansNative {
       var iter = 0
       var moved = Double.PositiveInfinity
       while (iter < maxIter && !(moved <= tol)) {
-        sc.setJobDescription(s"KMeansNative.$name round ${iter + 1}/$maxIter")
         val flat = centers.flatten
-        val total = work.mapPartitions(arrays => Iterator.single(roundPartial(arrays, flat, k, dim)))
-          .collect()
+        val total = described(sc, s"KMeansNative.$name round ${iter + 1}/$maxIter")(
+            work.mapPartitions(arrays => Iterator.single(roundPartial(arrays, flat, k, dim)))
+              .collect())
           .foldLeft(Partial.empty(k)) { (a, b) =>
             for (c <- 0 until k) {
               a.n(c) += b.n(c); a.w(c) += b.w(c); a.s(c) = agg.merge(a.s(c), b.s(c))
@@ -232,10 +232,7 @@ object KMeansNative {
         iter += 1
       }
       FitResult(centers, history.toSeq, iter)
-    } finally {
-      sc.setJobDescription(callerDescription)
-      parts.unpersist()
-    }
+    } finally parts.unpersist()
   }
 
   /** One task of a round: assign each vector, accumulate its cluster. */

@@ -32,7 +32,9 @@ package graft.functions
   * random streams at k ∈ {1, 4, 64} in VectorOpsSpec. */
 final class BoundedTopK[T <: AnyRef](k: Int, ord: Ordering[T]) {
   require(k >= 1, "k must be >= 1")
-  private val heap = new Array[AnyRef](k)
+  // grows by doubling up to k, so an unbounded k (Int.MaxValue) costs
+  // only what is retained
+  private var heap = new Array[AnyRef](math.min(k, 16))
   private var n = 0
 
   @inline private def less(a: AnyRef, b: AnyRef): Boolean =
@@ -42,6 +44,8 @@ final class BoundedTopK[T <: AnyRef](k: Int, ord: Ordering[T]) {
     * not yet full); otherwise a single compare and done. */
   def offer(x: T): Unit =
     if (n < k) {
+      if (n == heap.length)
+        heap = java.util.Arrays.copyOf(heap, math.min(k.toLong, 2L * n).toInt)
       var i = n
       heap(i) = x
       n += 1

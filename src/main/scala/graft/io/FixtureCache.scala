@@ -3,6 +3,8 @@ package graft.io
 import org.apache.spark.scheduler.{SparkListener, SparkListenerApplicationEnd}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
+import graft.util.Jobs.described
+
 /** The one process-wide memo for values derived from a fixture table
   * file: it alone decides how such a value is keyed, which session it
   * belongs to, how it is materialized and when it is evicted. An entry
@@ -58,12 +60,8 @@ object FixtureCache {
       s.sparkContext.addSparkListener(new SparkListener {
         override def onApplicationEnd(e: SparkListenerApplicationEnd): Unit = evict(s)
       })
-    cache.getOrElseUpdate(key(tag, sfDir, table, Some(s)), {
-      val sc = s.sparkContext
-      val callerDescription = sc.getLocalProperty("spark.job.description")
-      sc.setJobDescription(s"FixtureCache $tag")
-      try compute finally sc.setJobDescription(callerDescription)
-    }).asInstanceOf[T]
+    cache.getOrElseUpdate(key(tag, sfDir, table, Some(s)),
+      described(s.sparkContext, s"FixtureCache $tag")(compute)).asInstanceOf[T]
   }
 
   /** [[session]] for a DataFrame: `build` persisted at the default

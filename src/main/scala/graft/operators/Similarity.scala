@@ -1,18 +1,26 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, Row}
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.util.SQLOrderingUtil
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
 
-import graft.functions.VectorOps
+import graft.functions.{BoundedTopK, VectorOps}
+import graft.util.Jobs.described
 
 /** Approximate-nearest-neighbor search over an embedding column.
   *
   * Scale design (SURVEY.md §2.2 / north-star):
   *  - [[bruteForceTopK]] — exact baseline. Query vectors (small: Q·d
-  *    doubles) are broadcast; each partition keeps a bounded per-query
-  *    heap, so only Q × k × numPartitions candidate rows are shuffled
-  *    for the final global rank — input row count never shuffles.
+  *    doubles) ride in the task closure; each partition keeps a
+  *    bounded per-query heap, so at most Q × k × numPartitions
+  *    candidates are collected for the driver's final merge — input
+  *    rows never leave their partition.
   *  - [[lshTopK]] — the scale path: L sign-bucket tables over
   *    deterministic integer hyperplanes; candidates come from bucket
   *    equality joins (shuffle on (table, bucket)), ranked by exact
@@ -63,53 +71,116 @@ object Similarity {
         max(floor(finiteN2 * 1000000.0)).as("max_norm2_micros"))
   }
 
+  /** The window's order: score descending under Spark's own double
+    * comparison (−0.0 equals 0.0, NaN is largest), then id ascending. */
+  private def scoreDesc(s1: Double, id1: Long, s2: Double, id2: Long): Int = {
+    val c = SQLOrderingUtil.compareDoubles(s2, s1)
+    if (c != 0) c else java.lang.Long.compare(id1, id2)
+  }
+  private val ScoreDesc: Ordering[(Double, Long)] = (a, b) => scoreDesc(a._1, a._2, b._1, b._2)
+  private val LabeledDesc: Ordering[(Double, Long, Int)] =
+    (a, b) => scoreDesc(a._1, a._2, b._1, b._2)
+  private val IntScoreDesc: Ordering[(Long, Long)] = (a, b) =>
+    if (a._1 != b._1) java.lang.Long.compare(b._1, a._1) else java.lang.Long.compare(a._2, b._2)
+
+  /** The one tail of the bounded-heap top-k family. `scan` is one
+    * task's per-row loop over its partition of `rows`, returning one
+    * heap per query in query order. It runs as ONE job, described
+    * `Similarity.<op> top-k`; the driver merges the heaps in `ord` per
+    * distinct query id (the window's partitioning) and keeps k. Returns
+    * each distinct query id, first appearance first, with its ranking. */
+  private def topK[C <: AnyRef](op: String, rows: RDD[InternalRow], qids: Array[Long],
+                                k: Int, ord: Ordering[C])
+                               (scan: Iterator[InternalRow] => Array[BoundedTopK[C]])
+      : Seq[(Long, Seq[C])] = {
+    val parts = described(rows.sparkContext, s"Similarity.$op top-k")(
+      rows.mapPartitions(it => Iterator.single(scan(it).map(_.iterator.toVector))).collect())
+    val entries = qids.indices.groupBy(qids(_))
+    qids.distinct.toSeq.map { qid =>
+      qid -> entries(qid).flatMap(qi => parts.iterator.flatMap(_(qi))).sorted(ord).take(k)
+    }
+  }
+
+  /** `embs` as the internal rows (id, vector, extra...) of its plan. */
+  private def scanRows(embs: DataFrame, idCol: String, vecCol: String,
+                       extra: Column*): RDD[InternalRow] =
+    embs.select(Seq(col(idCol).cast("long"), VectorOps.toDouble(col(vecCol))) ++ extra: _*)
+      .queryExecution.toRdd
+
+  /** A top-k result as a local ONE-partition frame (a caller's `orderBy`
+    * is then one task, no exchange); columns non-null, as the window's. */
+  private def localFrame(spark: SparkSession, cols: Seq[(String, DataType)],
+                         rows: Seq[Row]): DataFrame =
+    spark.createDataFrame(rows.asJava,
+      StructType(cols.map { case (n, t) => StructField(n, t, nullable = false) })).coalesce(1)
+
+  /** (query_id, neighbor_id, rank, `score`) rows of (score, id) candidates. */
+  private def rankedFrame[S](spark: SparkSession, score: String, scoreType: DataType,
+                             merged: Seq[(Long, Seq[(S, Long)])]): DataFrame =
+    localFrame(spark, Seq("query_id" -> LongType, "neighbor_id" -> LongType,
+        "rank" -> IntegerType, score -> scoreType),
+      for ((qid, cs) <- merged; ((s, id), i) <- cs.zipWithIndex) yield Row(qid, id, i + 1, s))
+
+  /** (query_id, neighbor_id, rank, neighbor_label, cosine) rows. */
+  private def labeledFrame(spark: SparkSession,
+                           merged: Seq[(Long, Seq[(Double, Long, Int)])]): DataFrame =
+    localFrame(spark, Seq("query_id" -> LongType, "neighbor_id" -> LongType,
+        "rank" -> IntegerType, "neighbor_label" -> IntegerType, "cosine" -> DoubleType),
+      for ((qid, cs) <- merged; ((c, id, lbl), i) <- cs.zipWithIndex)
+        yield Row(qid, id, i + 1, lbl, c))
+
+  /** The kNN vote, on the driver over Q·k rows: each query's most
+    * frequent label among its merged top-k, ties toward the smaller
+    * label. A query without voters emits no row; rows are ordered by
+    * query_id. `correct` is an Int flag (1 iff true_label =
+    * pred_label). */
+  private def voteFrame(spark: SparkSession, queries: Array[(Long, Int, Array[Double])],
+                        merged: Seq[(Long, Seq[(Double, Long, Int)])]): DataFrame = {
+    val top = merged.toMap
+    localFrame(spark, Seq("query_id" -> LongType, "true_label" -> IntegerType,
+        "pred_label" -> IntegerType, "n_votes" -> LongType, "correct" -> IntegerType),
+      queries.toSeq.sortBy(_._1).flatMap { case (qid, ql, _) =>
+        top(qid).groupBy(_._3).map { case (l, vs) => (l, vs.size.toLong) }
+          .minByOption { case (l, n) => (-n, l) }
+          .map { case (pred, n) => Row(qid, ql, pred, n, if (pred == ql) 1 else 0) }
+      })
+  }
+
   /** Exact top-k cosine neighbors for each query vector.
     * Output: (query_id, neighbor_id, rank, cosine). Self-matches are
     * excluded; ties break toward the lower neighbor id.
     *
-    * NOTE on the family: the broadcast-queries/bounded-heap partition
-    * scan below is intentionally REPEATED (not factored through a
-    * shared scorer/filter closure) in [[mipsTopK]],
-    * [[hardNegativesTopK]] and [[knnClassify]] — each variant keeps a
-    * monomorphic per-row loop, because a closure parameter would put
-    * a megamorphic call site inside the O(n·Q·d) hot path the JIT
-    * otherwise inlines; the variants differ only in the skip
-    * predicate and the emitted payload. */
+    * NOTE on the family: this operator, [[mipsTopK]], [[quantTopK]],
+    * [[hardNegativesTopK]], [[knnClassify]], [[probe]],
+    * [[hardNegativesIvf]] and [[knnClassifyIvf]] are each ONE job,
+    * run when called, through [[topK]]: a [[BoundedTopK]] per query
+    * per task, a driver merge in the window's order, a local
+    * one-partition frame; no window, join or exchange. The per-row
+    * loop is intentionally REPEATED per operator, not a shared
+    * scorer/filter closure: a closure call per row would put a
+    * megamorphic call site inside the O(n·Q·d) hot path the JIT
+    * otherwise inlines; the loops differ only in the skip predicate,
+    * the score and the payload. */
   def bruteForceTopK(embs: DataFrame, idCol: String, vecCol: String,
                      queries: Array[(Long, Array[Double])], k: Int): DataFrame = {
-    val spark = embs.sparkSession
-    import spark.implicits._
-    val qb = spark.sparkContext.broadcast(
-      queries.map { case (qid, v) => (qid, v, math.sqrt(VectorOps.dotSeq(v, v))) })
-    val p = embs.select(col(idCol).cast("long").as("id"),
-      VectorOps.toDouble(col(vecCol)).as("v")).as[(Long, Array[Double])]
-    // Partition-local bounded top-k per query: emit ≤ Q·k rows per
-    // partition; global rank then runs over Q·k·numPartitions rows.
-    val partial = p.mapPartitions { iter =>
-      val qs = qb.value
-      // per query: bounded heap of (cosine, id) — worst at the root
-      val ord = Ordering.Tuple2(Ordering[Double].reverse, Ordering[Long])
-      val heaps = qs.map(_ => new graft.functions.BoundedTopK[(Double, Long)](k, ord))
-      iter.foreach { case (id, v) =>
+    val qs = queries.map { case (qid, v) => (qid, v, math.sqrt(VectorOps.dotSeq(v, v))) }
+    val merged = topK("bruteForceTopK", scanRows(embs, idCol, vecCol), queries.map(_._1), k,
+        ScoreDesc) { rows =>
+      val heaps = qs.map(_ => new BoundedTopK[(Double, Long)](k, ScoreDesc))
+      rows.foreach { r =>
+        val id = r.getLong(0)
+        val v = r.getArray(1).toDoubleArray()
         val n = math.sqrt(VectorOps.dotSeq(v, v))
         var qi = 0
         while (qi < qs.length) {
           val (qid, qv, qn) = qs(qi)
-          if (id != qid)
-            heaps(qi).offer((VectorOps.dotSeq(qv, v) / (qn * n), id))
+          if (id != qid) heaps(qi).offer((VectorOps.dotSeq(qv, v) / (qn * n), id))
           qi += 1
         }
       }
-      qs.iterator.zipWithIndex.flatMap { case ((qid, _, _), qi) =>
-        heaps(qi).iterator.map { case (c, id) => (qid, id, c) }
-      }
-    }.toDF("query_id", "neighbor_id", "cosine")
-    val w = Window.partitionBy("query_id")
-      .orderBy(col("cosine").desc, col("neighbor_id"))
-    partial
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("neighbor_id"), col("rank"), col("cosine"))
+      heaps
+    }
+    rankedFrame(embs.sparkSession, "cosine", DoubleType, merged)
   }
 
   /** HARD-NEGATIVE mining — the candidate generator for contrastive /
@@ -117,56 +188,37 @@ object Similarity {
     * negatives that move the loss are the most-similar vectors of a
     * DIFFERENT class): for each query, the exact top-k cosine
     * neighbors whose label differs from the query's. Same distributed
-    * shape as [[bruteForceTopK]] — queries (with their labels)
-    * broadcast, per-partition bounded heaps that skip same-label rows,
-    * Q·k·numPartitions candidates to the global rank; at 100 TB the
-    * candidate stage swaps to the IVF/LSH index family and the label
-    * filter rides the probe unchanged. Output carries the negative's
-    * label so a training-pair writer can stratify. */
+    * shape as [[bruteForceTopK]] — queries (with their labels) in the
+    * closure, per-partition bounded heaps that skip same-label rows,
+    * Q·k·numPartitions candidates to the driver's merge; at 100 TB the
+    * candidate stage swaps to the IVF/LSH index family
+    * ([[hardNegativesIvf]]) and the label filter rides the probe
+    * unchanged. Output carries the negative's label so a training-pair
+    * writer can stratify. */
   def hardNegativesTopK(embs: DataFrame, idCol: String, vecCol: String,
                         labelCol: String,
                         queries: Array[(Long, Int, Array[Double])],
                         k: Int): DataFrame = {
-    val spark = embs.sparkSession
-    import spark.implicits._
-    val qb = spark.sparkContext.broadcast(
-      queries.map { case (qid, ql, v) =>
-        (qid, ql, v, math.sqrt(VectorOps.dotSeq(v, v))) })
-    val p = embs.select(col(idCol).cast("long").as("id"),
-      col(labelCol).cast("int").as("lbl"),
-      VectorOps.toDouble(col(vecCol)).as("v")).as[(Long, Int, Array[Double])]
-    val ord = Ordering.Tuple2(Ordering[Double].reverse, Ordering[Long])
-    val partial = p.mapPartitions { iter =>
-      val qs = qb.value
-      val heaps = qs.map(_ => scala.collection.mutable.ArrayBuffer.empty[(Double, Long, Int)])
-      iter.foreach { case (id, lbl, v) =>
+    val qs = queries.map { case (qid, ql, v) => (qid, ql, v, math.sqrt(VectorOps.dotSeq(v, v))) }
+    val rows = scanRows(embs, idCol, vecCol, col(labelCol).cast("int"))
+    val merged = topK("hardNegativesTopK", rows, queries.map(_._1), k, LabeledDesc) { it =>
+      val heaps = qs.map(_ => new BoundedTopK[(Double, Long, Int)](k, LabeledDesc))
+      it.foreach { r =>
+        val id = r.getLong(0)
+        val lbl = r.getInt(2)
+        val v = r.getArray(1).toDoubleArray()
         val n = math.sqrt(VectorOps.dotSeq(v, v))
         var qi = 0
         while (qi < qs.length) {
           val (qid, ql, qv, qn) = qs(qi)
-          if (id != qid && lbl != ql) {
-            val c = VectorOps.dotSeq(qv, v) / (qn * n)
-            val h = heaps(qi)
-            if (h.length < k || ord.lt((c, id), (h.last._1, h.last._2))) {
-              h += ((c, id, lbl))
-              val sorted = h.sortBy(t => (t._1, t._2))(ord)
-              h.clear(); h ++= sorted.take(k)
-            }
-          }
+          if (id != qid && lbl != ql)
+            heaps(qi).offer((VectorOps.dotSeq(qv, v) / (qn * n), id, lbl))
           qi += 1
         }
       }
-      qs.iterator.zipWithIndex.flatMap { case ((qid, _, _, _), qi) =>
-        heaps(qi).iterator.map { case (c, id, lbl) => (qid, id, lbl, c) }
-      }
-    }.toDF("query_id", "neighbor_id", "neighbor_label", "cosine")
-    val w = Window.partitionBy("query_id")
-      .orderBy(col("cosine").desc, col("neighbor_id"))
-    partial
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("neighbor_id"), col("rank"),
-        col("neighbor_label"), col("cosine"))
+      heaps
+    }
+    labeledFrame(embs.sparkSession, merged)
   }
 
   /** kNN CLASSIFICATION — weak labeling by neighbor vote: each query
@@ -180,75 +232,40 @@ object Similarity {
     * weak-labeling setting the unlabeled rows must not vote.
     *
     * Same distributed shape as [[bruteForceTopK]] — queries + their
-    * id set broadcast, per-partition bounded heaps, Q·k·partitions
-    * candidate rows to the global rank; the vote is a Q·k-bounded
-    * aggregate, ties break toward the SMALLER label (deterministic).
-    * At 100 TB the candidate stage swaps to the IVF/LSH index family
-    * and the vote rides the probe output unchanged. Output:
-    * (query_id, true_label, pred_label, n_votes, correct) — `correct`
-    * an Int flag (1 iff true_label = pred_label), not a boolean. */
+    * id set in the closure, per-partition bounded heaps,
+    * Q·k·partitions candidates to the driver's merge; the vote runs on
+    * the driver over Q·k rows, ties break toward the SMALLER label
+    * (deterministic). At 100 TB the candidate stage swaps to the
+    * IVF/LSH index family ([[knnClassifyIvf]]) and the vote rides the
+    * probe output unchanged. Output: (query_id, true_label,
+    * pred_label, n_votes, correct), ordered by query_id — `correct` an
+    * Int flag (1 iff true_label = pred_label), not a boolean. */
   def knnClassify(embs: DataFrame, idCol: String, vecCol: String,
                   labelCol: String,
                   queries: Array[(Long, Int, Array[Double])],
                   k: Int): DataFrame = {
-    val spark = embs.sparkSession
-    import spark.implicits._
-    val qidSet = queries.map(_._1).toSet
-    val qb = spark.sparkContext.broadcast(
-      queries.map { case (qid, ql, v) =>
-        (qid, ql, v, math.sqrt(VectorOps.dotSeq(v, v))) })
-    val qs2 = spark.sparkContext.broadcast(qidSet)
-    val p = embs.select(col(idCol).cast("long").as("id"),
-      col(labelCol).cast("int").as("lbl"),
-      VectorOps.toDouble(col(vecCol)).as("v")).as[(Long, Int, Array[Double])]
-    val ord = Ordering.Tuple2(Ordering[Double].reverse, Ordering[Long])
-    val partial = p.mapPartitions { iter =>
-      val qs = qb.value
-      val excluded = qs2.value
-      val heaps = qs.map(_ => scala.collection.mutable.ArrayBuffer.empty[(Double, Long, Int)])
-      iter.foreach { case (id, lbl, v) =>
+    val excluded = queries.map(_._1).toSet
+    val qs = queries.map { case (qid, _, v) => (qid, v, math.sqrt(VectorOps.dotSeq(v, v))) }
+    val rows = scanRows(embs, idCol, vecCol, col(labelCol).cast("int"))
+    val merged = topK("knnClassify", rows, queries.map(_._1), k, LabeledDesc) { it =>
+      val heaps = qs.map(_ => new BoundedTopK[(Double, Long, Int)](k, LabeledDesc))
+      it.foreach { r =>
+        val id = r.getLong(0)
         if (!excluded.contains(id)) {
+          val lbl = r.getInt(2)
+          val v = r.getArray(1).toDoubleArray()
           val n = math.sqrt(VectorOps.dotSeq(v, v))
           var qi = 0
           while (qi < qs.length) {
-            val (_, _, qv, qn) = qs(qi)
-            val c = VectorOps.dotSeq(qv, v) / (qn * n)
-            val h = heaps(qi)
-            if (h.length < k || ord.lt((c, id), (h.last._1, h.last._2))) {
-              h += ((c, id, lbl))
-              val sorted = h.sortBy(t => (t._1, t._2))(ord)
-              h.clear(); h ++= sorted.take(k)
-            }
+            val (_, qv, qn) = qs(qi)
+            heaps(qi).offer((VectorOps.dotSeq(qv, v) / (qn * n), id, lbl))
             qi += 1
           }
         }
       }
-      qs.iterator.zipWithIndex.flatMap { case ((qid, _, _, _), qi) =>
-        heaps(qi).iterator.map { case (c, id, lbl) => (qid, id, lbl, c) }
-      }
-    }.toDF("query_id", "neighbor_id", "neighbor_label", "cosine")
-    val w = Window.partitionBy("query_id")
-      .orderBy(col("cosine").desc, col("neighbor_id"))
-    val votes = partial
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .groupBy("query_id", "neighbor_label")
-      .agg(count(lit(1)).as("n_votes"))
-    val pick = Window.partitionBy("query_id")
-      .orderBy(col("n_votes").desc, col("neighbor_label"))
-    val pred = votes
-      .withColumn("rk", row_number().over(pick))
-      .filter(col("rk") === 1)
-      .select(col("query_id"), col("neighbor_label").as("pred_label"),
-        col("n_votes"))
-    val truth = spark.createDataset(
-      queries.toSeq.map { case (qid, ql, _) => (qid, ql) })
-      .toDF("query_id", "true_label")
-    pred.join(broadcast(truth), "query_id")
-      .select(col("query_id"), col("true_label"), col("pred_label"),
-        col("n_votes"),
-        (col("true_label") === col("pred_label")).cast("int").as("correct"))
-      .orderBy("query_id")
+      heaps
+    }
+    voteFrame(embs.sparkSession, queries, merged)
   }
 
   /** Exact top-k MAXIMUM-INNER-PRODUCT neighbors for each query
@@ -256,42 +273,31 @@ object Similarity {
     * with a dot-product objective (e.g. dual-encoder retrievers),
     * where the cosine's norm division would re-rank away the learned
     * magnitude signal. Same distributed shape as [[bruteForceTopK]]:
-    * queries broadcast, per-partition bounded heaps, only
-    * Q·k·numPartitions candidates shuffle to the global rank. The dot
-    * is the identical left-to-right [[VectorOps.dotSeq]] fold the
-    * DuckDB oracle's `list_sum(list_transform(...))` computes, so
-    * scores hash-match bit-for-bit. Output: (query_id, neighbor_id,
-    * rank, dot); self-matches excluded; ties break toward the lower
-    * neighbor id. */
+    * queries in the closure, per-partition bounded heaps, only
+    * Q·k·numPartitions candidates to the driver's merge. The dot is
+    * the identical left-to-right [[VectorOps.dotSeq]] fold the DuckDB
+    * oracle's `list_sum(list_transform(...))` computes, so scores
+    * hash-match bit-for-bit. Output: (query_id, neighbor_id, rank,
+    * dot); self-matches excluded; ties break toward the lower neighbor
+    * id. */
   def mipsTopK(embs: DataFrame, idCol: String, vecCol: String,
                queries: Array[(Long, Array[Double])], k: Int): DataFrame = {
-    val spark = embs.sparkSession
-    import spark.implicits._
-    val qb = spark.sparkContext.broadcast(queries)
-    val p = embs.select(col(idCol).cast("long").as("id"),
-      VectorOps.toDouble(col(vecCol)).as("v")).as[(Long, Array[Double])]
-    val partial = p.mapPartitions { iter =>
-      val qs = qb.value
-      val ord = Ordering.Tuple2(Ordering[Double].reverse, Ordering[Long])
-      val heaps = qs.map(_ => new graft.functions.BoundedTopK[(Double, Long)](k, ord))
-      iter.foreach { case (id, v) =>
+    val merged = topK("mipsTopK", scanRows(embs, idCol, vecCol), queries.map(_._1), k,
+        ScoreDesc) { rows =>
+      val heaps = queries.map(_ => new BoundedTopK[(Double, Long)](k, ScoreDesc))
+      rows.foreach { r =>
+        val id = r.getLong(0)
+        val v = r.getArray(1).toDoubleArray()
         var qi = 0
-        while (qi < qs.length) {
-          val (qid, qv) = qs(qi)
+        while (qi < queries.length) {
+          val (qid, qv) = queries(qi)
           if (id != qid) heaps(qi).offer((VectorOps.dotSeq(qv, v), id))
           qi += 1
         }
       }
-      qs.iterator.zipWithIndex.flatMap { case ((qid, _), qi) =>
-        heaps(qi).iterator.map { case (d, id) => (qid, id, d) }
-      }
-    }.toDF("query_id", "neighbor_id", "dot")
-    val w = Window.partitionBy("query_id")
-      .orderBy(col("dot").desc, col("neighbor_id"))
-    partial
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("neighbor_id"), col("rank"), col("dot"))
+      heaps
+    }
+    rankedFrame(embs.sparkSession, "dot", DoubleType, merged)
   }
 
   /** Symmetric per-vector INT8 quantization with round-half-up:
@@ -321,26 +327,22 @@ object Similarity {
     * rounding step for the hash gate to trip on). Ties break toward
     * the lower neighbor id, self-matches excluded.
     *
-    * Same distributed shape as [[bruteForceTopK]] (broadcast queries,
-    * per-partition bounded heaps, global rank over Q·k·partitions
-    * rows); the quantization is per-row work fused into the scan
-    * pass. At 100 TB the int8 codes are what you'd actually keep hot
-    * — spec pins recall ≥ 0.6 of exact cosine top-k at k = 5
-    * (measured 0.64 with truncation, ~0.7 with the round-half-up). */
+    * Same distributed shape as [[bruteForceTopK]] (queries in the
+    * closure, per-partition bounded heaps, driver merge over
+    * Q·k·partitions candidates); the quantization is per-row work
+    * fused into the scan pass. At 100 TB the int8 codes are what you'd
+    * actually keep hot — spec pins recall ≥ 0.6 of exact cosine top-k
+    * at k = 5 (measured 0.64 with truncation, ~0.7 with the
+    * round-half-up). */
   def quantTopK(embs: DataFrame, idCol: String, vecCol: String,
                 queries: Array[(Long, Array[Double])], k: Int): DataFrame = {
-    val spark = embs.sparkSession
-    import spark.implicits._
-    val qb = spark.sparkContext.broadcast(
-      queries.map { case (qid, v) => (qid, quantizeInt8(v)) })
-    val p = embs.select(col(idCol).cast("long").as("id"),
-      VectorOps.toDouble(col(vecCol)).as("v")).as[(Long, Array[Double])]
-    val partial = p.mapPartitions { iter =>
-      val qs = qb.value
-      val ord = Ordering.Tuple2(Ordering[Long].reverse, Ordering[Long])
-      val heaps = qs.map(_ => new graft.functions.BoundedTopK[(Long, Long)](k, ord))
-      iter.foreach { case (id, v) =>
-        val qv = quantizeInt8(v)
+    val qs = queries.map { case (qid, v) => (qid, quantizeInt8(v)) }
+    val merged = topK("quantTopK", scanRows(embs, idCol, vecCol), queries.map(_._1), k,
+        IntScoreDesc) { rows =>
+      val heaps = qs.map(_ => new BoundedTopK[(Long, Long)](k, IntScoreDesc))
+      rows.foreach { r =>
+        val id = r.getLong(0)
+        val qv = quantizeInt8(r.getArray(1).toDoubleArray())
         var qi = 0
         while (qi < qs.length) {
           val (qid, qq) = qs(qi)
@@ -353,16 +355,9 @@ object Similarity {
           qi += 1
         }
       }
-      qs.iterator.zipWithIndex.flatMap { case ((qid, _), qi) =>
-        heaps(qi).iterator.map { case (s, id) => (qid, id, s) }
-      }
-    }.toDF("query_id", "neighbor_id", "score")
-    val w = Window.partitionBy("query_id")
-      .orderBy(col("score").desc, col("neighbor_id"))
-    partial
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("neighbor_id"), col("rank"), col("score"))
+      heaps
+    }
+    rankedFrame(embs.sparkSession, "score", LongType, merged)
   }
 
   /** Deterministic INTEGER hyperplanes: L tables × bits planes with
@@ -542,39 +537,59 @@ object Similarity {
     }
   }
 
-  /** Probe a built index: each query ranks only the candidates in its
-    * `nProbe` nearest cells by exact cosine — a probe touches
-    * ~nProbe/nCells of the corpus and never retrains. The explicit
+  /** The `nProbe` cells whose centers are nearest `qv` (squared
+    * distance, ties toward the lower cell). */
+  private def nearestCells(centers: Array[Array[Double]], qv: Array[Double],
+                           nProbe: Int): Array[Int] =
+    centers.zipWithIndex
+      .map { case (c, cid) => (VectorOps.sqdistSeq(qv, c), cid) }
+      .sortBy { case (d, cid) => (d, cid) }
+      .take(nProbe)
+      .map(_._2)
+
+  /** For each cell of `index`, the indices of the queries that probe
+    * it; and the rows (id, v, cell, extra...) of the probed cells. The
     * cell filter prunes partitions when the index is disk-resident
     * ([[writeIndex]] layout). */
+  private def probedRows(index: IvfIndex, qvs: Array[Array[Double]], nProbe: Int,
+                         extra: Column*): (Array[Array[Int]], RDD[InternalRow]) = {
+    val byCell = Array.fill(index.centers.length)(Array.newBuilder[Int])
+    for (qi <- qvs.indices; c <- nearestCells(index.centers, qvs(qi), nProbe)) byCell(c) += qi
+    val probing = byCell.map(_.result())
+    val rows = index.cells
+      .filter(col("cell").isin(probing.indices.filter(probing(_).nonEmpty): _*))
+      .select(Seq(col("id").cast("long"), VectorOps.toDouble(col("v")),
+        col("cell").cast("int")) ++ extra: _*)
+      .queryExecution.toRdd
+    (probing, rows)
+  }
+
+  /** Probe a built index: each query ranks only the candidates in its
+    * `nProbe` nearest cells by exact cosine — a probe touches
+    * ~nProbe/nCells of the corpus and never retrains. One job over the
+    * probed cells' rows (the family NOTE at [[bruteForceTopK]]): each
+    * row is scored against the queries that probe its cell. */
   def probe(index: IvfIndex, queries: Array[(Long, Array[Double])],
             k: Int, nProbe: Int = 4): DataFrame = {
-    val spark = index.cells.sparkSession
-    import spark.implicits._
-    val probes = queries.flatMap { case (qid, qv) =>
-      index.centers.zipWithIndex
-        .map { case (c, cid) => (VectorOps.sqdistSeq(qv, c), cid) }
-        .sortBy { case (d, cid) => (d, cid) }
-        .take(nProbe)
-        .map { case (_, cid) => (qid, qv, math.sqrt(VectorOps.dotSeq(qv, qv)), cid) }
-    }.toSeq
-    val qdf = probes.toDF("query_id", "qv", "qn", "cell")
-    val neededCells = probes.map(_._4).distinct
-    val scored = index.cells
-      .filter(col("cell").isin(neededCells: _*))
-      .join(broadcast(qdf), Seq("cell"))
-      .filter(col("id") =!= col("query_id"))
-      .select(col("query_id"), col("qv"), col("qn"), col("id"), col("v"))
-      .as[(Long, Array[Double], Double, Long, Array[Double])]
-      .map { case (qid, qv, qn, id, v) =>
-        (qid, id, VectorOps.dotSeq(qv, v) / (qn * math.sqrt(VectorOps.dotSeq(v, v))))
-      }.toDF("query_id", "neighbor_id", "cosine")
-    val w = Window.partitionBy("query_id")
-      .orderBy(col("cosine").desc, col("neighbor_id"))
-    scored
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("neighbor_id"), col("rank"), col("cosine"))
+    val qs = queries.map { case (qid, qv) => (qid, qv, math.sqrt(VectorOps.dotSeq(qv, qv))) }
+    val (probing, rows) = probedRows(index, queries.map(_._2), nProbe)
+    val merged = topK("probe", rows, queries.map(_._1), k, ScoreDesc) { it =>
+      val heaps = qs.map(_ => new BoundedTopK[(Double, Long)](k, ScoreDesc))
+      it.foreach { r =>
+        val id = r.getLong(0)
+        val v = r.getArray(1).toDoubleArray()
+        val n = math.sqrt(VectorOps.dotSeq(v, v))
+        val qis = probing(r.getInt(2))
+        var j = 0
+        while (j < qis.length) {
+          val (qid, qv, qn) = qs(qis(j))
+          if (id != qid) heaps(qis(j)).offer((VectorOps.dotSeq(qv, v) / (qn * n), id))
+          j += 1
+        }
+      }
+      heaps
+    }
+    rankedFrame(index.cells.sparkSession, "cosine", DoubleType, merged)
   }
 
   /** CORPUS-WIDE kNN GRAPH, cell-bounded (r12): every vector's top-k
@@ -623,109 +638,93 @@ object Similarity {
       .select(col("vec_id"), col("neighbor_id"), col("rank"), col("cosine"))
   }
 
-  /** LABELED IVF probe candidates — the shared candidate stage of
-    * [[hardNegativesIvf]] and [[knnClassifyIvf]] (r11 verdict task 5:
-    * both exact operators' scaladocs promise "at scale the label
-    * filter rides the IVF/LSH probe"; this IS that probe): [[probe]]'s
-    * exact shape — driver-side nProbe-nearest-cell selection for the
-    * Q-bounded query batch, cell-pruned candidate scan, broadcast
-    * query frame — plus the corpus label attached by an id-keyed join
-    * (on a cluster, `label` would be a column OF the persisted index,
-    * making the join a no-op; the plan is unchanged by that swap).
-    * Emits every candidate with both labels so each caller applies
-    * its own filter — work is Q·(nProbe/nCells)·corpus, linear at any
-    * scale because the query batch is bounded. */
-  private def labeledProbeCands(index: IvfIndex, labels: DataFrame,
-                                idCol: String, labelCol: String,
-                                queries: Array[(Long, Int, Array[Double])],
-                                nProbe: Int): DataFrame = {
-    val spark = index.cells.sparkSession
-    import spark.implicits._
-    val probes = queries.flatMap { case (qid, ql, qv) =>
-      index.centers.zipWithIndex
-        .map { case (c, cid) => (VectorOps.sqdistSeq(qv, c), cid) }
-        .sortBy { case (d, cid) => (d, cid) }
-        .take(nProbe)
-        .map { case (_, cid) => (qid, ql, qv, math.sqrt(VectorOps.dotSeq(qv, qv)), cid) }
-    }.toSeq
-    val qdf = probes.toDF("query_id", "qlabel", "qv", "qn", "cell")
-    val neededCells = probes.map(_._5).distinct
-    val lb = labels.select(col(idCol).cast("long").as("id"),
-      col(labelCol).cast("int").as("lbl"))
-    index.cells
-      .filter(col("cell").isin(neededCells: _*))
-      .join(lb, "id")
-      .join(broadcast(qdf), Seq("cell"))
-      .filter(col("id") =!= col("query_id"))
-      .select(col("query_id"), col("qlabel"), col("qv"), col("qn"),
-        col("id"), col("lbl"), col("v"))
-      .as[(Long, Int, Array[Double], Double, Long, Int, Array[Double])]
-      .map { case (qid, ql, qv, qn, id, lbl, v) =>
-        (qid, ql, id, lbl,
-          VectorOps.dotSeq(qv, v) / (qn * math.sqrt(VectorOps.dotSeq(v, v))))
-      }.toDF("query_id", "qlabel", "neighbor_id", "neighbor_label", "cosine")
-  }
+  /** `index` with the corpus label as a column of its cells (id, v,
+    * cell, `labelCol`), by an id-keyed join. A caller serving many
+    * probes holds this once (`SimilarityQueries` persists it) and
+    * passes it as the index: [[hardNegativesIvf]] and [[knnClassifyIvf]]
+    * then read the label from the index and join nothing per call. */
+  def withLabels(index: IvfIndex, labels: DataFrame, idCol: String,
+                 labelCol: String): IvfIndex =
+    index.copy(cells = index.cells.join(
+      labels.select(col(idCol).cast("long").as("id"), col(labelCol)), "id"))
+
+  /** `index` if its cells carry `labelCol`, else [[withLabels]]. */
+  private def labeled(index: IvfIndex, labels: DataFrame, idCol: String,
+                      labelCol: String): IvfIndex =
+    if (index.cells.columns.contains(labelCol)) index
+    else withLabels(index, labels, idCol, labelCol)
 
   /** HARD-NEGATIVE mining through the PERSISTED IVF index — the scale
     * form [[hardNegativesTopK]]'s scaladoc promises: candidates come
-    * from each query's nProbe nearest cells ([[labeledProbeCands]]),
-    * the label filter rides the probe, the rank stage is unchanged.
-    * Recall is the index's (a negative outside the probed cells is
-    * not a candidate), so the declared query carries its own oracle
+    * from each query's nProbe nearest cells ([[probe]]'s scan), the
+    * label filter rides the probe, the merge is unchanged. Recall is
+    * the index's (a negative outside the probed cells is not a
+    * candidate), so the declared query carries its own oracle
     * replaying build + probe + filter end to end. Same output shape
-    * as the exact operator. */
+    * as the exact operator; the label as [[labeled]] reads it. */
   def hardNegativesIvf(index: IvfIndex, labels: DataFrame, idCol: String,
                        labelCol: String,
                        queries: Array[(Long, Int, Array[Double])],
                        k: Int, nProbe: Int = 4): DataFrame = {
-    val cand = labeledProbeCands(index, labels, idCol, labelCol, queries, nProbe)
-      .filter(col("neighbor_label") =!= col("qlabel"))
-    val w = Window.partitionBy("query_id")
-      .orderBy(col("cosine").desc, col("neighbor_id"))
-    cand
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("neighbor_id"), col("rank"),
-        col("neighbor_label"), col("cosine"))
+    val qs = queries.map { case (qid, ql, v) => (qid, ql, v, math.sqrt(VectorOps.dotSeq(v, v))) }
+    val (probing, rows) = probedRows(labeled(index, labels, idCol, labelCol),
+      queries.map(_._3), nProbe, col(labelCol).cast("int"))
+    val merged = topK("hardNegativesIvf", rows, queries.map(_._1), k, LabeledDesc) { it =>
+      val heaps = qs.map(_ => new BoundedTopK[(Double, Long, Int)](k, LabeledDesc))
+      it.foreach { r =>
+        val id = r.getLong(0)
+        val lbl = r.getInt(3)
+        val v = r.getArray(1).toDoubleArray()
+        val n = math.sqrt(VectorOps.dotSeq(v, v))
+        val qis = probing(r.getInt(2))
+        var j = 0
+        while (j < qis.length) {
+          val (qid, ql, qv, qn) = qs(qis(j))
+          if (id != qid && lbl != ql)
+            heaps(qis(j)).offer((VectorOps.dotSeq(qv, v) / (qn * n), id, lbl))
+          j += 1
+        }
+      }
+      heaps
+    }
+    labeledFrame(index.cells.sparkSession, merged)
   }
 
   /** kNN weak labeling through the PERSISTED IVF index — the scale
     * form [[knnClassify]]'s scaladoc promises: the voter pool is the
     * probed cells' occupants minus the whole query batch (unlabeled
     * rows must not vote, exactly as in the exact operator), the
-    * majority vote rides the k-bounded probe output unchanged. Output:
-    * (query_id, true_label, pred_label, n_votes, correct). */
+    * majority vote rides the k-bounded probe output unchanged. The
+    * label is read as [[labeled]] says. Output: (query_id,
+    * true_label, pred_label, n_votes, correct), ordered by query_id. */
   def knnClassifyIvf(index: IvfIndex, labels: DataFrame, idCol: String,
                      labelCol: String,
                      queries: Array[(Long, Int, Array[Double])],
                      k: Int, nProbe: Int = 4): DataFrame = {
-    val spark = index.cells.sparkSession
-    import spark.implicits._
-    val qids = queries.map(q => java.lang.Long.valueOf(q._1)).toSeq
-    val cand = labeledProbeCands(index, labels, idCol, labelCol, queries, nProbe)
-      .filter(!col("neighbor_id").isin(qids: _*))
-    val w = Window.partitionBy("query_id")
-      .orderBy(col("cosine").desc, col("neighbor_id"))
-    val votes = cand
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .groupBy("query_id", "neighbor_label")
-      .agg(count(lit(1)).as("n_votes"))
-    val pick = Window.partitionBy("query_id")
-      .orderBy(col("n_votes").desc, col("neighbor_label"))
-    val pred = votes
-      .withColumn("rk", row_number().over(pick))
-      .filter(col("rk") === 1)
-      .select(col("query_id"), col("neighbor_label").as("pred_label"),
-        col("n_votes"))
-    val truth = spark.createDataset(
-      queries.toSeq.map { case (qid, ql, _) => (qid, ql) })
-      .toDF("query_id", "true_label")
-    pred.join(broadcast(truth), "query_id")
-      .select(col("query_id"), col("true_label"), col("pred_label"),
-        col("n_votes"),
-        (col("true_label") === col("pred_label")).cast("int").as("correct"))
-      .orderBy("query_id")
+    val excluded = queries.map(_._1).toSet
+    val qs = queries.map { case (_, _, qv) => (qv, math.sqrt(VectorOps.dotSeq(qv, qv))) }
+    val (probing, rows) = probedRows(labeled(index, labels, idCol, labelCol),
+      queries.map(_._3), nProbe, col(labelCol).cast("int"))
+    val merged = topK("knnClassifyIvf", rows, queries.map(_._1), k, LabeledDesc) { it =>
+      val heaps = qs.map(_ => new BoundedTopK[(Double, Long, Int)](k, LabeledDesc))
+      it.foreach { r =>
+        val id = r.getLong(0)
+        if (!excluded.contains(id)) {
+          val lbl = r.getInt(3)
+          val v = r.getArray(1).toDoubleArray()
+          val n = math.sqrt(VectorOps.dotSeq(v, v))
+          val qis = probing(r.getInt(2))
+          var j = 0
+          while (j < qis.length) {
+            val (qv, qn) = qs(qis(j))
+            heaps(qis(j)).offer((VectorOps.dotSeq(qv, v) / (qn * n), id, lbl))
+            j += 1
+          }
+        }
+      }
+      heaps
+    }
+    voteFrame(index.cells.sparkSession, queries, merged)
   }
 
   /** IVF-PQ probe — the production pairing: IVF bounds WHICH vectors
@@ -746,11 +745,7 @@ object Similarity {
     val dim = codebooks.map(_.head.length).sum
     val sub = dim / m
     val probes = queries.flatMap { case (qid, qv) =>
-      index.centers.zipWithIndex
-        .map { case (c, cid) => (VectorOps.sqdistSeq(qv, c), cid) }
-        .sortBy { case (d, cid) => (d, cid) }
-        .take(nProbe)
-        .map { case (_, cid) => (qid, qv, cid) }
+      nearestCells(index.centers, qv, nProbe).map(cid => (qid, qv, cid))
     }.toSeq
     val qdf = probes.toDF("query_id", "qv", "cell")
     val neededCells = probes.map(_._3).distinct
@@ -775,16 +770,6 @@ object Similarity {
       .filter(col("rank") <= k)
       .select(col("query_id"), col("neighbor_id"), col("rank"), col("sqdist"))
   }
-
-  /** IVF (inverted-file) approximate top-k: one-shot convenience over
-    * [[buildIndex]] + [[probe]]. Callers issuing repeated query
-    * batches should hold the [[IvfIndex]] instead. */
-  def ivfTopK(embs: DataFrame, idCol: String, vecCol: String,
-              queries: Array[(Long, Array[Double])], k: Int,
-              nCells: Int = 16, nProbe: Int = 4, trainIters: Int = 5,
-              trainSample: Int = 10000, seed: Long = 42L): DataFrame =
-    probe(buildIndex(embs, idCol, vecCol, nCells, trainIters, trainSample, seed),
-      queries, k, nProbe)
 
   /** Approximate top-k via multi-table sign-LSH; same output shape as
     * [[bruteForceTopK]]. Candidates = vectors sharing any (table,
@@ -1668,11 +1653,8 @@ object Similarity {
     val spark = index.cells.sparkSession
     import spark.implicits._
     val probes = evals.flatMap { case (qid, qv) =>
-      index.centers.zipWithIndex
-        .map { case (c, cid) => (VectorOps.sqdistSeq(qv, c), cid) }
-        .sortBy { case (d, cid) => (d, cid) }
-        .take(nProbe)
-        .map { case (_, cid) => (qid, qv, math.sqrt(VectorOps.dotSeq(qv, qv)), cid) }
+      val qn = math.sqrt(VectorOps.dotSeq(qv, qv))
+      nearestCells(index.centers, qv, nProbe).map(cid => (qid, qv, qn, cid))
     }.toSeq
     val qdf = probes.toDF("eval_id", "qv", "qn", "cell")
     val neededCells = probes.map(_._4).distinct

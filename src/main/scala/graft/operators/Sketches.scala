@@ -123,8 +123,8 @@ object Sketches {
     * the newcomer plus one decrement from each of the k counters — so
     * an item's counter can be zeroed at most n/(k+1) times). A tiny
     * mutable class rather than a closure so the executor-side fused
-    * pass (candidates + stream length in ONE scan) and the pure
-    * law-tested wrapper below share the exact eviction code. */
+    * pass (candidates + stream length in ONE scan) and PropertiesSpec's
+    * law share the exact eviction code. */
   final class MisraGries(k: Int) {
     private val counts = scala.collection.mutable.HashMap.empty[String, Long]
     def offer(t: String): Unit =
@@ -136,13 +136,6 @@ object Sketches {
           counts.filterInPlace((_, c) => c > 0)
       }
     def candidates: Iterator[String] = counts.keysIterator
-  }
-
-  /** Pure one-shot wrapper over [[MisraGries]] (PropertiesSpec law). */
-  def misraGries(it: Iterator[String], k: Int): Iterator[String] = {
-    val mg = new MisraGries(k)
-    it.foreach(mg.offer)
-    mg.candidates
   }
 
   /** HEAVY HITTERS — all tokens with share ≥ shareNum/shareDen of the

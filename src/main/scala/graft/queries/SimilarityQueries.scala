@@ -37,9 +37,8 @@ object SimilarityQueries {
   /** Maximum-inner-product top-k ([[Similarity.mipsTopK]]) — the
     * dot-product-objective twin of `ann_bruteforce_topk` (dual-encoder
     * retrievers rank by dot, not cosine; the two orderings genuinely
-    * differ on this fixture because vector norms vary). Same
-    * broadcast-queries/bounded-heap plan; dot folds left-to-right in
-    * both engines. */
+    * differ on this fixture because vector norms vary). Same one-job
+    * bounded-heap plan; dot folds left-to-right in both engines. */
   def mips(s: SparkSession, dir: String): DataFrame =
     Similarity.mipsTopK(Tables.embeddings(s, dir), "vec_id", "embedding",
         queryVecs(s, dir), K)
@@ -629,7 +628,7 @@ object SimilarityQueries {
     * overlap in integer arithmetic, recall in permille. Both sides
     * exclude the query's own vertex, so the sets compare directly.
     * The exact side is one [[Similarity.bruteForceTopK]] pass
-    * (broadcast queries, bounded heaps — Q·n, linear); the oracle
+    * (one job of bounded heaps — Q·n, linear); the oracle
     * replays the search CTEs + the bruteforce rank and counts the
     * overlap, so the eval cannot drift from either surface. */
   def graphSearchRecallQ(s: SparkSession, dir: String): DataFrame = {
@@ -1459,8 +1458,8 @@ object SimilarityQueries {
     * the PCA family's loop: train (`ann_pca_component`/`_top2`) →
     * apply (`ann_pca_project`) → PRICE (this query). The projection
     * is the zero-shuffle broadcast-literal scan of
-    * `ann_pca_project`; both rank sides are broadcast-queries
-    * bounded-heap kernels — Q·n compute, Q·k·partitions shuffle,
+    * `ann_pca_project`; both rank sides are one-job bounded-heap
+    * kernels — Q·n compute, Q·k·partitions candidates to the driver,
     * linear at any corpus. */
   def dimTruncRecallQ(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
@@ -2646,6 +2645,16 @@ object SimilarityQueries {
       .collect()
       .map(r => (r.getLong(0), r.getInt(1), r.getSeq[Double](2).toArray))
 
+  /** [[ivfIndex]] with the label as a column of its cells
+    * ([[Similarity.withLabels]]), joined once per session and persisted.
+    * The IVF label queries also pass these cells as the label source,
+    * so a call joins nothing and reads no table for its labels. */
+  private def labeledIvfIndex(s: SparkSession, dir: String): Similarity.IvfIndex = {
+    val index = ivfIndex(s, dir)
+    index.copy(cells = FixtureCache.frame(s, "ann_ivf_labeled_cells", dir, "embeddings")(
+      Similarity.withLabels(index, Tables.embeddings(s, dir), "vec_id", "label").cells))
+  }
+
   def hardNegatives(s: SparkSession, dir: String): DataFrame =
     Similarity.hardNegativesTopK(Tables.embeddings(s, dir), "vec_id",
         "embedding", "label", queryVecsLabeled(s, dir), K)
@@ -2659,19 +2668,23 @@ object SimilarityQueries {
     * filter rides the probe of the SAME index every ann_ivf* query
     * serves. Oracle = the proven IVF build CTEs + label-filtered
     * probe ranking. */
-  def hardNegativesIvfQ(s: SparkSession, dir: String): DataFrame =
-    Similarity.hardNegativesIvf(ivfIndex(s, dir), Tables.embeddings(s, dir),
-        "vec_id", "label", queryVecsLabeled(s, dir), K, IvfNProbe)
+  def hardNegativesIvfQ(s: SparkSession, dir: String): DataFrame = {
+    val index = labeledIvfIndex(s, dir)
+    Similarity.hardNegativesIvf(index, index.cells, "id", "label",
+        queryVecsLabeled(s, dir), K, IvfNProbe)
       .select(col("query_id"), col("neighbor_id"), col("rank"),
         col("neighbor_label"), round(col("cosine"), 6).as("cosine"))
       .orderBy("query_id", "rank")
+  }
 
   /** kNN weak labeling through the persisted IVF index
     * ([[Similarity.knnClassifyIvf]]): voters = probed cells minus the
     * query batch, majority vote unchanged. */
-  def knnClassifyIvfQ(s: SparkSession, dir: String): DataFrame =
-    Similarity.knnClassifyIvf(ivfIndex(s, dir), Tables.embeddings(s, dir),
-      "vec_id", "label", queryVecsLabeled(s, dir), ClassifyK, IvfNProbe)
+  def knnClassifyIvfQ(s: SparkSession, dir: String): DataFrame = {
+    val index = labeledIvfIndex(s, dir)
+    Similarity.knnClassifyIvf(index, index.cells, "id", "label",
+      queryVecsLabeled(s, dir), ClassifyK, IvfNProbe)
+  }
 
   /** kNN weak labeling ([[Similarity.knnClassify]]): the first Q
     * vectors classified by the majority label of their 7 nearest

@@ -1,0 +1,216 @@
+package graft
+
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.functions._
+
+import graft.functions.VectorOps
+import graft.operators.Similarity
+import graft.operators.Similarity.IvfIndex
+
+/** The window formulation of the bounded-heap top-k family: every
+  * candidate scored into a frame and ranked by a Catalyst
+  * `row_number()` over (score desc, neighbor_id) per query_id, the kNN
+  * vote a grouped count plus a second window. It is the definition the
+  * one-job operators of [[graft.operators.Similarity]] must reproduce
+  * row for row, and the shape of their DuckDB oracles. The IVF probes
+  * are their old plans verbatim. The flat operators' old plans also
+  * pruned each partition with a heap before the window; the heaps are
+  * left out here, because they only dropped candidates the window
+  * drops, and they ordered −0.0 below 0.0 where the window ties them. */
+object LegacyTopK {
+
+  private def ranked(scored: DataFrame, score: String, k: Int,
+                     payload: String*): DataFrame = {
+    val w = Window.partitionBy("query_id").orderBy(col(score).desc, col("neighbor_id"))
+    scored
+      .withColumn("rank", row_number().over(w))
+      .filter(col("rank") <= k)
+      .select((Seq("query_id", "neighbor_id", "rank") ++ payload :+ score).map(col): _*)
+  }
+
+  private def vote(cands: DataFrame, queries: Array[(Long, Int, Array[Double])],
+                   k: Int): DataFrame = {
+    val spark = cands.sparkSession
+    import spark.implicits._
+    val w = Window.partitionBy("query_id")
+      .orderBy(col("cosine").desc, col("neighbor_id"))
+    val votes = cands
+      .withColumn("rank", row_number().over(w))
+      .filter(col("rank") <= k)
+      .groupBy("query_id", "neighbor_label")
+      .agg(count(lit(1)).as("n_votes"))
+    val pick = Window.partitionBy("query_id")
+      .orderBy(col("n_votes").desc, col("neighbor_label"))
+    val pred = votes
+      .withColumn("rk", row_number().over(pick))
+      .filter(col("rk") === 1)
+      .select(col("query_id"), col("neighbor_label").as("pred_label"),
+        col("n_votes"))
+    val truth = spark.createDataset(
+      queries.toSeq.map { case (qid, ql, _) => (qid, ql) })
+      .toDF("query_id", "true_label")
+    pred.join(broadcast(truth), "query_id")
+      .select(col("query_id"), col("true_label"), col("pred_label"),
+        col("n_votes"),
+        (col("true_label") === col("pred_label")).cast("int").as("correct"))
+      .orderBy("query_id")
+  }
+
+  private def labeledRows(embs: DataFrame, idCol: String, vecCol: String, labelCol: String) = {
+    val spark = embs.sparkSession
+    import spark.implicits._
+    embs.select(col(idCol).cast("long").as("id"), col(labelCol).cast("int").as("lbl"),
+      VectorOps.toDouble(col(vecCol)).as("v")).as[(Long, Int, Array[Double])]
+  }
+
+  private def rows(embs: DataFrame, idCol: String, vecCol: String) = {
+    val spark = embs.sparkSession
+    import spark.implicits._
+    embs.select(col(idCol).cast("long").as("id"),
+      VectorOps.toDouble(col(vecCol)).as("v")).as[(Long, Array[Double])]
+  }
+
+  private def norm(v: Array[Double]): Double = math.sqrt(VectorOps.dotSeq(v, v))
+
+  def bruteForceTopK(embs: DataFrame, idCol: String, vecCol: String,
+                     queries: Array[(Long, Array[Double])], k: Int): DataFrame = {
+    val spark = embs.sparkSession
+    import spark.implicits._
+    val qs = queries.map { case (qid, v) => (qid, v, norm(v)) }
+    val scored = rows(embs, idCol, vecCol).flatMap { case (id, v) =>
+      qs.iterator.filter(_._1 != id).map { case (qid, qv, qn) =>
+        (qid, id, VectorOps.dotSeq(qv, v) / (qn * norm(v)))
+      }
+    }.toDF("query_id", "neighbor_id", "cosine")
+    ranked(scored, "cosine", k)
+  }
+
+  def mipsTopK(embs: DataFrame, idCol: String, vecCol: String,
+               queries: Array[(Long, Array[Double])], k: Int): DataFrame = {
+    val spark = embs.sparkSession
+    import spark.implicits._
+    val scored = rows(embs, idCol, vecCol).flatMap { case (id, v) =>
+      queries.iterator.filter(_._1 != id).map { case (qid, qv) =>
+        (qid, id, VectorOps.dotSeq(qv, v))
+      }
+    }.toDF("query_id", "neighbor_id", "dot")
+    ranked(scored, "dot", k)
+  }
+
+  def quantTopK(embs: DataFrame, idCol: String, vecCol: String,
+                queries: Array[(Long, Array[Double])], k: Int): DataFrame = {
+    val spark = embs.sparkSession
+    import spark.implicits._
+    val qs = queries.map { case (qid, v) => (qid, Similarity.quantizeInt8(v)) }
+    val scored = rows(embs, idCol, vecCol).flatMap { case (id, v) =>
+      val qv = Similarity.quantizeInt8(v)
+      qs.iterator.filter(_._1 != id).map { case (qid, qq) =>
+        (qid, id, qq.indices.foldLeft(0L)((s, j) => s + qq(j) * qv(j)))
+      }
+    }.toDF("query_id", "neighbor_id", "score")
+    ranked(scored, "score", k)
+  }
+
+  def hardNegativesTopK(embs: DataFrame, idCol: String, vecCol: String, labelCol: String,
+                        queries: Array[(Long, Int, Array[Double])], k: Int): DataFrame = {
+    val spark = embs.sparkSession
+    import spark.implicits._
+    val qs = queries.map { case (qid, ql, v) => (qid, ql, v, norm(v)) }
+    val scored = labeledRows(embs, idCol, vecCol, labelCol).flatMap { case (id, lbl, v) =>
+      qs.iterator.filter(q => q._1 != id && q._2 != lbl).map { case (qid, _, qv, qn) =>
+        (qid, id, lbl, VectorOps.dotSeq(qv, v) / (qn * norm(v)))
+      }
+    }.toDF("query_id", "neighbor_id", "neighbor_label", "cosine")
+    ranked(scored, "cosine", k, "neighbor_label")
+  }
+
+  def knnClassify(embs: DataFrame, idCol: String, vecCol: String, labelCol: String,
+                  queries: Array[(Long, Int, Array[Double])], k: Int): DataFrame = {
+    val spark = embs.sparkSession
+    import spark.implicits._
+    val excluded = queries.map(_._1).toSet
+    val qs = queries.map { case (qid, _, v) => (qid, v, norm(v)) }
+    val scored = labeledRows(embs, idCol, vecCol, labelCol)
+      .filter(r => !excluded.contains(r._1))
+      .flatMap { case (id, lbl, v) =>
+        qs.iterator.map { case (qid, qv, qn) =>
+          (qid, id, lbl, VectorOps.dotSeq(qv, v) / (qn * norm(v)))
+        }
+      }.toDF("query_id", "neighbor_id", "neighbor_label", "cosine")
+    vote(scored, queries, k)
+  }
+
+  def probe(index: IvfIndex, queries: Array[(Long, Array[Double])],
+            k: Int, nProbe: Int = 4): DataFrame = {
+    val spark = index.cells.sparkSession
+    import spark.implicits._
+    val probes = queries.flatMap { case (qid, qv) =>
+      index.centers.zipWithIndex
+        .map { case (c, cid) => (VectorOps.sqdistSeq(qv, c), cid) }
+        .sortBy { case (d, cid) => (d, cid) }
+        .take(nProbe)
+        .map { case (_, cid) => (qid, qv, math.sqrt(VectorOps.dotSeq(qv, qv)), cid) }
+    }.toSeq
+    val qdf = probes.toDF("query_id", "qv", "qn", "cell")
+    val neededCells = probes.map(_._4).distinct
+    val scored = index.cells
+      .filter(col("cell").isin(neededCells: _*))
+      .join(broadcast(qdf), Seq("cell"))
+      .filter(col("id") =!= col("query_id"))
+      .select(col("query_id"), col("qv"), col("qn"), col("id"), col("v"))
+      .as[(Long, Array[Double], Double, Long, Array[Double])]
+      .map { case (qid, qv, qn, id, v) =>
+        (qid, id, VectorOps.dotSeq(qv, v) / (qn * math.sqrt(VectorOps.dotSeq(v, v))))
+      }.toDF("query_id", "neighbor_id", "cosine")
+    ranked(scored, "cosine", k)
+  }
+
+  /** The labeled probe candidates: [[probe]]'s cell-pruned scan with the
+    * corpus label attached by an id-keyed join, every candidate with
+    * both labels. */
+  private def labeledProbeCands(index: IvfIndex, labels: DataFrame,
+                                idCol: String, labelCol: String,
+                                queries: Array[(Long, Int, Array[Double])],
+                                nProbe: Int): DataFrame = {
+    val spark = index.cells.sparkSession
+    import spark.implicits._
+    val probes = queries.flatMap { case (qid, ql, qv) =>
+      index.centers.zipWithIndex
+        .map { case (c, cid) => (VectorOps.sqdistSeq(qv, c), cid) }
+        .sortBy { case (d, cid) => (d, cid) }
+        .take(nProbe)
+        .map { case (_, cid) => (qid, ql, qv, math.sqrt(VectorOps.dotSeq(qv, qv)), cid) }
+    }.toSeq
+    val qdf = probes.toDF("query_id", "qlabel", "qv", "qn", "cell")
+    val neededCells = probes.map(_._5).distinct
+    val lb = labels.select(col(idCol).cast("long").as("id"),
+      col(labelCol).cast("int").as("lbl"))
+    index.cells
+      .filter(col("cell").isin(neededCells: _*))
+      .join(lb, "id")
+      .join(broadcast(qdf), Seq("cell"))
+      .filter(col("id") =!= col("query_id"))
+      .select(col("query_id"), col("qlabel"), col("qv"), col("qn"),
+        col("id"), col("lbl"), col("v"))
+      .as[(Long, Int, Array[Double], Double, Long, Int, Array[Double])]
+      .map { case (qid, ql, qv, qn, id, lbl, v) =>
+        (qid, ql, id, lbl,
+          VectorOps.dotSeq(qv, v) / (qn * math.sqrt(VectorOps.dotSeq(v, v))))
+      }.toDF("query_id", "qlabel", "neighbor_id", "neighbor_label", "cosine")
+  }
+
+  def hardNegativesIvf(index: IvfIndex, labels: DataFrame, idCol: String, labelCol: String,
+                       queries: Array[(Long, Int, Array[Double])],
+                       k: Int, nProbe: Int = 4): DataFrame =
+    ranked(labeledProbeCands(index, labels, idCol, labelCol, queries, nProbe)
+      .filter(col("neighbor_label") =!= col("qlabel")), "cosine", k, "neighbor_label")
+
+  def knnClassifyIvf(index: IvfIndex, labels: DataFrame, idCol: String, labelCol: String,
+                     queries: Array[(Long, Int, Array[Double])],
+                     k: Int, nProbe: Int = 4): DataFrame = {
+    val qids = queries.map(q => java.lang.Long.valueOf(q._1)).toSeq
+    vote(labeledProbeCands(index, labels, idCol, labelCol, queries, nProbe)
+      .filter(!col("neighbor_id").isin(qids: _*)), queries, k)
+  }
+}

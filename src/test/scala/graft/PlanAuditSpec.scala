@@ -178,8 +178,9 @@ class PlanAuditSpec extends SparkSpec {
     val coll = batchQueries("text_collocations").queryExecution.executedPlan.toString
     assert(coll.contains("TakeOrderedAndProject"),
       s"collocations top-N should plan as TakeOrdered:\n$coll")
-    // MIPS: corpus is scored in mapPartitions against broadcast
-    // queries — the only exchange feeds the Q·k-bounded global rank
+    // MIPS: the corpus is scored in one job with the queries in the
+    // task closure; the query sorts a local one-partition frame, so
+    // there is no join and no exchange
     val mips = batchQueries("ann_mips_topk").queryExecution.executedPlan.toString
     assert(!mips.contains("Join"),
       s"mips scoring must not join the corpus:\n$mips")

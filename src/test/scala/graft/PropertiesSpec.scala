@@ -389,7 +389,11 @@ class PropertiesSpec extends SparkSpec {
       val heavy = toks.groupBy(identity)
         .collect { case (t, xs) if xs.size.toLong * (k + 1) > n => t }.toSet
       val cands = toks.grouped(math.max(1, n / parts))
-        .flatMap(g => graft.operators.Sketches.misraGries(g.iterator, k)).toSet
+        .flatMap { g =>
+          val mg = new graft.operators.Sketches.MisraGries(k)
+          g.foreach(mg.offer)
+          mg.candidates
+        }.toSet
       assert(heavy.subsetOf(cands), s"k=$k parts=$parts missing=${heavy -- cands}")
     }
   }

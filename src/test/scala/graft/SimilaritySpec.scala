@@ -109,9 +109,15 @@ class SimilaritySpec extends SparkSpec {
     }
   }
 
+  /** IVF approximate top-k in one shot: [[Similarity.buildIndex]] +
+    * [[Similarity.probe]] with the default build params. */
+  private def ivfTopK(embs: org.apache.spark.sql.DataFrame,
+                      qs: Array[(Long, Array[Double])], k: Int) =
+    Similarity.probe(Similarity.buildIndex(embs, "vec_id", "embedding"), qs, k)
+
   test("IVF top-k recall vs brute force is >= 0.5 with 4/16 probes") {
     val exact = topSets(Similarity.bruteForceTopK(emb, "vec_id", "embedding", queries, 5))
-    val approx = topSets(Similarity.ivfTopK(emb, "vec_id", "embedding", queries, 5))
+    val approx = topSets(ivfTopK(emb, queries, 5))
     val hits = exact.map { case (q, s) => (approx.getOrElse(q, Set.empty) & s).size }.sum
     val total = exact.values.map(_.size).sum
     assert(hits.toDouble / total >= 0.5, s"recall $hits/$total")
@@ -126,8 +132,7 @@ class SimilaritySpec extends SparkSpec {
       assert(a === b)
       assert(a.nonEmpty)
       // one-shot wrapper agrees with explicit build+probe
-      val oneShot = Similarity.ivfTopK(emb, "vec_id", "embedding", queries, 5)
-        .collect().map(_.toSeq).toSeq
+      val oneShot = ivfTopK(emb, queries, 5).collect().map(_.toSeq).toSeq
       assert(oneShot === a)
     } finally idx.unpersist()
   }
