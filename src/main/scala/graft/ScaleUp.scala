@@ -600,10 +600,9 @@ object ScaleUp {
     // plus the serving composition the declared ann_graph_search
     // pins at nCells=16: nProbe=1 entry probe + 3 undirected beam
     // rounds. The row's ratio is graph-build-dominated (corpus-
-    // linear); the probe+search-only wall is printed separately —
-    // per-query work is Q·beam·deg lookups + Q·|visited| rescores,
-    // CORPUS-FREE by construction, so it should sit near-flat
-    // between 10× and 100×.
+    // linear); the probe+search-only wall is printed separately — a
+    // search reads corpus and edges once, then each round scores and
+    // looks up only ≤ Q·beam·deg newly visited ids.
     "ann_graph_search_auto" -> ((s: SparkSession, dir: String) => {
       val (e, idx, seed) = autoSeedUnion(s, dir)
       val edges = graft.operators.Similarity.nnDescentRound(

@@ -25,7 +25,10 @@ import graft.util.Jobs.described
   *    kernel per point and keeps k exact vector-sum buffers
   *    ([[graft.functions.ExactVectorSumAgg]]), which the driver merges
   *    (each task's k partials = Flink's combiner, the driver merge =
-  *    its reduce) — no plan is analysed or shuffled per round;
+  *    its reduce) — no plan is analysed or shuffled per round. The
+  *    loop ([[lloyd]]) trains m models at once over m component ranges
+  *    of the same vectors, which is how PQ trains its m codebooks with
+  *    one read and one job per round;
   *  - [[accumulate]], [[average]] and the streaming model, which
   *    return frames or run inside a stream, use the same aggregate as
   *    the `exact_vec_sum` column function;
@@ -135,7 +138,7 @@ object KMeansNative {
       init: Array[Array[Double]],
       maxIter: Int = 10,
       tol: Double = 1e-6): FitResult =
-    lloyd("fit", points, vecCol, init, maxIter, tol)
+    lloyd("fit", points, vecCol, Seq(Model(0, init, sliced = false)), maxIter, tol).head
 
   /** Lloyd's loop ([[lloyd]]) for exactly `iters` rounds. Each round's
     * sums are exact ([[graft.functions.ExactVectorSumAgg]]: component i
@@ -149,46 +152,64 @@ object KMeansNative {
     * would break the oracle. Edge cases as in [[fit]]. */
   def fitExact(points: DataFrame, vecCol: String, init: Array[Array[Double]],
                iters: Int): Array[Array[Double]] =
-    lloyd("fitExact", points, vecCol, init, iters, Double.NegativeInfinity).centers
+    lloyd("fitExact", points, vecCol, Seq(Model(0, init, sliced = false)), iters,
+      Double.NegativeInfinity).head.centers
 
-  /** Vector components one round pushes through one task. A round
-    * task runs the argmin and the exact sum at ~10 M values/s, so 64 k
-    * values ≈ 6 ms of task compute — on the order of one task's
-    * dispatch. Re-measured on ScaleUp's `kmeans_fit_native` row (10×:
-    * 20 k 64-dim vectors, 4 cores, 4 interleaved runs each) once
-    * rounds stopped planning: median 1.15 s at 16384, 1.17 s at this
-    * value, 1.35 s at 262144 (2.77 s with per-round plans), so it
-    * holds. */
+  /** Vector components one round pushes through one task, counted over
+    * all of a loop's models. A round task runs the argmin and the exact
+    * sum at ~10 M values/s, so 64 k values ≈ 6 ms of task compute — on
+    * the order of one task's dispatch. Re-measured on ScaleUp's
+    * `kmeans_fit_native` row (10×: 20 k 64-dim vectors, 4 cores, 4
+    * interleaved runs each) once rounds stopped planning: median 1.15 s
+    * at 16384, 1.17 s at this value, 1.35 s at 262144 (2.77 s with
+    * per-round plans), so it holds. */
   private val RoundValuesPerTask = 65536L
 
-  /** One task's share of a round: per cluster, the point count, the
-    * sqdist sum and the exact vector-sum buffer. */
+  /** One model of a [[lloyd]] loop: centers `init` over the components
+    * [from, from + d) of each vector, d the centers' length. A `sliced`
+    * model reads them as Catalyst's `slice(v, from + 1, d)` does, so a
+    * vector shorter than from + d joins none of its clusters; an
+    * unsliced one ([[fit]], [[fitExact]]: from 0) reads the whole
+    * vector, which must have length d. */
+  private[graft] final case class Model(from: Int, init: Array[Array[Double]],
+                                        sliced: Boolean = true) {
+    val k: Int = init.length
+    val dim: Int = init(0).length
+    /** Whether a vector of length `len` joins one of its clusters. */
+    def reads(len: Int): Boolean = if (sliced) len >= from + dim else len == dim
+  }
+
+  /** One task's share of a round for one model: per cluster, the point
+    * count, the sqdist sum and the exact vector-sum buffer. */
   private final case class Partial(n: Array[Long], w: Array[Double], s: Array[Array[Long]])
   private object Partial {
     def empty(k: Int): Partial =
       Partial(new Array[Long](k), new Array[Double](k), Array.fill(k)(Array.emptyLongArray))
   }
 
-  /** The Lloyd loop behind [[fit]] and [[fitExact]], MLlib's RDD shape
+  /** The Lloyd loop behind [[fit]], [[fitExact]] and PQ training
+    * (`Similarity.pqTrain`: one model per subspace), MLlib's RDD shape
     * with graft's kernels:
     *  - the points are read ONCE through the plan's `toRdd` into one
     *    array of vectors per partition (null for a null vector),
     *    persisted and coalesced to ~[[RoundValuesPerTask]] components
     *    per task (inputs big enough to use the cluster stay as they are);
-    *  - each round is ONE `mapPartitions…collect` job: one stage, no
-    *    shuffle, no plan to analyse. Each vector goes through
-    *    [[graft.plans.ArgminKernel]] (the `vec_argmin` kernel, so the
-    *    plan's assignments and distances to the bit) into its cluster's
-    *    [[graft.functions.ExactVectorSumAgg]] buffer; the driver merges
-    *    the k-cluster partials with the aggregate's own `merge`/`finish`
-    *    and divides by n.
+    *  - each round is ONE `mapPartitions…collect` job for all models:
+    *    one stage, no shuffle, no plan to analyse. Per model, each
+    *    vector's component range goes through [[graft.plans.ArgminKernel]]
+    *    (the `vec_argmin` kernel, so the plan's assignments and distances
+    *    to the bit) into its cluster's
+    *    [[graft.functions.ExactVectorSumAgg]] buffer, read in place (no
+    *    slice is copied); the driver merges the partials with the
+    *    aggregate's own `merge`/`finish` and divides by n.
+    * The loop stops after `maxIter` rounds or once no center of any
+    * model moved more than `tol`, so every model runs the same rounds.
     * A round's job is described as `KMeansNative.<name> round
     * i/maxIter`; the caller's job description is restored on exit. */
-  private def lloyd(name: String, points: DataFrame, vecCol: String,
-                    init: Array[Array[Double]], maxIter: Int, tol: Double): FitResult = {
+  private[graft] def lloyd(name: String, points: DataFrame, vecCol: String,
+                           models: Seq[Model], maxIter: Int, tol: Double): Seq[FitResult] = {
     val sc = points.sparkSession.sparkContext
-    val k = init.length
-    val dim = init(0).length
+    val ms = models.toArray
     val parts = points.select(VectorOps.toDouble(col(vecCol))).queryExecution.toRdd
       .mapPartitions(rows => Iterator.single(
         rows.map(r => if (r.isNullAt(0)) null else r.getArray(0).copy()).toArray))
@@ -197,56 +218,67 @@ object KMeansNative {
     try {
       val n = described(sc, s"KMeansNative.$name points")(
         parts.map(_.length.toLong).collect().sum)
-      val ideal = math.max(1L, n * dim / RoundValuesPerTask)
+      val ideal = math.max(1L, n * ms.map(_.dim).sum / RoundValuesPerTask)
       val work = if (ideal < parts.getNumPartitions) parts.coalesce(ideal.toInt) else parts
       val agg = new ExactVectorSumAgg
-      var centers = init.map(_.clone())
-      val history = scala.collection.mutable.ArrayBuffer.empty[Double]
+      var centers = ms.map(_.init.map(_.clone()))
+      val history = ms.map(_ => scala.collection.mutable.ArrayBuffer.empty[Double])
       var iter = 0
       var moved = Double.PositiveInfinity
       while (iter < maxIter && !(moved <= tol)) {
-        val flat = centers.flatten
+        val flats = centers.map(_.flatten)
         val total = described(sc, s"KMeansNative.$name round ${iter + 1}/$maxIter")(
-            work.mapPartitions(arrays => Iterator.single(roundPartial(arrays, flat, k, dim)))
+            work.mapPartitions(arrays => Iterator.single(roundPartials(arrays, ms, flats)))
               .collect())
-          .foldLeft(Partial.empty(k)) { (a, b) =>
-            for (c <- 0 until k) {
-              a.n(c) += b.n(c); a.w(c) += b.w(c); a.s(c) = agg.merge(a.s(c), b.s(c))
+          .foldLeft(ms.map(m => Partial.empty(m.k))) { (a, b) =>
+            for (j <- a.indices; c <- 0 until ms(j).k) {
+              a(j).n(c) += b(j).n(c); a(j).w(c) += b(j).w(c)
+              a(j).s(c) = agg.merge(a(j).s(c), b(j).s(c))
             }
             a
           }
-        history += total.w.sum
-        val next = centers.map(_.clone())
-        for (c <- 0 until k if total.n(c) > 0) {
-          val count = total.n(c).toDouble
-          next(c) = agg.finish(total.s(c)).zipWithIndex.map { case (s, d) =>
-            if (s == null) throw new IllegalStateException(
-              s"$name: cluster $c has only null coordinates in component $d")
-            s / count
-          }.toArray
+        val next = centers.map(_.map(_.clone()))
+        for (j <- total.indices) {
+          history(j) += total(j).w.sum
+          for (c <- 0 until ms(j).k if total(j).n(c) > 0) {
+            val count = total(j).n(c).toDouble
+            next(j)(c) = agg.finish(total(j).s(c)).zipWithIndex.map { case (s, d) =>
+              if (s == null) throw new IllegalStateException(
+                s"$name: cluster $c has only null coordinates in component ${ms(j).from + d}")
+              s / count
+            }.toArray
+          }
         }
-        moved = centers.zip(next).map { case (o, nw) =>
-          math.sqrt(o.zip(nw).map { case (a0, b0) => (a0 - b0) * (a0 - b0) }.sum)
+        moved = centers.iterator.zip(next.iterator).flatMap { case (o, nw) =>
+          o.iterator.zip(nw.iterator).map { case (oc, nc) =>
+            math.sqrt(oc.zip(nc).map { case (a0, b0) => (a0 - b0) * (a0 - b0) }.sum)
+          }
         }.foldLeft(0.0)(math.max)
         centers = next
         iter += 1
       }
-      FitResult(centers, history.toSeq, iter)
+      centers.indices.map(j => FitResult(centers(j), history(j).toSeq, iter))
     } finally parts.unpersist()
   }
 
-  /** One task of a round: assign each vector, accumulate its cluster. */
-  private def roundPartial(arrays: Iterator[Array[ArrayData]], flat: Array[Double],
-                           k: Int, dim: Int): Partial = {
+  /** One task of a round: per model, assign each vector's component
+    * range and accumulate its cluster. */
+  private def roundPartials(arrays: Iterator[Array[ArrayData]], ms: Array[Model],
+                            flats: Array[Array[Double]]): Array[Partial] = {
     val agg = new ExactVectorSumAgg
-    val p = Partial.empty(k)
+    val p = ms.map(m => Partial.empty(m.k))
     arrays.foreach(_.foreach { v =>
-      val best = if (v == null) null else ArgminKernel.compute(v, flat, k, dim)
-      if (best != null) {
-        val c = best.getInt(0)
-        p.n(c) += 1
-        p.w(c) += best.getDouble(1)
-        p.s(c) = agg.reduceArray(p.s(c), v)
+      var j = 0
+      while (v != null && j < ms.length) {
+        val m = ms(j)
+        if (m.reads(v.numElements())) {
+          val best = ArgminKernel.compute(v, m.from, flats(j), m.k, m.dim)
+          val c = best.getInt(0)
+          p(j).n(c) += 1
+          p(j).w(c) += best.getDouble(1)
+          p(j).s(c) = agg.reduceArray(p(j).s(c), v, m.from, m.dim)
+        }
+        j += 1
       }
     })
     p

@@ -63,16 +63,15 @@ class ExactVectorSumAgg
     buf
   }
 
-  /** [[reduce]] over Catalyst's internal form of an `array<double>`
-    * value (a null `row` is a null vector), for loops that read rows
-    * straight from a plan's `toRdd`. */
-  def reduceArray(buf0: Array[Long], row: ArrayData): Array[Long] = {
-    if (row == null) return buf0
-    val dim = row.numElements()
+  /** [[reduce]] of the components [from, from + dim) of Catalyst's
+    * internal form of a non-null `array<double>` value, which the caller
+    * has checked it holds, for loops that read rows straight from a
+    * plan's `toRdd`. */
+  def reduceArray(buf0: Array[Long], row: ArrayData, from: Int, dim: Int): Array[Long] = {
     val buf = sized(buf0, dim)
     var i = 0
     while (i < dim) {
-      if (!row.isNullAt(i)) addValue(buf, dim, i, row.getDouble(i))
+      if (!row.isNullAt(from + i)) addValue(buf, dim, i, row.getDouble(from + i))
       i += 1
     }
     buf

@@ -26,16 +26,6 @@ object TextOps {
   def shinglesAll(text: Column, n: Int): Column =
     graft.plans.expressions.word_shingles_all(text, n)
 
-  /** The pure-HOF shingle formulation — semantically identical to
-    * [[shingles]]; kept as the built-ins-only reference for tests. */
-  def shinglesHof(text: Column, n: Int): Column = {
-    val w = words(text)
-    val grams = transform(
-      sequence(lit(0), size(w) - n),
-      i => concat_ws(" ", (0 until n).map(j => element_at(w, i + j + 1)): _*))
-    array_distinct(when(size(w) >= n, grams).otherwise(array()))
-  }
-
   /** 64-bit SimHash over distinct tokens — the reference-free nested-HOF
     * formulation re-evaluates the token-hash array O(64²) per row after
     * Catalyst inlines used-once projections, so this is deliberately a

@@ -2,25 +2,10 @@ package graft.io
 
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 
-/** Output sinks beyond the harness's plain parquet dump: hive-style
-  * partitioned layout (enables partition pruning for downstream
-  * readers) and explicit writer knobs. At 100 TB the partition column
-  * choice IS the read-path index — partition on the columns your
-  * consumers filter by, keep cardinality ≤ ~10⁴ dirs.
+/** Output sinks beyond the harness's plain parquet dump: the
+  * reference CSV, a z-ordered layout and compaction.
   */
 object Sinks {
-
-  /** Partitioned parquet: one directory per distinct partition-column
-    * tuple; downstream `spark.read.parquet(path).filter(pcol === v)`
-    * prunes to matching directories without listing the rest. */
-  def writePartitioned(df: DataFrame, path: String, partitionCols: Seq[String]): Unit =
-    df.write.mode(SaveMode.Overwrite)
-      .partitionBy(partitionCols: _*)
-      .parquet(path)
-
-  /** Read back with partition pruning (schema merges partition dirs). */
-  def readPartitioned(spark: SparkSession, path: String): DataFrame =
-    spark.read.parquet(path)
 
   /** Space-delimited CSV (reference-parity sink, see
     * [[graft.sources.KMeansCsv.writeCsv]]) re-exported here for
@@ -67,12 +52,4 @@ object Sinks {
       .option("maxRecordsPerFile", targetRecordsPerFile)
       .parquet(outPath)
   }
-
-  /** Schema-evolved read: union a directory tree whose files were
-    * written under successive schema versions (columns added over
-    * time) — `mergeSchema` reconciles footers, absent columns read as
-    * null. The write side needs no coordination: each era appends
-    * its own files (SaveMode.Append). */
-  def readEvolved(spark: SparkSession, path: String): DataFrame =
-    spark.read.option("mergeSchema", "true").parquet(path)
 }

@@ -165,14 +165,4 @@ object Quantiles {
             (col("_pos") - col("_klo")) * col("_hi"))
           .as("value"))
   }
-
-  /** Convenience: quantiles of one column pivoted to named columns. */
-  def quantileColumns(df: DataFrame, groupCol: String, valueCol: String,
-                      named: Seq[(String, Double)], buckets: Int = 1 << 20): DataFrame = {
-    val q = exactQuantiles(df, groupCol, valueCol, named.map(_._2), buckets)
-    val agg = named.map { case (name, p) =>
-      max(when(abs(col("q") - p) < 1e-12, col("value"))).as(name)
-    }
-    q.groupBy(groupCol).agg(agg.head, agg.tail: _*)
-  }
 }

@@ -1,14 +1,19 @@
 package graft.operators
 
+import scala.collection.mutable
+import scala.collection.mutable.ArrayBuffer
 import scala.jdk.CollectionConverters._
 
 import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, GraftShims, Row, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.util.SQLOrderingUtil
+import org.apache.spark.sql.catalyst.expressions.Literal
+import org.apache.spark.sql.catalyst.util.{ArrayData, SQLOrderingUtil}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.types._
+import org.apache.spark.storage.StorageLevel
 
 import graft.functions.{BoundedTopK, VectorOps}
 import graft.util.Jobs.described
@@ -845,33 +850,40 @@ object Similarity {
 
   /** Train PQ codebooks: the vector space is split into `m` contiguous
     * subspaces of dim/m dims and each gets its own exact-decimal Lloyd
-    * codebook ([[graft.cluster.KMeansNative.fitExact]], first-k init —
-    * the same bit-deterministic trainer the IVF index and
-    * `kmeans_fit_native` use, so the DuckDB oracle replays training
-    * with the shared unrolled-CTE generator). Returns
+    * codebook — the bit-deterministic trainer the IVF index and
+    * `kmeans_fit_native` use ([[graft.cluster.KMeansNative.fitExact]]'s
+    * rounds), so the DuckDB oracle replays training with the shared
+    * unrolled-CTE generator. All m codebooks train in ONE loop: one
+    * read of the vectors, then `iters` round jobs described
+    * `KMeansNative.pqTrain round i/iters`, each model reading its
+    * component range in place. The init is the first-k rule taken once
+    * on the full vectors and sliced per subspace, which equals the
+    * per-subspace first-k init whenever ids are unique. Returns
     * m × kCodes × (dim/m) codewords — the 100 TB representation: a
     * vector stores m small codes (m bytes at kCodes ≤ 256) instead of
     * dim floats, an 8×dim/m compression with rankable distances. */
   def pqTrain(embs: DataFrame, idCol: String, vecCol: String,
               m: Int, kCodes: Int, iters: Int): Array[Array[Array[Double]]] = {
+    import graft.cluster.KMeansNative
     val p = embs.select(col(idCol).as("vec_id"), VectorOps.toDouble(col(vecCol)).as("v"))
     val dim = p.select(size(col("v"))).first.getInt(0)
     require(dim % m == 0, s"dim $dim must divide into $m subspaces")
     val sub = dim / m
-    Array.tabulate(m) { j =>
-      val sv = p.select(col("vec_id"), slice(col("v"), j * sub + 1, sub).as("v"))
-      val init = graft.cluster.KMeansNative.firstKCenters(sv, "vec_id", "v", kCodes)
-      graft.cluster.KMeansNative.fitExact(sv, "v", init, iters)
-    }
+    val init = KMeansNative.firstKCenters(p, "vec_id", "v", kCodes)
+    val models = Seq.tabulate(m)(j =>
+      KMeansNative.Model(j * sub, init.map(_.slice(j * sub, j * sub + sub))))
+    KMeansNative.lloyd("pqTrain", p, "v", models, iters, Double.NegativeInfinity)
+      .map(_.centers).toArray
   }
 
   /** A built PQ index: the per-subspace codebooks plus the encoded
     * corpus (m small codes per vector — the representation a 100 TB
     * deployment stores instead of raw floats). Build once with
-    * [[buildPqIndex]], probe many times with [[pqProbe]]: training
-    * touches the corpus m×iters times and encode scans it once, so
-    * both must amortize across query batches exactly like the IVF
-    * cell assignment. */
+    * [[loadOrBuildPqIndex]], probe many times with [[pqProbe]]:
+    * training reads the corpus once and runs `iters` rounds over that
+    * read for all m codebooks, and encode scans it once, so both must
+    * amortize across query batches exactly like the IVF cell
+    * assignment. */
   final case class PqIndex(codebooks: Array[Array[Array[Double]]], codes: DataFrame)
 
   /** Encode the corpus against trained codebooks: per-subspace
@@ -997,9 +1009,9 @@ object Similarity {
     * differently (different grouping). A production deployment keeps
     * the LUT form; the semantics (and the ranking) are the same.
     *
-    * Scale shape: train touches the corpus m×iters times (or a
-    * bounded sample at real scale, like IVF); encode is one scan of
-    * compiled argmins; scoring is broadcast-queries × codes with a
+    * Scale shape: train reads the corpus once and makes `iters`
+    * rounds over it (or a bounded sample at real scale, like IVF);
+    * encode is one scan of compiled argmins; scoring is broadcast-queries × codes with a
     * bounded per-query top-k — the stored/shuffled representation is
     * codes, never raw vectors. */
   def pqTopK(embs: DataFrame, idCol: String, vecCol: String,
@@ -1758,11 +1770,12 @@ object Similarity {
     * (identical to the full kernel's bestX output restricted to the
     * sample — spec-pinned in SimilaritySpec).
     *
-    * Linear shape, two broadcast scans + driver arithmetic:
-    *  1. the sampleQ x vectors broadcast against a scan of ALL of Y
+    * Linear shape, two one-job scans ([[sampledTopK]]) + driver
+    * arithmetic:
+    *  1. the sampleQ x vectors against a scan of ALL of Y
     *     (per-partition [[graft.functions.BoundedTopK]] heaps, the
     *     bruteForceTopK law) — each sampled x's true k-NN;
-    *  2. those ≤ sampleQ·k candidate y vectors broadcast against a
+    *  2. those ≤ sampleQ·k candidate y vectors against a
     *     scan of ALL of X — each candidate's true reverse k-NN, which
     *     the ratio margin needs for its y-side neighborhood mean;
     *  3. the margin formula + best-partner selection on the driver
@@ -1818,32 +1831,30 @@ object Similarity {
     best.toDF("x_id", "y_id", "margin_permille")
   }
 
-  /** Broadcast-queries exact top-k kernel for the sampled margin
-    * ground truth: per query, its k max-cosine rows of `corpus`,
-    * returned as driver rows (query, corpus-row, cosine) — callers'
-    * query sets are Q- or Q·k-bounded. `queryFoldsFirst` preserves
-    * the margin family's x-vector-folds-first rule on both call
-    * sites (queries = x-side in stage 1, corpus = x-side in stage
-    * 2), so every cosine is the exact double of the full kernel and
-    * the oracle. No self-exclusion — the two sides come from
-    * disjoint predicates ([[marginKnnMining]]'s contract). */
-  private def sampledTopK(corpus: DataFrame,
-                          queries: Array[(Long, Array[Double])], k: Int,
-                          queryFoldsFirst: Boolean): Array[(Long, Long, Double)] = {
-    val spark = corpus.sparkSession
-    import spark.implicits._
-    val qb = spark.sparkContext.broadcast(
-      queries.map { case (qid, v) => (qid, v, math.sqrt(VectorOps.dotSeq(v, v))) })
+  /** Exact top-k kernel for the sampled margin ground truth: per
+    * query, its k max-cosine rows of `corpus` (id, vector), returned as
+    * driver rows (query, corpus-row, cosine) — callers' query sets are
+    * Q- or Q·k-bounded. One [[topK]] job, queries in the closure.
+    * `queryFoldsFirst` preserves the margin family's
+    * x-vector-folds-first rule on both call sites (queries = x-side in
+    * stage 1, corpus = x-side in stage 2), so every cosine is the exact
+    * double of the full kernel and the oracle. No self-exclusion — the
+    * two sides come from disjoint predicates ([[marginKnnMining]]'s
+    * contract). */
+  private[graft] def sampledTopK(corpus: DataFrame,
+                                 queries: Array[(Long, Array[Double])], k: Int,
+                                 queryFoldsFirst: Boolean): Array[(Long, Long, Double)] = {
+    val qs = queries.map { case (_, v) => (v, math.sqrt(VectorOps.dotSeq(v, v))) }
     val qFirst = queryFoldsFirst
-    val partial = corpus.as[(Long, Array[Double])].mapPartitions { iter =>
-      val qs = qb.value
-      val ord = Ordering.Tuple2(Ordering[Double].reverse, Ordering[Long])
-      val heaps = qs.map(_ => new graft.functions.BoundedTopK[(Double, Long)](k, ord))
-      iter.foreach { case (id, v) =>
+    topK("sampledTopK", corpus.queryExecution.toRdd, queries.map(_._1), k, ScoreDesc) { rows =>
+      val heaps = qs.map(_ => new BoundedTopK[(Double, Long)](k, ScoreDesc))
+      rows.foreach { r =>
+        val id = r.getLong(0)
+        val v = r.getArray(1).toDoubleArray()
         val n = math.sqrt(VectorOps.dotSeq(v, v))
         var qi = 0
         while (qi < qs.length) {
-          val (_, qv, qn) = qs(qi)
+          val (qv, qn) = qs(qi)
           val c =
             if (qFirst) VectorOps.dotSeq(qv, v) / (qn * n)
             else VectorOps.dotSeq(v, qv) / (n * qn)
@@ -1851,200 +1862,253 @@ object Similarity {
           qi += 1
         }
       }
-      qs.iterator.zipWithIndex.flatMap { case ((qid, _, _), qi) =>
-        heaps(qi).iterator.map { case (c, id) => (qid, id, c) }
-      }
-    }.toDF("qid", "id", "cosine")
-    val w = Window.partitionBy("qid").orderBy(col("cosine").desc, col("id"))
-    partial.withColumn("rk", row_number().over(w)).filter(col("rk") <= k)
-      .select(col("qid"), col("id"), col("cosine"))
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
+      heaps
+    }.flatMap { case (qid, cs) => cs.map { case (c, id) => (qid, id, c) } }.toArray
   }
-
-  /** Above this many distinct ids the per-round pruning predicate
-    * switches from an IN pushdown to a plain broadcast join —
-    * a several-thousand-literal In expression costs more in
-    * planning/serialization than the one corpus scan it avoids, and
-    * a bulk-ingest batch amortizes that scan over all its queries
-    * (measured at the 10× insert: 4 000 queries → ~16 k visited ids;
-    * the In-literal plans dominated the loop). */
-  val IsinPushdownMaxIds = 1024
 
   /** GRAPH-NAVIGATED ANN SEARCH — the SEARCH half of the graph-ANN
     * story whose BUILD half is [[knnGraphWithin]] → [[nnDescent]]
     * (HNSW: Malkov & Yashunin, TPAMI 2018; DiskANN: Jayaram
     * Subramanya et al., NeurIPS 2019): greedy traversal of a
     * navigable kNN graph, here as a SYNCHRONOUS fixed-round beam
-    * search so the trajectory is deterministic and
-    * oracle-expressible (the fixed-rounds discipline applied to
-    * best-first search — the papers' priority-queue loops terminate
-    * data-dependently, which no CTE replay can pin).
+    * search so the trajectory is deterministic and oracle-expressible
+    * (the papers' priority-queue loops terminate data-dependently,
+    * which no CTE replay can pin).
     *
     * `entries` seeds each query's visited set (query_id, node rows) —
     * the declared surface seeds with the query's nearest IVF cell's
-    * top members (the coarse-quantizer entry every hybrid
-    * IVF+graph system uses; DiskANN's medoid entry is the
-    * one-global-vertex special case), so the graph walk starts in
-    * the right region and each round recovers true neighbors the
-    * cell probe quantized AWAY — the same cross-cell repair
-    * [[nnDescentRound]] performs at build time, now at query time.
+    * top members (the coarse-quantizer entry of hybrid IVF+graph
+    * systems), so each round recovers true neighbors the cell probe
+    * quantized AWAY — [[nnDescentRound]]'s cross-cell repair at query
+    * time. Round r: the frontier is the `beam` best-scored VISITED
+    * vertices per query (cosine desc under Spark's double order, so
+    * −0.0 equals 0.0 and NaN is largest; null last; id asc — the
+    * window's order); visited ∪= the frontier's neighbors over the
+    * UNDIRECTED edge list (out-edges ∪ reversed edges, the NSW
+    * bidirectional-link convention). After `rounds` rounds the answer
+    * is the top-`k` of the visited set, the query's own vertex
+    * excluded (the [[bruteForceTopK]] convention). A visited vertex
+    * missing from `embs` is never scored, expanded or emitted; entries
+    * of a query id not in `queries` are ignored; query ids must be
+    * distinct.
     *
-    * Round r: the frontier is the `beam` best-scored VISITED vertices
-    * per query (cosine desc, id asc — the global rank order); the
-    * frontier's edges join in their neighbors — the edge list is
-    * navigated UNDIRECTED (out-edges ∪ reversed edges, the NSW
-    * bidirectional-link convention: a kNN digraph's reverse edges
-    * are exactly the "who considers me a neighbor" links that make
-    * hubs navigable); visited ∪= the expansion. After `rounds`
-    * rounds the per-query answer is the top-`k` of the visited set,
-    * the query's own vertex excluded (corpus-member queries would
-    * find themselves at rank 1 — the [[bruteForceTopK]] convention,
-    * so recall compares directly).
+    * Shape ([[graphWalk]], the `KMeansNative.lloyd` skeleton): vectors
+    * (with norms) and undirected edges are read ONCE into persisted
+    * per-partition arrays sorted by id, the query vectors are broadcast
+    * once, and the Q-bounded beam state — visited pairs and their
+    * scores — lives on the DRIVER. Scores carry forward: the frontier
+    * of round r + 1 lies in round r's frontier plus the pairs first
+    * visited in round r, so job 0 scores the entry pairs and fetches
+    * their nodes' adjacency, and job r only the pairs first visited in
+    * round r and their new nodes' adjacency. A search is `rounds` + 1
+    * shuffle-free jobs whose closures hold only ids; after the one read
+    * each round costs O(ids asked · log partition size).
     *
-    * Distributed shape (the serving law at 100 TB): the beam state —
-    * (query, node) visited pairs, ≤ Q·(|entries| + rounds·beam·deg)
-    * rows, deg ≤ 2k undirected on average (Σdeg = 2nk exactly) — is
-    * Q-BOUNDED, so it lives on the DRIVER (the k·d-centers
-    * discipline: bounded iterative state never rides an executor
-    * frame) and each round pushes the visited/frontier id lists DOWN
-    * as `IN` predicates: the corpus scoring scan and the edge-list
-    * expansion scan are both row-group-PRUNED point lookups (parquet
-    * min/max stats; the cell-partitioned disk layout at scale), not
-    * corpus scans. CORPUS SIZE appears in no round's work — the
-    * property that makes graph search the query-serving path once
-    * the graph is built (the build amortizes under [[nnDescent]]'s
-    * production law). The visited set is re-scored each round for
-    * oracle parity — a disclosed constant-factor trade (≤ ~200
-    * rows/query at the declared params; production scores only the
-    * new expansion and carries scores forward).
+    * Cosine folds query-vector-first (dot(q,v)/(qn·vn), vn = √dot(v,v),
+    * as `vec_dot` folds), bit-identical to the exact baseline and the
+    * oracle: a dimension-mismatched or null vector scores null, and a
+    * zero denominator raises what Spark's `Divide` raises under the
+    * session's ANSI setting (null without ANSI).
     *
-    * Two bounded jobs per round (frontier rank + expansion fetch —
-    * the driver-loop floor every iterative surface here pays); the
-    * final RANKED frame is returned LAZY over one pruned scan +
-    * broadcast state — callers that re-read it memoize or persist
-    * (the declared query's FixtureCache pattern). Cosine folds
-    * query-vector-first (dot(q,v)/(qn·vn) — the [[bruteForceTopK]] /
-    * oracle fold), so scores are bit-identical to the exact
-    * baseline's. */
-  /** `emitFilter` (r16, the DELETE stage): a predicate applied to the
-    * final ranked emission ONLY — navigation is untouched, so
-    * tombstoned nodes keep ROUTING the walk (the FreshDiskANN
-    * discipline: a deleted point stays a navigable waypoint until
-    * compaction physically removes it) but never leave the store as
-    * answers; the top-k ranks over the passing nodes. The default
-    * `lit(true)` is the classic search — existing callers and hashes
-    * unchanged. */
+    * `emitFilter` (the DELETE stage) filters the final emission ONLY,
+    * over (query_id, node, cosine): tombstoned nodes keep ROUTING the
+    * walk (the FreshDiskANN discipline) but never leave as answers; the
+    * top-k ranks over the passing nodes. It runs on the driver over a
+    * local frame, where Catalyst folds the filter without a job. The
+    * result is a local one-partition frame. */
   def graphSearch(edges: DataFrame, embs: DataFrame, idCol: String,
                   vecCol: String, queries: Array[(Long, Array[Double])],
                   entries: DataFrame, k: Int, beam: Int, rounds: Int,
-                  isinMaxIds: Int = IsinPushdownMaxIds,
                   emitFilter: Column = lit(true)): DataFrame = {
+    val spark = embs.sparkSession
+    graphSearchRows(edges, embs, idCol, vecCol, queries, entries, k, beam, rounds,
+      emitFilter) match {
+      case Some(rows) => spark.createDataFrame(rows.asJava, GraphSearchSchema).coalesce(1)
+      case None => emptyGraphSearch(spark)
+    }
+  }
+
+  /** A search's schema: the window plan's, whose cosine is nullable. */
+  private val GraphSearchSchema = StructType(Seq(
+    StructField("query_id", LongType, nullable = false),
+    StructField("neighbor_id", LongType, nullable = false),
+    StructField("rank", IntegerType, nullable = false),
+    StructField("cosine", DoubleType)))
+
+  /** The typed empty result of a batch without entries. */
+  private def emptyGraphSearch(spark: SparkSession): DataFrame =
+    localFrame(spark, GraphSearchSchema.map(f => f.name -> f.dataType), Nil)
+
+  /** [[graphSearch]]'s ranked rows, or None for a batch without entries. */
+  private def graphSearchRows(edges: DataFrame, embs: DataFrame, idCol: String,
+                              vecCol: String, queries: Array[(Long, Array[Double])],
+                              entries: DataFrame, k: Int, beam: Int, rounds: Int,
+                              emitFilter: Column): Option[Seq[Row]] = {
     require(k >= 1 && beam >= 1 && rounds >= 1,
       "k, beam and rounds must all be >= 1")
+    graphWalk(edges, embs, idCol, vecCol, queries, entries, beam, rounds).map { scored =>
+      val spark = embs.sparkSession
+      val cands = for ((pairs, qi) <- scored.iterator.zipWithIndex;
+                       qid = queries(qi)._1; (c, node) <- pairs if node != qid)
+        yield Row(qid, node, c)
+      val kept =
+        if (GraftShims.expression(emitFilter) == Literal.TrueLiteral) cands.toSeq
+        else spark.createDataFrame(cands.toSeq.asJava, StructType(Seq(
+            GraphSearchSchema(0), StructField("node", LongType, nullable = false),
+            GraphSearchSchema(3))))
+          .filter(emitFilter).collect().toSeq
+      kept.groupBy(_.getLong(0)).toSeq.sortBy(_._1).flatMap { case (qid, rows) =>
+        rows.map(r => (r.get(2).asInstanceOf[java.lang.Double], r.getLong(1)))
+          .sorted(CosineDesc).take(k).zipWithIndex
+          .map { case ((c, node), i) => Row(qid, node, i + 1, c) }
+      }
+    }
+  }
+
+  /** The window's order over nullable cosines: nulls last. */
+  private val CosineDesc: Ordering[(java.lang.Double, Long)] = (a, b) =>
+    if (a._1 != null && b._1 != null) scoreDesc(a._1, a._2, b._1, b._2)
+    else if (a._1 != null) -1
+    else if (b._1 != null) 1
+    else java.lang.Long.compare(a._2, b._2)
+
+  /** One persisted partition of a [[graphWalk]] input, sorted by
+    * `ids`: points (`vecs` with their `norms`; null for a null
+    * vector) or undirected edges (`nbs`, ids being the sources). */
+  private final case class GraphPart(ids: Array[Long], vecs: Array[ArrayData],
+                                     norms: Array[Double], nbs: Array[Long]) {
+    /** The indices holding `id`. */
+    def indicesOf(id: Long): Range = {
+      var lo = 0
+      var hi = ids.length
+      while (lo < hi) { val mid = (lo + hi) >>> 1; if (ids(mid) < id) lo = mid + 1 else hi = mid }
+      var end = lo
+      while (end < ids.length && ids(end) == id) end += 1
+      lo until end
+    }
+  }
+
+  /** Left-to-right dot product over Catalyst's array form, as
+    * `vec_dot` folds it (a null element reads as 0.0). */
+  private def dotArray(q: Array[Double], v: ArrayData): Double = {
+    var s = 0.0; var i = 0
+    while (i < q.length) { s += q(i) * v.getDouble(i); i += 1 }
+    s
+  }
+
+  /** The beam walk behind [[graphSearch]]: per query (in `queries`
+    * order), its scored visited pairs as (cosine, node), or None when
+    * `entries` is empty. See [[graphSearch]] for the round shape. */
+  private def graphWalk(edges: DataFrame, embs: DataFrame, idCol: String,
+                        vecCol: String, queries: Array[(Long, Array[Double])],
+                        entries: DataFrame, beam: Int, rounds: Int)
+      : Option[Array[ArrayBuffer[(java.lang.Double, Long)]]] = {
+    val seeds = entries.select(col("query_id").cast("long"), col("node").cast("long"))
+      .collect().map(r => (r.getLong(0), r.getLong(1))).distinct
+    if (seeds.isEmpty) return None
+    val qIndex = queries.iterator.map(_._1).zipWithIndex.toMap
+    require(qIndex.size == queries.length, "query ids must be distinct")
     val spark = embs.sparkSession
-    import spark.implicits._
-    val e0 = edges.select(col("vec_id").cast("long").as("src"),
-      col("neighbor_id").cast("long").as("nb"))
-    val e = e0.union(e0.select(col("nb").as("src"), col("src").as("nb")))
-    val p = embs.select(col(idCol).cast("long").as("node"),
-        VectorOps.toDouble(col(vecCol)).as("v"))
-      .withColumn("vn",
-        sqrt(graft.plans.expressions.vec_dot(col("v"), col("v"))))
-    val qdf = queries.map { case (qid, qv) =>
-      (qid, qv, math.sqrt(VectorOps.dotSeq(qv, qv)))
-    }.toSeq.toDF("query_id", "qv", "qn")
-    // score the driver-held visited pairs: broadcast the bounded
-    // state; the corpus access dispatches on the DISTINCT-ID count
-    // (the size-dispatch idiom, fourth application): a small id set
-    // becomes an IN predicate pushed into the scan (row-group-pruned
-    // point lookups — the Q≈10 serving path), while a large batch's
-    // ids (bulk ingest: thousands of queries) would make a
-    // several-thousand-literal In expression the planner chokes on —
-    // there the plain broadcast join is the right plan, its one
-    // corpus scan amortized over the whole batch
-    def prunedBy(df: DataFrame, idCol2: String, ids: Array[Long]): DataFrame =
-      if (ids.length <= isinMaxIds)
-        df.filter(col(idCol2).isin(ids.map(Long.box): _*))
-      else df
-    def scored(visited: Array[(Long, Long)]): DataFrame = {
-      val ids = visited.map(_._2).distinct
-      // broadcast pinned (r18): the visited pairs are Q-bounded driver
-      // state; past ~10 MB of local-relation estimate (a wide bulk
-      // chunk) the planner would otherwise flip this to a sort-merge
-      // join and SHUFFLE THE CORPUS side — the exact inversion the
-      // Q-bounded design exists to prevent
-      broadcast(visited.toSeq.toDF("query_id", "node"))
-        .join(prunedBy(p, "node", ids), Seq("node"))
-        .join(broadcast(qdf), Seq("query_id"))
-        .select(col("query_id"), col("node"),
-          (graft.plans.expressions.vec_dot(col("qv"), col("v")) /
-            (col("qn") * col("vn"))).as("cosine"))
+    val sc = spark.sparkContext
+    val ansi = SQLConf.get.ansiEnabled
+    val points = embs.select(col(idCol).cast("long"), VectorOps.toDouble(col(vecCol)))
+      .queryExecution.toRdd.mapPartitions { rows =>
+        val ps = rows.filter(!_.isNullAt(0))
+          .map(r => (r.getLong(0), if (r.isNullAt(1)) null else r.getArray(1).copy()))
+          .toArray.sortBy(_._1)
+        val vecs = ps.map(_._2)
+        Iterator.single(GraphPart(ps.map(_._1), vecs,
+          vecs.map(v => if (v == null) Double.NaN else math.sqrt(dotArray(v.toDoubleArray(), v))),
+          null))
+      }
+    val adjacency = edges.select(col("vec_id").cast("long"), col("neighbor_id").cast("long"))
+      .queryExecution.toRdd.mapPartitions { rows =>
+        val es = rows.filter(r => !r.isNullAt(0) && !r.isNullAt(1))
+          .flatMap(r => Iterator((r.getLong(0), r.getLong(1)), (r.getLong(1), r.getLong(0))))
+          .toArray.sortBy(_._1)
+        Iterator.single(GraphPart(es.map(_._1), null, null, es.map(_._2)))
+      }
+    val parts = points.union(adjacency).setName("Similarity.graphSearch inputs")
+      .persist(StorageLevel.MEMORY_AND_DISK)
+    val qb = sc.broadcast(queries.map { case (_, qv) => (qv, math.sqrt(VectorOps.dotSeq(qv, qv))) })
+    try {
+      val seen = Array.fill(queries.length)(mutable.LongMap.empty[Unit])
+      val scored = Array.fill(queries.length)(ArrayBuffer.empty[(java.lang.Double, Long)])
+      val adj = mutable.LongMap.empty[ArrayBuffer[Long]]
+      var pending = seeds.flatMap { case (qid, node) => qIndex.get(qid).map(qi => (qi, node)) }
+      pending.foreach { case (qi, node) => seen(qi)(node) = () }
+      var r = 0
+      while (r <= rounds) {
+        val fetch = if (r == rounds) Array.emptyLongArray
+          else pending.map(_._2).distinct.filterNot(adj.contains)
+        if (pending.nonEmpty || fetch.nonEmpty) {
+          val (pq, pn) = (pending.map(_._1), pending.map(_._2))
+          val out = described(sc, s"Similarity.graphSearch round $r/$rounds")(
+            parts.mapPartitions(_.map { part =>
+              if (part.vecs != null) {
+                val qs = qb.value
+                val got = ArrayBuffer.empty[(Int, Long, java.lang.Double)]
+                var i = 0
+                while (i < pq.length) {
+                  val (qv, qn) = qs(pq(i))
+                  for (j <- part.indicesOf(pn(i))) {
+                    val v = part.vecs(j)
+                    val den = qn * part.norms(j)
+                    val c: java.lang.Double =
+                      if (v == null || (!ansi && den == 0.0) || v.numElements() != qv.length) null
+                      else if (den == 0.0) throw GraftShims.divideByZero()
+                      else dotArray(qv, v) / den
+                    got += ((pq(i), pn(i), c))
+                  }
+                  i += 1
+                }
+                (got.toArray, Array.empty[(Long, Long)])
+              } else
+                (Array.empty[(Int, Long, java.lang.Double)],
+                  fetch.flatMap(node => part.indicesOf(node).map(j => (node, part.nbs(j)))))
+            }).collect())
+          fetch.foreach(adj(_) = ArrayBuffer.empty[Long])
+          out.foreach { case (ss, es) =>
+            ss.foreach { case (qi, node, c) => scored(qi) += ((c, node)) }
+            es.foreach { case (node, nb) => adj(node) += nb }
+          }
+        }
+        if (r < rounds) {
+          val next = ArrayBuffer.empty[(Int, Long)]
+          for (qi <- scored.indices;
+               f <- scored(qi).sorted(CosineDesc).iterator.take(beam).map(_._2).distinct;
+               nb <- adj(f) if !seen(qi).contains(nb)) {
+            seen(qi)(nb) = ()
+            next += ((qi, nb))
+          }
+          pending = next.toArray
+        }
+        r += 1
+      }
+      Some(scored)
+    } finally {
+      parts.unpersist()
+      qb.destroy()
     }
-    val w = Window.partitionBy("query_id")
-      .orderBy(col("cosine").desc, col("node"))
-    var visited: Array[(Long, Long)] = entries
-      .select(col("query_id").cast("long"), col("node").cast("long"))
-      .distinct().collect().map(r => (r.getLong(0), r.getLong(1)))
-    // a query whose entry probe found nothing (e.g. it is the sole
-    // member of its nearest cell) simply emits no rows; a batch where
-    // EVERY query is entry-less returns a well-typed empty frame —
-    // the streaming twin relies on this being uniform with the batch
-    // surface under any micro-batch split (r14 review)
-    if (visited.isEmpty)
-      return Seq.empty[(Long, Long, Int, Double)]
-        .toDF("query_id", "neighbor_id", "rank", "cosine")
-    // ONE bounded job per round (r18, guide §2.4/§5 driver round-trips
-    // — half the classic two): the frontier rank no longer collects to
-    // the driver and re-enters as a local relation; the SAME window +
-    // filter feeds the expansion join IN-PLAN, and only the expansion
-    // rows come back. The edge scan prunes on the full VISITED id set
-    // (driver-known, a superset of the frontier ids the plan selects)
-    // instead of the frontier ids — same point-lookup row-group
-    // pruning, one round earlier in the plan; join equality on
-    // node = src decides membership, so pruning width cannot change
-    // rows. The frontier side is explicitly broadcast (≤ Q·beam rows,
-    // Q-bounded) so the corpus-sized edge list is never shuffled —
-    // the property the collected local relation used to provide
-    // implicitly. Frontier selection, scoring expression and the
-    // visited ∪ expansion distinct are unchanged, so the trajectory —
-    // and therefore every emitted row — is bit-identical to the
-    // two-job loop (SimilaritySpec pins this; oracle unchanged).
-    var r = 0
-    while (r < rounds) {
-      val vIds = visited.map(_._2).distinct
-      val frontier = scored(visited)
-        .withColumn("rk", row_number().over(w)).filter(col("rk") <= beam)
-        .select(col("query_id"), col("node"))
-      val expansion = broadcast(frontier)
-        .join(prunedBy(e, "src", vIds), col("node") === col("src"))
-        .select(col("query_id"), col("nb").as("node"))
-        .collect().map(row => (row.getLong(0), row.getLong(1)))
-      visited = (visited ++ expansion).distinct
-      r += 1
-    }
-    scored(visited)
-      .filter(col("node") =!= col("query_id"))
-      .filter(emitFilter)
-      .withColumn("rank", row_number().over(w)).filter(col("rank") <= k)
-      .select(col("query_id"), col("node").as("neighbor_id"),
-        col("rank"), col("cosine"))
   }
 
   /** Per-chunk query bound for [[graphSearchBulk]]: the largest number
     * of in-flight queries whose beam state one [[graphSearch]] loop
     * may hold on the driver. 4096 queries × ~(|entries| +
     * rounds·beam·deg) visited pairs ≈ one-to-two million
-    * (Long, Long) pairs — tens of megabytes, INDEPENDENT of how large
-    * the ingest batch is. Sized from the r16 rehearsal: the per-chunk
-    * cost is FIXED (~8 s of driver-loop jobs — 3 rounds × 2 bounded
-    * collects + scoring joins — regardless of chunk width between 1 k
-    * and 10 k queries), so a wider chunk amortizes it linearly; 1024
-    * priced ingest at ~7.5 ms/vector where 4096 reaches ~2 ms/vector
-    * with the driver bound still flat in corpus AND batch size.
-    * (r15's headline 1.7 ms/vector predated the stride fix: the
-    * `id % nChunks` chunk key silently collapsed the mod-10 rehearsal
-    * batch into TWO 10 k-query chunks — the bound this constant
-    * exists to enforce was not actually being held.) */
+    * (query, node, score) entries — tens of megabytes, INDEPENDENT of
+    * how large the ingest batch is. A chunk's fixed cost is one search:
+    * one read of corpus and edges into persisted arrays plus rounds + 1
+    * round jobs, the same at any chunk width, so a wider chunk
+    * amortizes it linearly. Sized from the r16 rehearsal, when that
+    * fixed cost was ~8 s of per-round plans (3 rounds × 2 bounded
+    * collects + scoring joins) regardless of chunk width between 1 k
+    * and 10 k queries: 1024 priced ingest at ~7.5 ms/vector where 4096
+    * reached ~2 ms/vector with the driver bound still flat in corpus
+    * AND batch size. (r15's headline 1.7 ms/vector predated the stride
+    * fix: the `id % nChunks` chunk key silently collapsed the mod-10
+    * rehearsal batch into TWO 10 k-query chunks — the bound this
+    * constant exists to enforce was not actually being held.) */
   val BulkChunkQ = 4096
 
   /** BULK [[graphSearch]] for CORPUS-PROPORTIONAL query batches — the
@@ -2081,9 +2145,8 @@ object Similarity {
     * plan has ONE leaf however many chunks ran (no nChunks-leg union)
     * and callers own no persist/unpersist contract — sink dirs are
     * JVM-lifetime artifacts removed by a shutdown hook. Each chunk's
-    * corpus/expansion scans amortize over its chunkQ queries through
-    * [[graphSearch]]'s size dispatch (chunkQ > [[IsinPushdownMaxIds]]
-    * visited ids → the broadcast-join branch). */
+    * one read of corpus and edges amortizes over its chunkQ queries,
+    * and its ranked rows are written straight from the driver. */
   def graphSearchBulk(edges: DataFrame, embs: DataFrame, idCol: String,
                       vecCol: String, newBatch: DataFrame,
                       batchIdCol: String, batchVecCol: String,
@@ -2129,13 +2192,10 @@ object Similarity {
                                       chunkQ: Int): (DataFrame, Option[java.io.File]) = {
     require(chunkQ >= 1, "chunkQ must be >= 1")
     val spark = embs.sparkSession
-    import spark.implicits._
     val src = newBatch.select(col(batchIdCol).cast("long").as("qid"),
       VectorOps.toDouble(col(batchVecCol)).as("qv"))
     val total = src.count()
-    if (total == 0L)
-      return (Seq.empty[(Long, Long, Int, Double)]
-        .toDF("query_id", "neighbor_id", "rank", "cosine"), None)
+    if (total == 0L) return (emptyGraphSearch(spark), None)
     val nChunks = math.min((total + chunkQ - 1) / chunkQ,
       Int.MaxValue.toLong).toInt
     val chunked = src.repartition(nChunks).rdd
@@ -2148,19 +2208,17 @@ object Similarity {
           it.map(r => (r.getLong(0), r.getSeq[Double](1).toArray)).toArray,
         Seq(c)).head
       if (chunk.nonEmpty) {
-        val part = graphSearch(edges, embs, idCol, vecCol, chunk,
-          entriesOf(chunk), k, beam, rounds).persist()
-        if (part.count() > 0L) {
-          part.write.mode("append").parquet(sink)
+        val rows = graphSearchRows(edges, embs, idCol, vecCol, chunk,
+          entriesOf(chunk), k, beam, rounds, lit(true)).getOrElse(Nil)
+        if (rows.nonEmpty) {
+          spark.createDataFrame(rows.asJava, GraphSearchSchema).coalesce(1)
+            .write.mode("append").parquet(sink)
           wrote = true
         }
-        part.unpersist()
       }
       c += 1
     }
-    if (!wrote)
-      (Seq.empty[(Long, Long, Int, Double)]
-        .toDF("query_id", "neighbor_id", "rank", "cosine"), Some(sinkDir))
+    if (!wrote) (emptyGraphSearch(spark), Some(sinkDir))
     else (spark.read.parquet(sink), Some(sinkDir))
   }
 
@@ -2215,10 +2273,9 @@ object Similarity {
       .getAbsolutePath
   }
 
-  /** Persist a refined edge list: parquet SORTED by vec_id, so the
-    * search loop's id-pruned edge lookups hit row-group min/max stats
-    * (the point-lookup serving path [[graphSearch]]'s scaladoc
-    * declares). Written to a temp dir and renamed — the [[writeIndex]]
+  /** Persist a refined edge list: parquet SORTED by vec_id, so a
+    * reader's id-range filters prune on row-group min/max stats.
+    * Written to a temp dir and renamed — the [[writeIndex]]
     * crash-safety contract: a crashed build never half-populates the
     * content-addressed path. */
   def writeGraph(edges: DataFrame, dir: String): Unit = {

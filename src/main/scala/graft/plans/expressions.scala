@@ -329,8 +329,12 @@ object BpeMergeKernel {
   * expression, which is what made 10-round exact Lloyd spend more
   * time ANALYZING plans than running them. */
 object ArgminKernel {
-  def compute(vec: ArrayData, flat: Array[Double], k: Int, dim: Int): InternalRow = {
-    if (vec.numElements() != dim) return null
+  def compute(vec: ArrayData, flat: Array[Double], k: Int, dim: Int): InternalRow =
+    if (vec.numElements() != dim) null else compute(vec, 0, flat, k, dim)
+
+  /** [[compute]] over the components [from, from + dim) of `vec`, which
+    * the caller has checked it holds. */
+  def compute(vec: ArrayData, from: Int, flat: Array[Double], k: Int, dim: Int): InternalRow = {
     var bestCid = 0
     var bestD = 0.0
     var c = 0
@@ -338,7 +342,7 @@ object ArgminKernel {
       val off = c * dim
       var s = 0.0
       var i = 0
-      while (i < dim) { val d = vec.getDouble(i) - flat(off + i); s += d * d; i += 1 }
+      while (i < dim) { val d = vec.getDouble(from + i) - flat(off + i); s += d * d; i += 1 }
       if (c == 0 || s < bestD ||
           (java.lang.Double.isNaN(bestD) && !java.lang.Double.isNaN(s))) {
         bestD = s; bestCid = c

@@ -588,10 +588,10 @@ object SimilarityQueries {
     * other cell is invisible); each graph round then recovers
     * cross-cell neighbors through the refined edges — the build-time
     * cross-cell repair ([[Similarity.nnDescentRound]]) applied at
-    * query time, WITHOUT probing more cells. Per round the work is
-    * Q·beam edge lookups + Q·|visited| rescores — corpus size
-    * appears nowhere, the property that makes graph search the
-    * query-serving path at 100 TB. The oracle replays the
+    * query time, WITHOUT probing more cells. A call reads corpus and
+    * edges once; after that each round scores only the pairs it newly
+    * visited and looks up only their adjacency, ≤ Q·beam·deg ids. The
+    * oracle replays the
     * refined-graph CTEs + the probe entry + the same fixed-round
     * expansion, so the trajectory cannot drift. Recall vs exact is
     * the separately-declared `ann_graph_search_recall` (the
@@ -601,9 +601,9 @@ object SimilarityQueries {
   val SearchBeam = 4
   val SearchRounds = 3
 
-  /** The search result, memoized per (fixture, session) and
-    * persisted + counted here ([[Similarity.graphSearch]] returns a
-    * lazy bounded plan), so bench reps price the emission. */
+  /** The search result, memoized per (fixture, session) as a frame
+    * ([[Similarity.graphSearch]] returns a local one-partition frame),
+    * so bench reps price the emission. */
   private def searchResult(s: SparkSession, dir: String): DataFrame =
     FixtureCache.frame(s,
         s"ann_graph_search:b=$SearchBeam:r=$SearchRounds",

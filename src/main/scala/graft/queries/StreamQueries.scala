@@ -59,11 +59,13 @@ object StreamQueries {
     if (java.nio.file.Files.isDirectory(src)) src.toString
     else FixtureCache.memo(s"stream_src_dir:$table", dir, table) {
       val d = java.nio.file.Files.createTempDirectory("graft-stream")
+      // the JVM deletes in reverse registration order: the link first,
+      // then its (by then empty) directory
+      d.toFile.deleteOnExit()
       val link = d.resolve(s"$table.parquet")
       try java.nio.file.Files.createSymbolicLink(link, src)
       catch { case _: Exception => java.nio.file.Files.copy(src, link) }
       link.toFile.deleteOnExit()
-      d.toFile.deleteOnExit()
       d.toString
     }
   }

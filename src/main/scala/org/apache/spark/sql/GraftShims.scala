@@ -9,9 +9,10 @@ import org.apache.spark.sql.types.Decimal
   * `private[sql]`, so custom-expression packages outside the Spark
   * tree re-export it from a shim in the `org.apache.spark.sql`
   * package — the standard pattern used by Spark connector/extension
-  * projects. No Spark internals are modified. The decimal pair does
+  * projects. No Spark internals are modified. The error helpers do
   * the same for `graft.functions.ExactVectorSumAgg`, which must round
-  * and fail exactly as Catalyst's ANSI cast and sum do.
+  * and fail exactly as Catalyst's ANSI cast and sum do, and for
+  * `graft.operators.Similarity.graphSearch`'s cosine division.
   */
 object GraftShims {
   def column(e: Expression): Column = classic.ExpressionUtils.column(e)
@@ -24,4 +25,6 @@ object GraftShims {
   /** The ANSI grouped decimal `sum`'s overflow error. */
   def decimalSumOverflow(): ArithmeticException =
     QueryExecutionErrors.overflowInSumOfDecimalError(null, "try_sum")
+  /** What `Divide` raises on a zero divisor under ANSI. */
+  def divideByZero(): ArithmeticException = QueryExecutionErrors.divideByZeroError(null)
 }

@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
 import graft.functions.TextOps
@@ -7,13 +8,24 @@ import graft.io.Tables
 import graft.plans.expressions
 
 class ExpressionsSpec extends SparkSpec {
+
+  /** The pure-HOF shingle formulation — semantically identical to
+    * `TextOps.shingles`; kept as the built-ins-only reference for tests. */
+  private def shinglesHof(text: Column, n: Int): Column = {
+    val w = TextOps.words(text)
+    val grams = transform(
+      sequence(lit(0), size(w) - n),
+      i => concat_ws(" ", (0 until n).map(j => element_at(w, i + j + 1)): _*))
+    array_distinct(when(size(w) >= n, grams).otherwise(array()))
+  }
+
   import spark.implicits._
 
   test("WordShingles matches the HOF formulation on the fixture corpus") {
     val docs = Tables.documents(spark, sf001)
     val diff = docs.select(
         TextOps.shingles(col("text"), 3).as("fast"),
-        TextOps.shinglesHof(col("text"), 3).as("ref"))
+        shinglesHof(col("text"), 3).as("ref"))
       .filter(col("fast") =!= col("ref"))
     assert(diff.count() === 0)
   }
@@ -96,7 +108,7 @@ class ExpressionsSpec extends SparkSpec {
     val weird = Seq("a  b c", " a b c", "a b c ", "", " ")
     val df = weird.toDF("text").select(
       TextOps.shingles(col("text"), 2).as("fast"),
-      TextOps.shinglesHof(col("text"), 2).as("ref"))
+      shinglesHof(col("text"), 2).as("ref"))
     assert(df.filter(col("fast") =!= col("ref")).count() === 0)
   }
 

@@ -24,7 +24,7 @@ class GraphSpec extends SparkSpec {
       iters <- Gen.choose(0, 4)
     } yield (edges, iters)
     sample(gen, 8).foreach { case (edges, iters) =>
-      assert(run(edges, iters) === Graph.pageRankReference(edges, iters),
+      assert(run(edges, iters) === GraphReference.pageRankReference(edges, iters),
         s"edges=$edges iters=$iters")
     }
   }
@@ -84,7 +84,7 @@ class GraphSpec extends SparkSpec {
       if (edges.exists(e => e._1 != e._2)) {
         val got = Graph.labelPropagation(edges.toDF("src", "dst"), "src", "dst", iters)
           .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-        assert(got === Graph.labelPropReference(edges, iters),
+        assert(got === GraphReference.labelPropReference(edges, iters),
           s"edges=$edges iters=$iters")
       }
     }
@@ -112,7 +112,7 @@ class GraphSpec extends SparkSpec {
     sample(gen, 8).foreach { case (edges, src) =>
       val got = Graph.bfsHops(edges.toDF("src", "dst"), "src", "dst", src)
         .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-      assert(got === Graph.bfsReference(edges, src), s"edges=$edges src=$src")
+      assert(got === GraphReference.bfsReference(edges, src), s"edges=$edges src=$src")
     }
   }
 

@@ -213,4 +213,49 @@ object LegacyTopK {
     vote(labeledProbeCands(index, labels, idCol, labelCol, queries, nProbe)
       .filter(!col("neighbor_id").isin(qids: _*)), queries, k)
   }
+
+  /** `Similarity.sampledTopK`'s old plan verbatim: per-partition heaps
+    * under `java.lang.Double.compare`, then the window. The
+    * broadcast-queries exact top-k kernel for the sampled margin
+    * ground truth: per query, its k max-cosine rows of `corpus`,
+    * returned as driver rows (query, corpus-row, cosine) — callers'
+    * query sets are Q- or Q·k-bounded. `queryFoldsFirst` preserves
+    * the margin family's x-vector-folds-first rule on both call
+    * sites (queries = x-side in stage 1, corpus = x-side in stage
+    * 2), so every cosine is the exact double of the full kernel and
+    * the oracle. No self-exclusion — the two sides come from
+    * disjoint predicates ([[marginKnnMining]]'s contract). */
+  def sampledTopK(corpus: DataFrame,
+                          queries: Array[(Long, Array[Double])], k: Int,
+                          queryFoldsFirst: Boolean): Array[(Long, Long, Double)] = {
+    val spark = corpus.sparkSession
+    import spark.implicits._
+    val qb = spark.sparkContext.broadcast(
+      queries.map { case (qid, v) => (qid, v, math.sqrt(VectorOps.dotSeq(v, v))) })
+    val qFirst = queryFoldsFirst
+    val partial = corpus.as[(Long, Array[Double])].mapPartitions { iter =>
+      val qs = qb.value
+      val ord = Ordering.Tuple2(Ordering[Double].reverse, Ordering[Long])
+      val heaps = qs.map(_ => new graft.functions.BoundedTopK[(Double, Long)](k, ord))
+      iter.foreach { case (id, v) =>
+        val n = math.sqrt(VectorOps.dotSeq(v, v))
+        var qi = 0
+        while (qi < qs.length) {
+          val (_, qv, qn) = qs(qi)
+          val c =
+            if (qFirst) VectorOps.dotSeq(qv, v) / (qn * n)
+            else VectorOps.dotSeq(v, qv) / (n * qn)
+          heaps(qi).offer((c, id))
+          qi += 1
+        }
+      }
+      qs.iterator.zipWithIndex.flatMap { case ((qid, _, _), qi) =>
+        heaps(qi).iterator.map { case (c, id) => (qid, id, c) }
+      }
+    }.toDF("qid", "id", "cosine")
+    val w = Window.partitionBy("qid").orderBy(col("cosine").desc, col("id"))
+    partial.withColumn("rk", row_number().over(w)).filter(col("rk") <= k)
+      .select(col("qid"), col("id"), col("cosine"))
+      .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
+  }
 }

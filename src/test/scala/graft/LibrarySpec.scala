@@ -101,8 +101,8 @@ class LibrarySpec extends SparkSpec {
   test("partitioned sink round-trips and prunes partitions at the scan") {
     val dir = Files.createTempDirectory("graft-sink").toString
     val docs = Tables.documents(spark, sf001)
-    Sinks.writePartitioned(docs, s"$dir/docs", Seq("lang"))
-    val back = Sinks.readPartitioned(spark, s"$dir/docs")
+    ParquetLayouts.writePartitioned(docs, s"$dir/docs", Seq("lang"))
+    val back = ParquetLayouts.readPartitioned(spark, s"$dir/docs")
     assert(back.count() === docs.count())
     val langs = docs.select("lang").distinct().collect().map(_.getString(0))
     val one = back.filter(col("lang") === langs.head)

@@ -248,27 +248,16 @@ class PlanAuditSpec extends SparkSpec {
     assert(over.isEmpty, s"corpus-sized exchange regressions:\n${over.mkString("\n")}")
   }
 
-  test("graph search: the final scoring scan is an IN-pruned pushed point lookup (r14)") {
+  test("graph search: the served frame plans no corpus scan") {
     // the serving law's load-bearing plan property: the beam state is
-    // driver-held and the corpus access must arrive at the parquet
-    // scan as a pushed In(vec_id, ...) predicate with a 2-column
-    // ReadSchema — a corpus-scanning broadcast join here is exactly
-    // the plan the r14 rewrite retired (probe+search 7.97→11.94 s
-    // growing with corpus, vs 2.08→2.64 s near-flat pruned)
-    // Two physical shapes are acceptable: a parquet scan with the
-    // pushed In(vec_id, ...) (standalone — row-group pruning), or an
-    // INSET predicate over an InMemoryTableScan when another suite
-    // has cached the raw embeddings table in the shared session (the
-    // cache substitutes the file scan; the bounded-id predicate still
-    // gates the corpus access). What must NEVER appear is the
-    // predicate missing entirely — that is the corpus-scanning
-    // broadcast-join shape the r14 rewrite retired.
+    // driver-held, the search reads the corpus once inside its own
+    // round loop, and the frame it serves is a local relation — a
+    // corpus scan in the served plan is the shape the r14 rewrite
+    // retired (probe+search 7.97→11.94 s growing with corpus)
     val plan = batchQueries("ann_graph_search")
       .queryExecution.executedPlan.toString
-    assert(plan.contains("In(vec_id") || plan.contains("INSET"),
-      s"visited-id IN predicate absent from the scoring plan:\n" +
-        plan.linesIterator.filter(l =>
-          l.contains("PushedFilters") || l.contains("Filter")).mkString("\n"))
+    assert(!plan.contains("FileScan") && !plan.contains("BroadcastHashJoin"),
+      s"corpus access in the served graph-search plan:\n$plan")
   }
 
   test("radius search plans no per-query sort (top-k does)") {

@@ -189,7 +189,7 @@ class ShuffleCeilingSpec extends SparkSpec {
     // the maintenance surface runs the drift audit twice (the
     // nCells-bounded gate collect + the emitted frame)
     ("ann_index_maintain", 400L, "2 x (nCells stratum partials + totals) (66)"),
-    // sampled exact ground truth (two broadcast scans, Q*k*partitions
+    // sampled exact ground truth (two one-job heap scans, Q*k*partitions
     // partials) + the IVF mining memo build + the overlap join
     ("ann_margin_recall", 120000L, "sampled-exact partials + IVF mining build + overlap (34108)"),
     ("ann_pca_project", 17000L, "CovCellsAgg buffers + d^2 hand-off, zero-shuffle scoring (4008)"),

@@ -1033,11 +1033,12 @@ class SimilaritySpec extends SparkSpec {
   }
 
   test("graphSearch: the pruning dispatch's two branches are row-identical (r14)") {
-    // the corpus access dispatches on distinct-id count (IN pushdown
-    // for small serving batches, broadcast join for bulk ingest); the
-    // branches must be pure plan choices — same rows, bit for bit.
-    // isinMaxIds = 0 forces the join branch on the same inputs the
-    // declared (IN-branch) search takes at fixture scale
+    // the per-round plan formulation dispatched its corpus access on
+    // distinct-id count (IN pushdown for small serving batches,
+    // broadcast join for bulk ingest); the round loop that replaced it
+    // must equal it under both branches, bit for bit. isinMaxIds = 0
+    // forces the join branch on the same inputs the declared
+    // (IN-branch) search takes at fixture scale
     import graft.queries.SimilarityQueries
     val qv = emb.orderBy("vec_id").limit(SimilarityQueries.Q)
       .select(col("vec_id"), VectorOps.toDouble(col("embedding")))
@@ -1046,12 +1047,18 @@ class SimilaritySpec extends SparkSpec {
     val edges = SimilarityQueries.refinedEdges(spark, sf001)
     val entries = Similarity.probe(idx, qv, SimilarityQueries.SearchBeam, nProbe = 1)
       .select(col("query_id"), col("neighbor_id").as("node"))
-    def run(maxIds: Int) = Similarity.graphSearch(edges,
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.orderBy("query_id", "rank").collect().toSeq
+    val got = rows(Similarity.graphSearch(edges, Tables.embeddings(spark, sf001),
+      "vec_id", "embedding", qv, entries, SimilarityQueries.K,
+      SimilarityQueries.SearchBeam, SimilarityQueries.SearchRounds))
+    def legacy(maxIds: Int) = rows(LegacyGraphSearch.graphSearch(edges,
         Tables.embeddings(spark, sf001), "vec_id", "embedding", qv, entries,
         SimilarityQueries.K, SimilarityQueries.SearchBeam,
-        SimilarityQueries.SearchRounds, isinMaxIds = maxIds)
-      .orderBy("query_id", "rank").collect().toSeq
-    assert(run(0) === run(Int.MaxValue))
+        SimilarityQueries.SearchRounds, isinMaxIds = maxIds))
+    assert(got.nonEmpty)
+    assert(got === legacy(0))
+    assert(got === legacy(Int.MaxValue))
   }
 
   test("graphSearchCurve: the declared-beam row equals the recall report (r14)") {

@@ -74,7 +74,7 @@ class SinksSpec extends SparkSpec {
       .write.mode("append").parquet(tmp)
     Seq((3L, "c", 0.5), (4L, "d", 0.9)).toDF("id", "name", "quality")
       .write.mode("append").parquet(tmp)
-    val df = Sinks.readEvolved(spark, tmp)
+    val df = ParquetLayouts.readEvolved(spark, tmp)
     assert(df.columns.toSet === Set("id", "name", "quality"))
     val rows = df.select("id", "name", "quality").collect().map(r =>
       (r.getLong(0), r.getString(1),

@@ -2,12 +2,25 @@ package graft
 
 import java.sql.Timestamp
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.io.Tables
-import graft.operators.AsOf
+import graft.operators.{AsOf, Quantiles}
 
 class StatsSpec extends SparkSpec {
+
+  /** Quantiles of one column pivoted to named columns. */
+  private def quantileColumns(df: DataFrame, groupCol: String, valueCol: String,
+                              named: Seq[(String, Double)],
+                              buckets: Int = 1 << 20): DataFrame = {
+    val q = Quantiles.exactQuantiles(df, groupCol, valueCol, named.map(_._2), buckets)
+    val agg = named.map { case (name, p) =>
+      max(when(abs(col("q") - p) < 1e-12, col("value"))).as(name)
+    }
+    q.groupBy(groupCol).agg(agg.head, agg.tail: _*)
+  }
+
   import spark.implicits._
 
   test("asof join attaches the latest right row at or before each left ts") {
@@ -153,12 +166,12 @@ class StatsSpec extends SparkSpec {
       expr("percentile(l_extendedprice, 0.5)").as("p50"),
       expr("percentile(l_extendedprice, 0.95)").as("p95")))
     val named = Seq("p50" -> 0.5, "p95" -> 0.95)
-    val mine = asMap(graft.operators.Quantiles.quantileColumns(
+    val mine = asMap(quantileColumns(
       li, "l_returnflag", "l_extendedprice", named))
     assert(mine === builtin)   // exact double equality, not approximate
     // invariant to the bucket count (incl. a tiny one that forces
     // multi-rank refinement inside single buckets)
-    assert(asMap(graft.operators.Quantiles.quantileColumns(
+    assert(asMap(quantileColumns(
       li, "l_returnflag", "l_extendedprice", named, buckets = 7)) === builtin)
   }
 

@@ -4,9 +4,11 @@ import scala.jdk.CollectionConverters._
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.catalyst.util.SQLOrderingUtil
 import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.types._
 
+import graft.functions.VectorOps
 import graft.io.Tables
 import graft.operators.Similarity
 import graft.queries.SimilarityQueries
@@ -185,6 +187,43 @@ class TopKSpec extends SparkSpec {
     } finally {
       sc.removeSparkListener(listener)
       labeledCells.unpersist()
+    }
+  }
+
+  test("sampledTopK equals its window formulation on the fixture and the window's order on ties") {
+    import spark.implicits._
+    val base = Tables.embeddings(spark, sf01).select(col("vec_id").cast("long").as("id"),
+      col("embedding").cast("array<double>").as("v"))
+    val xs = base.filter(col("id") % 2 === 0)
+    val ys = base.filter(col("id") % 2 === 1)
+    val qx = xs.orderBy("id").limit(7).as[(Long, Array[Double])].collect()
+    def rows(out: Array[(Long, Long, Double)]) = out.map(String.valueOf).toSeq.sorted
+    for (first <- Seq(true, false); k <- Ks) {
+      assert(rows(Similarity.sampledTopK(ys, qx, k, first)) ===
+        rows(LegacyTopK.sampledTopK(ys, qx, k, first)), s"fixture first $first k $k")
+    }
+    // the seeded corpus: ±0.0 and NaN scores, ranked exhaustively in
+    // the window's order (where the old heaps put −0.0 below 0.0)
+    for (seed <- Seeds) {
+      val (df, corpusRows) = corpus(seed, 30, 3)
+      val c = df.select(col("vec_id").as("id"), col("embedding").as("v"))
+      val qs = queries(corpusRows, seed).distinctBy(_._1).map { case (id, _, v) => (id, v) }
+      for (first <- Seq(true, false); k <- Ks) {
+        val want = qs.flatMap { case (qid, qv) =>
+          val qn = math.sqrt(VectorOps.dotSeq(qv, qv))
+          corpusRows.map { case (id, _, v) =>
+            val n = math.sqrt(VectorOps.dotSeq(v, v))
+            val cos = if (first) VectorOps.dotSeq(qv, v) / (qn * n)
+              else VectorOps.dotSeq(v, qv) / (n * qn)
+            (cos, id)
+          }.sortWith { case ((c1, i1), (c2, i2)) =>
+            val o = SQLOrderingUtil.compareDoubles(c2, c1)
+            o < 0 || (o == 0 && i1 < i2)
+          }.take(k).map { case (cos, id) => (qid, id, cos) }
+        }
+        assert(rows(Similarity.sampledTopK(c, qs, k, first)) === rows(want),
+          s"seed $seed first $first k $k")
+      }
     }
   }
 }
