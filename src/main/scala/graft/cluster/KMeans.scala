@@ -3,11 +3,10 @@ package graft.cluster
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
 
 import graft.functions.{ExactVectorSumAgg, VectorOps}
 import graft.plans.ArgminKernel
-import graft.util.Jobs.described
+import graft.util.Jobs.{persisted, roundJob}
 
 /** Spark-native Lloyd's K-Means with explicit initial centers —
   * the reference program's semantics (Flink batch KMeans example:
@@ -189,7 +188,9 @@ object KMeansNative {
 
   /** The Lloyd loop behind [[fit]], [[fitExact]] and PQ training
     * (`Similarity.pqTrain`: one model per subspace), MLlib's RDD shape
-    * with graft's kernels:
+    * with graft's kernels, on the skeleton it shares with
+    * `Similarity.graphSearch` ([[graft.util.Jobs.persisted]],
+    * [[graft.util.Jobs.roundJob]]):
     *  - the points are read ONCE through the plan's `toRdd` into one
     *    array of vectors per partition (null for a null vector),
     *    persisted and coalesced to ~[[RoundValuesPerTask]] components
@@ -208,16 +209,12 @@ object KMeansNative {
     * i/maxIter`; the caller's job description is restored on exit. */
   private[graft] def lloyd(name: String, points: DataFrame, vecCol: String,
                            models: Seq[Model], maxIter: Int, tol: Double): Seq[FitResult] = {
-    val sc = points.sparkSession.sparkContext
     val ms = models.toArray
-    val parts = points.select(VectorOps.toDouble(col(vecCol))).queryExecution.toRdd
+    val read = points.select(VectorOps.toDouble(col(vecCol))).queryExecution.toRdd
       .mapPartitions(rows => Iterator.single(
         rows.map(r => if (r.isNullAt(0)) null else r.getArray(0).copy()).toArray))
-      .setName(s"KMeansNative.$name points")
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    try {
-      val n = described(sc, s"KMeansNative.$name points")(
-        parts.map(_.length.toLong).collect().sum)
+    persisted(read, s"KMeansNative.$name points") { parts =>
+      val n = roundJob(parts, s"KMeansNative.$name points")(_.map(_.length.toLong).sum).sum
       val ideal = math.max(1L, n * ms.map(_.dim).sum / RoundValuesPerTask)
       val work = if (ideal < parts.getNumPartitions) parts.coalesce(ideal.toInt) else parts
       val agg = new ExactVectorSumAgg
@@ -227,9 +224,8 @@ object KMeansNative {
       var moved = Double.PositiveInfinity
       while (iter < maxIter && !(moved <= tol)) {
         val flats = centers.map(_.flatten)
-        val total = described(sc, s"KMeansNative.$name round ${iter + 1}/$maxIter")(
-            work.mapPartitions(arrays => Iterator.single(roundPartials(arrays, ms, flats)))
-              .collect())
+        val total = roundJob(work, s"KMeansNative.$name round ${iter + 1}/$maxIter")(
+            roundPartials(_, ms, flats))
           .foldLeft(ms.map(m => Partial.empty(m.k))) { (a, b) =>
             for (j <- a.indices; c <- 0 until ms(j).k) {
               a(j).n(c) += b(j).n(c); a(j).w(c) += b(j).w(c)
@@ -258,30 +254,33 @@ object KMeansNative {
         iter += 1
       }
       centers.indices.map(j => FitResult(centers(j), history(j).toSeq, iter))
-    } finally parts.unpersist()
+    }
   }
 
   /** One task of a round: per model, assign each vector's component
-    * range and accumulate its cluster. */
+    * range and accumulate its cluster. The models run one after the
+    * other over the task's vectors, each with its fields in locals, so
+    * a one-model loop ([[fit]], [[fitExact]]) runs the same inner loop
+    * as a loop written for one model. */
   private def roundPartials(arrays: Iterator[Array[ArrayData]], ms: Array[Model],
                             flats: Array[Array[Double]]): Array[Partial] = {
     val agg = new ExactVectorSumAgg
-    val p = ms.map(m => Partial.empty(m.k))
-    arrays.foreach(_.foreach { v =>
-      var j = 0
-      while (v != null && j < ms.length) {
-        val m = ms(j)
-        if (m.reads(v.numElements())) {
-          val best = ArgminKernel.compute(v, m.from, flats(j), m.k, m.dim)
+    val vectors = arrays.toArray
+    ms.indices.toArray.map { j =>
+      val m = ms(j)
+      val (from, k, dim, flat) = (m.from, m.k, m.dim, flats(j))
+      val p = Partial.empty(k)
+      vectors.foreach(_.foreach { v =>
+        if (v != null && m.reads(v.numElements())) {
+          val best = ArgminKernel.compute(v, from, flat, k, dim)
           val c = best.getInt(0)
-          p(j).n(c) += 1
-          p(j).w(c) += best.getDouble(1)
-          p(j).s(c) = agg.reduceArray(p(j).s(c), v, m.from, m.dim)
+          p.n(c) += 1
+          p.w(c) += best.getDouble(1)
+          p.s(c) = agg.reduceArray(p.s(c), v, from, dim)
         }
-        j += 1
-      }
-    })
-    p
+      })
+      p
+    }
   }
 
   /** Total within-cluster sum of squares for fixed centers

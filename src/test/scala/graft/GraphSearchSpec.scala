@@ -114,6 +114,14 @@ class GraphSearchSpec extends SparkSpec {
     }
   }
 
+  test("graphSearch rejects a batch that repeats a query id") {
+    val (emb, edges, ids) = graph(5, 20)
+    val (qs, entries) = batch(5, ids, emb)
+    val e = intercept[IllegalArgumentException](Similarity.graphSearch(edges, emb, "vec_id",
+      "embedding", qs :+ qs.head, entries, 3, 2, 2))
+    assert(e.getMessage.contains("query ids must be distinct"))
+  }
+
   test("graphSearch: a zero denominator fails or scores null as Spark's Divide does") {
     val (emb, edges, ids) = graph(4, 20, extra = Seq(906L -> Array(0.0, -0.0, 0.0, 0.0)))
     val (qs, entries0) = batch(4, ids, emb)
