@@ -4,7 +4,6 @@ import scala.collection.mutable
 import scala.collection.mutable.ArrayBuffer
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{Column, DataFrame, GraftShims, Row, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.Literal
@@ -15,6 +14,7 @@ import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.types._
 
 import graft.functions.{BoundedTopK, VectorOps}
+import graft.plans.ArgminKernel
 import graft.util.Jobs.{persisted, roundJob}
 
 /** Approximate-nearest-neighbor search over an embedding column.
@@ -26,10 +26,11 @@ import graft.util.Jobs.{persisted, roundJob}
   *    candidates are collected for the driver's final merge — input
   *    rows never leave their partition.
   *  - [[lshTopK]] — the scale path: L sign-bucket tables over
-  *    deterministic integer hyperplanes; candidates come from bucket
-  *    equality joins (shuffle on (table, bucket)), ranked by exact
-  *    cosine. Candidate probability for angle θ:
-  *    1 − (1 − (1 − θ/π)^bits)^L.
+  *    deterministic integer hyperplanes; a row is a candidate when it
+  *    shares any table's bucket with the query (the query buckets ride
+  *    in the closure, each row's are computed in the same scan — no
+  *    join, no shuffle), ranked by exact cosine. Candidate probability
+  *    for angle θ: 1 − (1 − (1 − θ/π)^bits)^L.
   *
   * All cosines are computed with the same left-to-right fold order as
   * the DuckDB oracle (dot / (‖a‖·‖b‖)), so results hash-match.
@@ -84,45 +85,57 @@ object Similarity {
   private val ScoreDesc: Ordering[(Double, Long)] = (a, b) => scoreDesc(a._1, a._2, b._1, b._2)
   private val LabeledDesc: Ordering[(Double, Long, Int)] =
     (a, b) => scoreDesc(a._1, a._2, b._1, b._2)
+  /** `sqdist ASC` then id: a null score first, then Spark's double
+    * order (−0.0 equals 0.0, NaN last). */
+  private val SqDistAsc: Ordering[(java.lang.Double, Long)] = { (a, b) =>
+    val c =
+      if (a._1 == null) (if (b._1 == null) 0 else -1)
+      else if (b._1 == null) 1
+      else SQLOrderingUtil.compareDoubles(a._1, b._1)
+    if (c != 0) c else java.lang.Long.compare(a._2, b._2)
+  }
   private val IntScoreDesc: Ordering[(Long, Long)] = (a, b) =>
     if (a._1 != b._1) java.lang.Long.compare(b._1, a._1) else java.lang.Long.compare(a._2, b._2)
 
   /** The one tail of the bounded-heap top-k family. `scan` is one
-    * task's per-row loop over its partition of `rows`, returning one
-    * heap per query in query order. It runs as ONE job, described
+    * task's per-row loop over its partition of `rows`' internal rows
+    * (`toRdd`), returning one heap per query in query order. It runs as ONE job, described
     * `Similarity.<op> top-k`; the driver merges the heaps in `ord` per
     * distinct query id (the window's partitioning) and keeps k. Returns
     * each distinct query id, first appearance first, with its ranking. */
-  private def topK[C <: AnyRef](op: String, rows: RDD[InternalRow], qids: Array[Long],
+  private def topK[C <: AnyRef](op: String, rows: DataFrame, qids: Array[Long],
                                 k: Int, ord: Ordering[C])
                                (scan: Iterator[InternalRow] => Array[BoundedTopK[C]])
       : Seq[(Long, Seq[C])] = {
-    val parts = roundJob(rows, s"Similarity.$op top-k")(scan(_).map(_.iterator.toVector))
+    val parts = roundJob(rows.queryExecution.toRdd, s"Similarity.$op top-k")(
+      scan(_).map(_.iterator.toVector))
     val entries = qids.indices.groupBy(qids(_))
     qids.distinct.toSeq.map { qid =>
       qid -> entries(qid).flatMap(qi => parts.iterator.flatMap(_(qi))).sorted(ord).take(k)
     }
   }
 
-  /** `embs` as the internal rows (id, vector, extra...) of its plan. */
+  /** `embs` as the rows (id, vector, extra...) a top-k scans. */
   private def scanRows(embs: DataFrame, idCol: String, vecCol: String,
-                       extra: Column*): RDD[InternalRow] =
+                       extra: Column*): DataFrame =
     embs.select(Seq(col(idCol).cast("long"), VectorOps.toDouble(col(vecCol))) ++ extra: _*)
-      .queryExecution.toRdd
 
   /** A top-k result as a local ONE-partition frame (a caller's `orderBy`
-    * is then one task, no exchange); columns non-null, as the window's. */
+    * is then one task, no exchange); columns non-null, as the window's,
+    * but for the `nullable` ones. */
   private def localFrame(spark: SparkSession, cols: Seq[(String, DataType)],
-                         rows: Seq[Row]): DataFrame =
+                         rows: Seq[Row], nullable: Set[String] = Set.empty): DataFrame =
     spark.createDataFrame(rows.asJava,
-      StructType(cols.map { case (n, t) => StructField(n, t, nullable = false) })).coalesce(1)
+      StructType(cols.map { case (n, t) => StructField(n, t, nullable(n)) })).coalesce(1)
 
   /** (query_id, neighbor_id, rank, `score`) rows of (score, id) candidates. */
   private def rankedFrame[S](spark: SparkSession, score: String, scoreType: DataType,
-                             merged: Seq[(Long, Seq[(S, Long)])]): DataFrame =
+                             merged: Seq[(Long, Seq[(S, Long)])],
+                             nullable: Set[String] = Set.empty): DataFrame =
     localFrame(spark, Seq("query_id" -> LongType, "neighbor_id" -> LongType,
         "rank" -> IntegerType, score -> scoreType),
-      for ((qid, cs) <- merged; ((s, id), i) <- cs.zipWithIndex) yield Row(qid, id, i + 1, s))
+      for ((qid, cs) <- merged; ((s, id), i) <- cs.zipWithIndex) yield Row(qid, id, i + 1, s),
+      nullable)
 
   /** (query_id, neighbor_id, rank, neighbor_label, cosine) rows. */
   private def labeledFrame(spark: SparkSession,
@@ -155,10 +168,14 @@ object Similarity {
     *
     * NOTE on the family: this operator, [[mipsTopK]], [[quantTopK]],
     * [[hardNegativesTopK]], [[knnClassify]], [[probe]],
-    * [[hardNegativesIvf]] and [[knnClassifyIvf]] are each ONE job,
-    * run when called, through [[topK]]: a [[BoundedTopK]] per query
-    * per task, a driver merge in the window's order, a local
-    * one-partition frame; no window, join or exchange. The per-row
+    * [[hardNegativesIvf]], [[knnClassifyIvf]], [[lshTopK]],
+    * [[pqTopK]], [[pqProbe]] and [[probePq]] are each ONE job, run
+    * when called, through [[topK]]: a [[BoundedTopK]] per query per
+    * task, a driver merge in the window's order, a local
+    * one-partition frame; no window, join or exchange. [[lshRadius]]
+    * is the lazy member: it has no k, so it is the same per-row scan
+    * as a `mapPartitions` over the corpus plan, run by the caller's
+    * action, with no heap and no collect. The per-row
     * loop is intentionally REPEATED per operator, not a shared
     * scorer/filter closure: a closure call per row would put a
     * megamorphic call site inside the O(n·Q·d) hot path the JIT
@@ -387,7 +404,7 @@ object Similarity {
 
   /** LSH bucket id of a quantized vector for one table: sign bits of
     * the exact integer dot products, packed to int. */
-  private[operators] def bucketOf(qv: Array[Long], planes: Array[Array[Long]]): Int = {
+  private[graft] def bucketOf(qv: Array[Long], planes: Array[Array[Long]]): Int = {
     var b = 0; var i = 0
     while (i < planes.length) {
       val p = planes(i)
@@ -555,7 +572,7 @@ object Similarity {
     * cell filter prunes partitions when the index is disk-resident
     * ([[writeIndex]] layout). */
   private def probedRows(index: IvfIndex, qvs: Array[Array[Double]], nProbe: Int,
-                         extra: Column*): (Array[Array[Int]], RDD[InternalRow]) = {
+                         extra: Column*): (Array[Array[Int]], DataFrame) = {
     val byCell = Array.fill(index.centers.length)(Array.newBuilder[Int])
     for (qi <- qvs.indices; c <- nearestCells(index.centers, qvs(qi), nProbe)) byCell(c) += qi
     val probing = byCell.map(_.result())
@@ -563,7 +580,6 @@ object Similarity {
       .filter(col("cell").isin(probing.indices.filter(probing(_).nonEmpty): _*))
       .select(Seq(col("id").cast("long"), VectorOps.toDouble(col("v")),
         col("cell").cast("int")) ++ extra: _*)
-      .queryExecution.toRdd
     (probing, rows)
   }
 
@@ -732,46 +748,39 @@ object Similarity {
 
   /** IVF-PQ probe — the production pairing: IVF bounds WHICH vectors
     * a query touches (nProbe cells), PQ bounds the BYTES per touched
-    * vector (m codes instead of dim floats). Candidate generation is
-    * [[probe]]'s verbatim; ranking is PQ asymmetric distance via
-    * codeword reconstruction (one 64-term fold — see [[pqTopK]] for
-    * why reconstruction, not LUT partial sums). Candidates are
-    * encoded on the fly with the compiled per-subspace argmins here;
-    * a production index stores the codes column alongside `cell`, and
-    * the plan is unchanged by that swap. */
+    * vector (m codes instead of dim floats). One job over the probed
+    * cells' rows, as [[probe]]; each candidate is encoded on the fly
+    * and scored as in [[pqTopK]]. A production index stores the codes
+    * column alongside `cell`; the scan is unchanged by that swap. */
   def probePq(index: IvfIndex, codebooks: Array[Array[Array[Double]]],
               queries: Array[(Long, Array[Double])], k: Int,
               nProbe: Int = 4): DataFrame = {
-    val spark = index.cells.sparkSession
-    import spark.implicits._
-    val m = codebooks.length
-    val dim = codebooks.map(_.head.length).sum
-    val sub = dim / m
-    val probes = queries.flatMap { case (qid, qv) =>
-      nearestCells(index.centers, qv, nProbe).map(cid => (qid, qv, cid))
-    }.toSeq
-    val qdf = probes.toDF("query_id", "qv", "cell")
-    val neededCells = probes.map(_._3).distinct
-    val cand = index.cells
-      .filter(col("cell").isin(neededCells: _*))
-      .join(broadcast(qdf), Seq("cell"))
-      .filter(col("id") =!= col("query_id"))
-    val coded = (0 until m).foldLeft(cand) { (df, j) =>
-      val (cid, _) = graft.cluster.KMeansNative.argminColumns(
-        slice(col("v"), j * sub + 1, sub), codebooks(j))
-      df.withColumn(s"_c$j", cid)
-    }
-    val recon = concat((0 until m).map { j =>
-      element_at(typedLit(codebooks(j).map(_.toSeq).toSeq), col(s"_c$j") + 1)
-    }: _*)
-    val scored = coded.select(col("query_id"), col("id").as("neighbor_id"),
-      graft.plans.expressions.vec_sqdist(col("qv"), recon).as("sqdist"))
-    val w = Window.partitionBy("query_id")
-      .orderBy(col("sqdist").asc, col("neighbor_id"))
-    scored
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("neighbor_id"), col("rank"), col("sqdist"))
+    val flat = codebooks.map(_.flatten)
+    val (probing, rows) = probedRows(index, queries.map(_._2), nProbe)
+    pqRanked("probePq", rows, codebooks, queries, k, probing)(
+      (r, sub) => pqEncoded(r.getArray(1), codebooks, flat, sub))
+  }
+
+  /** Each query as (id, vector, norm, its bucket in each of the
+    * [[intPlanes]] tables); the ids must be distinct, because a
+    * repeated id with two vectors has no defined candidate set. */
+  private def lshQueries(queries: Array[(Long, Array[Double])], nTables: Int, bits: Int, seed: Long)
+      : (Array[Array[Array[Long]]], Array[(Long, Array[Double], Double, Array[Int])]) = {
+    require(queries.map(_._1).distinct.length == queries.length, "query ids must be distinct")
+    val planes = intPlanes(nTables, bits, queries.headOption.fold(0)(_._2.length), seed)
+    (planes, queries.map { case (qid, qv) =>
+      (qid, qv, math.sqrt(VectorOps.dotSeq(qv, qv)), lshBuckets(qv, planes))
+    })
+  }
+
+  private def lshBuckets(v: Array[Double], planes: Array[Array[Array[Long]]]): Array[Int] =
+    { val q = quantize(v); planes.map(bucketOf(q, _)) }
+
+  /** Whether two vectors share a bucket in any table. */
+  private def sharesBucket(a: Array[Int], b: Array[Int]): Boolean = {
+    var t = 0
+    while (t < a.length && a(t) != b(t)) t += 1
+    t < a.length
   }
 
   /** Approximate top-k via multi-table sign-LSH; same output shape as
@@ -779,17 +788,34 @@ object Similarity {
     * bucket) with the query; exact cosine rank on candidates only.
     * Buckets come from [[intPlanes]] × [[quantize]]d vectors — exact
     * integer arithmetic — so candidacy, and hence the whole output,
-    * is engine-reproducible (full DuckDB oracle). */
+    * is engine-reproducible (full DuckDB oracle). One job (the family
+    * NOTE at [[bruteForceTopK]]): the query buckets ride in the
+    * closure and each corpus row's buckets are computed in the scan,
+    * so no bucket join and no deduplication of candidate pairs runs.
+    * Query ids must be distinct. */
   def lshTopK(embs: DataFrame, idCol: String, vecCol: String,
               queries: Array[(Long, Array[Double])], k: Int,
               nTables: Int = 8, bits: Int = 4, seed: Long = 42L): DataFrame = {
-    val scored = lshScores(embs, idCol, vecCol, queries, nTables, bits, seed)
-    val w = Window.partitionBy("query_id")
-      .orderBy(col("cosine").desc, col("neighbor_id"))
-    scored
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("neighbor_id"), col("rank"), col("cosine"))
+    val (planes, qs) = lshQueries(queries, nTables, bits, seed)
+    val merged = topK("lshTopK", scanRows(embs, idCol, vecCol), queries.map(_._1), k,
+        ScoreDesc) { rows =>
+      val heaps = qs.map(_ => new BoundedTopK[(Double, Long)](k, ScoreDesc))
+      rows.foreach { r =>
+        val id = r.getLong(0)
+        val v = r.getArray(1).toDoubleArray()
+        val vb = lshBuckets(v, planes)
+        val n = math.sqrt(VectorOps.dotSeq(v, v))
+        var qi = 0
+        while (qi < qs.length) {
+          val (qid, qv, qn, qb) = qs(qi)
+          if (id != qid && sharesBucket(qb, vb))
+            heaps(qi).offer((VectorOps.dotSeq(qv, v) / (qn * n), id))
+          qi += 1
+        }
+      }
+      heaps
+    }
+    rankedFrame(embs.sparkSession, "cosine", DoubleType, merged)
   }
 
   /** RADIUS (range) similarity search via the same multi-table
@@ -799,49 +825,28 @@ object Similarity {
     * size is data-dependent. Candidacy is exact integer bucket
     * arithmetic and the threshold compares the same double both
     * engines compute in the same order, so the result set is
-    * engine-reproducible (full DuckDB oracle). Scale: identical
-    * shape to [[lshTopK]] — the threshold filter replaces the window
-    * rank, so radius search is strictly cheaper (no per-query sort). */
+    * engine-reproducible (full DuckDB oracle). The threshold is
+    * Spark's `>=` on doubles (a NaN cosine passes; −0.0 equals 0.0).
+    * Scale: the lazy member of the family — one per-partition scan of
+    * the corpus with [[lshTopK]]'s candidate test, no heap, no
+    * collect, no join and no exchange; it runs when the caller's
+    * action runs. Query ids must be distinct. */
   def lshRadius(embs: DataFrame, idCol: String, vecCol: String,
                 queries: Array[(Long, Array[Double])], minCosine: Double,
-                nTables: Int = 8, bits: Int = 4, seed: Long = 42L): DataFrame =
-    lshScores(embs, idCol, vecCol, queries, nTables, bits, seed)
-      .filter(col("cosine") >= minCosine)
-      .select(col("query_id"), col("neighbor_id"), col("cosine"))
-
-  /** Shared LSH candidate scoring: bucket join + exact cosine on the
-    * deduplicated candidate pairs. */
-  private def lshScores(embs: DataFrame, idCol: String, vecCol: String,
-                        queries: Array[(Long, Array[Double])],
-                        nTables: Int, bits: Int, seed: Long): DataFrame = {
+                nTables: Int = 8, bits: Int = 4, seed: Long = 42L): DataFrame = {
     val spark = embs.sparkSession
     import spark.implicits._
-    val dim = queries.head._2.length
-    val planes = intPlanes(nTables, bits, dim, seed)
-    val pb = spark.sparkContext.broadcast(planes)
-    val p = embs.select(col(idCol).cast("long").as("id"),
-      VectorOps.toDouble(col(vecCol)).as("v")).as[(Long, Array[Double])]
-    val buckets = p.mapPartitions { iter =>
-      val pl = pb.value
-      iter.flatMap { case (id, v) =>
-        val qv = quantize(v)
-        pl.iterator.zipWithIndex.map { case (tp, t) => (id, v, t, bucketOf(qv, tp)) }
-      }
-    }.toDF("id", "v", "table", "bucket")
-    val qRows = queries.flatMap { case (qid, qv) =>
-      planes.zipWithIndex.map { case (tp, t) =>
-        (qid, qv, math.sqrt(VectorOps.dotSeq(qv, qv)), t, bucketOf(quantize(qv), tp))
-      }
-    }.toSeq
-    val qdf = qRows.toDF("query_id", "qv", "qn", "table", "bucket")
-    val cand = buckets.join(broadcast(qdf), Seq("table", "bucket"))
-      .filter(col("id") =!= col("query_id"))
-      .dropDuplicates("query_id", "id")
-      .as[(Int, Int, Long, Array[Double], Long, Array[Double], Double)]
-    cand.map { case (_, _, id, v, qid, qv, qn) =>
-      val c = VectorOps.dotSeq(qv, v) / (qn * math.sqrt(VectorOps.dotSeq(v, v)))
-      (qid, id, c)
-    }.toDF("query_id", "neighbor_id", "cosine")
+    val (planes, qs) = lshQueries(queries, nTables, bits, seed)
+    embs.select(col(idCol).cast("long").as("id"), VectorOps.toDouble(col(vecCol)).as("v"))
+      .as[(Long, Array[Double])]
+      .mapPartitions(_.flatMap { case (id, v) =>
+        val vb = lshBuckets(v, planes)
+        val n = math.sqrt(VectorOps.dotSeq(v, v))
+        qs.iterator.collect { case (qid, qv, qn, qb) if id != qid && sharesBucket(qb, vb) =>
+          (qid, id, VectorOps.dotSeq(qv, v) / (qn * n))
+        }.filter(c => SQLOrderingUtil.compareDoubles(c._3, minCosine) >= 0)
+      })
+      .toDF("query_id", "neighbor_id", "cosine")
   }
 
   // ---- Product quantization (PQ) ------------------------------------
@@ -968,37 +973,90 @@ object Similarity {
     }
   }
 
-  /** Probe a built PQ index: reconstruct each stored code vector from
-    * the codebooks (concat of m codeword lookups) and rank by one
-    * 64-term [[graft.plans.expressions.SqDist]] fold — identical
-    * arithmetic to [[pqTopK]], but the corpus side reads CODES from
-    * the index (the 16×-compressed representation) and never touches
-    * a raw vector or retrains. */
-  def pqProbe(index: PqIndex, queries: Array[(Long, Array[Double])], k: Int): DataFrame = {
-    val spark = index.codes.sparkSession
-    import spark.implicits._
-    val cb = index.codebooks
-    val m = cb.length
-    val recon = concat((0 until m).map { j =>
-      element_at(typedLit(cb(j).map(_.toSeq).toSeq), element_at(col("codes"), j + 1) + 1)
-    }: _*)
-    val withRecon = index.codes.select(col("id").as("neighbor_id"), recon.as("recon"))
-    val qdf = broadcast(queries.toSeq.toDF("query_id", "qv"))
-    val scored = withRecon.join(qdf, col("neighbor_id") =!= col("query_id"))
-      .select(col("query_id"), col("neighbor_id"),
-        graft.plans.expressions.vec_sqdist(col("qv"), col("recon")).as("sqdist"))
-    val w = Window.partitionBy("query_id")
-      .orderBy(col("sqdist").asc, col("neighbor_id"))
-    scored
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("neighbor_id"), col("rank"), col("sqdist"))
+  /** The reconstruction of `v` — per subspace the codeword
+    * [[ArgminKernel]] picks, the kernel and tie rule of `vec_argmin`
+    * over `slice` — or null when `v` is null or shorter than m·sub
+    * (`slice` then leaves a subspace short). `flat`: each book flat. */
+  private def pqEncoded(v: ArrayData, cb: Array[Array[Array[Double]]],
+                        flat: Array[Array[Double]], sub: Int): Array[Double] =
+    if (v == null || v.numElements() < cb.length * sub) null
+    else {
+      val out = new Array[Double](cb.length * sub)
+      for (j <- cb.indices) {
+        val c = ArgminKernel.compute(v, j * sub, flat(j), cb(j).length, sub).getInt(0)
+        System.arraycopy(cb(j)(c), 0, out, j * sub, sub)
+      }
+      out
+    }
+
+  /** The reconstruction of stored `codes`, or null for null codes or a
+    * null code; a missing or out-of-range code fails. */
+  private def pqDecoded(codes: ArrayData, cb: Array[Array[Array[Double]]],
+                        sub: Int): Array[Double] = {
+    if (codes == null) return null
+    require(codes.numElements() >= cb.length,
+      s"${codes.numElements()} PQ codes for ${cb.length} subspaces")
+    val out = new Array[Double](cb.length * sub)
+    for (j <- cb.indices if !codes.isNullAt(j))
+      System.arraycopy(cb(j)(codes.getInt(j)), 0, out, j * sub, sub)
+    if (cb.indices.exists(codes.isNullAt)) null else out
   }
 
-  /** PQ ASYMMETRIC-DISTANCE top-k: encode the corpus (per-subspace
-    * compiled argmin → m small codes per vector), then score each
-    * query against the RECONSTRUCTION (codeword concatenation) with
-    * one 64-dim [[graft.plans.expressions.SqDist]].
+  /** The PQ tail: [[topK]] over `rows` (id, payload...) in `sqdist
+    * ASC` order. `recon(row, sub)` is a row's reconstruction (null:
+    * unscorable); each query scores it by `vec_sqdist` — ONE
+    * accumulator over the m subspaces in order, the 64-term
+    * left-to-right fold of DuckDB's `list_sum` — null when either side
+    * is null or the widths differ. Without `probing` a row meets every
+    * query, else the queries probing its cell (column 2). sqdist is
+    * nullable, neighbor_id as nullable as the scanned id. `recon` is
+    * one call per row, outside the per-query loop the NOTE at
+    * [[bruteForceTopK]] keeps monomorphic. */
+  private def pqRanked(op: String, rows: DataFrame,
+                       cb: Array[Array[Array[Double]]], queries: Array[(Long, Array[Double])],
+                       k: Int, probing: Array[Array[Int]] = null)
+                      (recon: (InternalRow, Int) => Array[Double]): DataFrame = {
+    val sub = cb.head.head.length
+    require(cb.forall(b => b.nonEmpty && b.forall(_.length == sub)), "PQ codewords differ in width")
+    val qs = queries.map { case (id, qv) =>
+      (id, if (qv != null && qv.length == cb.length * sub) qv else null)
+    }
+    val merged = topK(op, rows, queries.map(_._1), k, SqDistAsc) { it =>
+      val heaps = qs.map(_ => new BoundedTopK[(java.lang.Double, Long)](k, SqDistAsc))
+      val all = qs.indices.toArray
+      it.filter(!_.isNullAt(0)).foreach { r =>
+        val id = r.getLong(0)
+        val rc = recon(r, sub)
+        val qis = if (probing == null) all else probing(r.getInt(2))
+        var j = 0
+        while (j < qis.length) {
+          val (qid, qv) = qs(qis(j))
+          if (id != qid) heaps(qis(j)).offer(
+            (if (qv == null || rc == null) null else VectorOps.sqdistSeq(qv, rc), id))
+          j += 1
+        }
+      }
+      heaps
+    }
+    rankedFrame(rows.sparkSession, "sqdist", DoubleType, merged,
+      Set("sqdist") ++ (if (rows.schema.head.nullable) Set("neighbor_id") else Set.empty))
+  }
+
+  /** Probe a built PQ index: [[pqTopK]]'s arithmetic on each stored
+    * code vector's reconstruction — the corpus side reads CODES (the
+    * 16×-compressed representation), never a raw vector, and never
+    * retrains. One job over the codes (the family NOTE at
+    * [[bruteForceTopK]]). */
+  def pqProbe(index: PqIndex, queries: Array[(Long, Array[Double])], k: Int): DataFrame = {
+    val cb = index.codebooks
+    pqRanked("pqProbe", index.codes.select(col("id").cast("long"), col("codes")), cb, queries,
+      k)((r, sub) => pqDecoded(r.getArray(1), cb, sub))
+  }
+
+  /** PQ ASYMMETRIC-DISTANCE top-k: encode each corpus vector
+    * (per-subspace argmin → m small codes), then score each query
+    * against the RECONSTRUCTION (codeword concatenation) with one
+    * 64-term squared-distance fold.
     *
     * Scoring via reconstruction rather than per-subspace LUT sums is
     * deliberate: d²(q, recon) equals the ADC value mathematically,
@@ -1009,42 +1067,18 @@ object Similarity {
     *
     * Scale shape: train reads the corpus once and makes `iters`
     * rounds over it (or a bounded sample at real scale, like IVF);
-    * encode is one scan of compiled argmins; scoring is broadcast-queries × codes with a
-    * bounded per-query top-k — the stored/shuffled representation is
-    * codes, never raw vectors. */
+    * encode and score are ONE job (the family NOTE at
+    * [[bruteForceTopK]]). A vector PQ cannot encode (null, or shorter
+    * than m·sub) scores null, which ranks first. */
   def pqTopK(embs: DataFrame, idCol: String, vecCol: String,
              queries: Array[(Long, Array[Double])], k: Int,
              m: Int = 4, kCodes: Int = 16, iters: Int = 4,
              codebooks: Option[Array[Array[Array[Double]]]] = None): DataFrame = {
-    val spark = embs.sparkSession
-    import spark.implicits._
     val cb = codebooks.getOrElse(pqTrain(embs, idCol, vecCol, m, kCodes, iters))
-    val dim = cb.map(_.head.length).sum
-    val sub = dim / m
-    val p = embs.select(col(idCol).cast("long").as("neighbor_id"),
-      VectorOps.toDouble(col(vecCol)).as("v"))
-    // encode: per-subspace compiled argmin, then reconstruct by
-    // looking the codes back up in nested literals (concat of m
-    // element_at's — codes are what a real index stores)
-    val coded = (0 until m).foldLeft(p) { (df, j) =>
-      val (cid, _) = graft.cluster.KMeansNative.argminColumns(
-        slice(col("v"), j * sub + 1, sub), cb(j))
-      df.withColumn(s"_c$j", cid)
-    }
-    val recon = concat((0 until m).map { j =>
-      element_at(typedLit(cb(j).map(_.toSeq).toSeq), col(s"_c$j") + 1)
-    }: _*)
-    val withRecon = coded.select(col("neighbor_id"), recon.as("recon"))
-    val qdf = broadcast(queries.toSeq.toDF("query_id", "qv"))
-    val scored = withRecon.join(qdf, col("neighbor_id") =!= col("query_id"))
-      .select(col("query_id"), col("neighbor_id"),
-        graft.plans.expressions.vec_sqdist(col("qv"), col("recon")).as("sqdist"))
-    val w = Window.partitionBy("query_id")
-      .orderBy(col("sqdist").asc, col("neighbor_id"))
-    scored
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("neighbor_id"), col("rank"), col("sqdist"))
+    require(cb.length == m, s"${cb.length} codebooks for $m subspaces")
+    val flat = cb.map(_.flatten)
+    pqRanked("pqTopK", scanRows(embs, idCol, vecCol), cb, queries, k)(
+      (r, sub) => pqEncoded(r.getArray(1), cb, flat, sub))
   }
 
   /** EXACT second-moment statistics of an embedding column — the
@@ -1844,7 +1878,7 @@ object Similarity {
                                  queryFoldsFirst: Boolean): Array[(Long, Long, Double)] = {
     val qs = queries.map { case (_, v) => (v, math.sqrt(VectorOps.dotSeq(v, v))) }
     val qFirst = queryFoldsFirst
-    topK("sampledTopK", corpus.queryExecution.toRdd, queries.map(_._1), k, ScoreDesc) { rows =>
+    topK("sampledTopK", corpus, queries.map(_._1), k, ScoreDesc) { rows =>
       val heaps = qs.map(_ => new BoundedTopK[(Double, Long)](k, ScoreDesc))
       rows.foreach { r =>
         val id = r.getLong(0)

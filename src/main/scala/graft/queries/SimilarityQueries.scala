@@ -21,15 +21,24 @@ object SimilarityQueries {
   val Dim = 64
 
   private def queryVecs(s: SparkSession, dir: String): Array[(Long, Array[Double])] =
-    Tables.embeddings(s, dir)
-      .orderBy("vec_id").limit(Q)
+    queryVecs(Tables.embeddings(s, dir))
+
+  private def queryVecs(emb: DataFrame): Array[(Long, Array[Double])] =
+    emb.orderBy("vec_id").limit(Q)
       .select(col("vec_id"), VectorOps.toDouble(col("embedding")))
       .collect()
       .map(r => (r.getLong(0), r.getSeq[Double](1).toArray))
 
+  /** `op` over the embeddings and their query batch, the table read
+    * once (each read runs a schema-inference job). */
+  private def flat(s: SparkSession, dir: String)
+                  (op: (DataFrame, Array[(Long, Array[Double])]) => DataFrame): DataFrame = {
+    val emb = Tables.embeddings(s, dir)
+    op(emb, queryVecs(emb))
+  }
+
   def bruteForce(s: SparkSession, dir: String): DataFrame =
-    Similarity.bruteForceTopK(Tables.embeddings(s, dir), "vec_id", "embedding",
-        queryVecs(s, dir), K)
+    flat(s, dir)(Similarity.bruteForceTopK(_, "vec_id", "embedding", _, K))
       .select(col("query_id"), col("neighbor_id"), col("rank"),
         round(col("cosine"), 6).as("cosine"))
       .orderBy("query_id", "rank")
@@ -40,8 +49,7 @@ object SimilarityQueries {
     * differ on this fixture because vector norms vary). Same one-job
     * bounded-heap plan; dot folds left-to-right in both engines. */
   def mips(s: SparkSession, dir: String): DataFrame =
-    Similarity.mipsTopK(Tables.embeddings(s, dir), "vec_id", "embedding",
-        queryVecs(s, dir), K)
+    flat(s, dir)(Similarity.mipsTopK(_, "vec_id", "embedding", _, K))
       .select(col("query_id"), col("neighbor_id"), col("rank"),
         round(col("dot"), 6).as("dot"))
       .orderBy("query_id", "rank")
@@ -97,8 +105,7 @@ object SimilarityQueries {
       .orderBy("query_id", "rank")
 
   def lsh(s: SparkSession, dir: String): DataFrame =
-    Similarity.lshTopK(Tables.embeddings(s, dir), "vec_id", "embedding",
-        queryVecs(s, dir), K)
+    flat(s, dir)(Similarity.lshTopK(_, "vec_id", "embedding", _, K))
       .select(col("query_id"), col("neighbor_id"), col("rank"),
         round(col("cosine"), 6).as("cosine"))
       .orderBy("query_id", "rank")
@@ -110,8 +117,7 @@ object SimilarityQueries {
   val RadiusMinCosine = 0.3
 
   def radius(s: SparkSession, dir: String): DataFrame =
-    Similarity.lshRadius(Tables.embeddings(s, dir), "vec_id", "embedding",
-        queryVecs(s, dir), RadiusMinCosine)
+    flat(s, dir)(Similarity.lshRadius(_, "vec_id", "embedding", _, RadiusMinCosine))
       .select(col("query_id"), col("neighbor_id"),
         round(col("cosine"), 6).as("cosine"))
       .orderBy("query_id", "neighbor_id")
@@ -120,8 +126,7 @@ object SimilarityQueries {
     * rounding step), quantization formula replayed literally by the
     * oracle ([[Similarity.quantizeInt8]]). */
   def quant(s: SparkSession, dir: String): DataFrame =
-    Similarity.quantTopK(Tables.embeddings(s, dir), "vec_id", "embedding",
-        queryVecs(s, dir), K)
+    flat(s, dir)(Similarity.quantTopK(_, "vec_id", "embedding", _, K))
       .orderBy("query_id", "rank")
 
   // PQ build params — one definition for the build call, the fixture
@@ -153,14 +158,14 @@ object SimilarityQueries {
   /** Product-quantization top-k ([[Similarity.pqTopK]]): PqM subspaces
     * × PqCodes exact-decimal Lloyd codewords → PqM codes/vector (16×
     * compression of the float32 representation), asymmetric distance
-    * via reconstruction (one 64-dim SqDist — bit-equal to the DuckDB
-    * fold, see the operator scaladoc). Codebooks come from the SAME
+    * via reconstruction (one 64-term squared-distance fold, bit-equal
+    * to the DuckDB fold, see the operator scaladoc). Codebooks come from the SAME
     * persisted index [[pqProbeOnly]] serves (build exactly once);
     * training replays in the oracle through the SAME unrolled-Lloyd
     * CTE generator as kmeans_fit_native/IVF. */
   def pq(s: SparkSession, dir: String): DataFrame =
-    Similarity.pqTopK(Tables.embeddings(s, dir), "vec_id", "embedding",
-        queryVecs(s, dir), K, PqM, PqCodes, PqIters, Some(pqIndex(s, dir).codebooks))
+    flat(s, dir)(Similarity.pqTopK(_, "vec_id", "embedding", _, K, PqM, PqCodes, PqIters,
+        Some(pqIndex(s, dir).codebooks)))
       .select(col("query_id"), col("neighbor_id"), col("rank"),
         round(col("sqdist"), 6).as("sqdist"))
       .orderBy("query_id", "rank")

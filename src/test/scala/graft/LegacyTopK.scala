@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
 
 import graft.functions.VectorOps
 import graft.operators.Similarity
-import graft.operators.Similarity.IvfIndex
+import graft.operators.Similarity.{IvfIndex, PqIndex}
 
 /** The window formulation of the bounded-heap top-k family: every
   * candidate scored into a frame and ranked by a Catalyst
@@ -17,7 +17,10 @@ import graft.operators.Similarity.IvfIndex
   * are their old plans verbatim. The flat operators' old plans also
   * pruned each partition with a heap before the window; the heaps are
   * left out here, because they only dropped candidates the window
-  * drops, and they ordered −0.0 below 0.0 where the window ties them. */
+  * drops, and they ordered −0.0 below 0.0 where the window ties them.
+  * The PQ and LSH operators are their old plans verbatim (the window
+  * over a broadcast join; for LSH a bucket join and
+  * `dropDuplicates`). */
 object LegacyTopK {
 
   private def ranked(scored: DataFrame, score: String, k: Int,
@@ -212,6 +215,166 @@ object LegacyTopK {
     val qids = queries.map(q => java.lang.Long.valueOf(q._1)).toSeq
     vote(labeledProbeCands(index, labels, idCol, labelCol, queries, nProbe)
       .filter(!col("neighbor_id").isin(qids: _*)), queries, k)
+  }
+
+  /** `Similarity.probePq`'s old plan verbatim: the probed cells joined
+    * to the broadcast (query, cell) rows, encoded by the compiled
+    * per-subspace argmins, reconstructed by codeword lookups, scored by
+    * one `vec_sqdist` and ranked by a window (sqdist ascending, so a
+    * null score ranks first). */
+  def probePq(index: IvfIndex, codebooks: Array[Array[Array[Double]]],
+              queries: Array[(Long, Array[Double])], k: Int,
+              nProbe: Int = 4): DataFrame = {
+    val spark = index.cells.sparkSession
+    import spark.implicits._
+    val m = codebooks.length
+    val dim = codebooks.map(_.head.length).sum
+    val sub = dim / m
+    val probes = queries.flatMap { case (qid, qv) =>
+      index.centers.zipWithIndex
+        .map { case (c, cid) => (VectorOps.sqdistSeq(qv, c), cid) }
+        .sortBy { case (d, cid) => (d, cid) }
+        .take(nProbe)
+        .map { case (_, cid) => (qid, qv, cid) }
+    }.toSeq
+    val qdf = probes.toDF("query_id", "qv", "cell")
+    val neededCells = probes.map(_._3).distinct
+    val cand = index.cells
+      .filter(col("cell").isin(neededCells: _*))
+      .join(broadcast(qdf), Seq("cell"))
+      .filter(col("id") =!= col("query_id"))
+    val coded = (0 until m).foldLeft(cand) { (df, j) =>
+      val (cid, _) = graft.cluster.KMeansNative.argminColumns(
+        slice(col("v"), j * sub + 1, sub), codebooks(j))
+      df.withColumn(s"_c$j", cid)
+    }
+    val recon = concat((0 until m).map { j =>
+      element_at(typedLit(codebooks(j).map(_.toSeq).toSeq), col(s"_c$j") + 1)
+    }: _*)
+    val scored = coded.select(col("query_id"), col("id").as("neighbor_id"),
+      graft.plans.expressions.vec_sqdist(col("qv"), recon).as("sqdist"))
+    val w = Window.partitionBy("query_id")
+      .orderBy(col("sqdist").asc, col("neighbor_id"))
+    scored
+      .withColumn("rank", row_number().over(w))
+      .filter(col("rank") <= k)
+      .select(col("query_id"), col("neighbor_id"), col("rank"), col("sqdist"))
+  }
+
+  /** `Similarity.pqProbe`'s old plan verbatim: the stored codes looked
+    * up in the codebooks, a broadcast nested-loop join with the
+    * queries, one `vec_sqdist` and the window. */
+  def pqProbe(index: PqIndex, queries: Array[(Long, Array[Double])], k: Int): DataFrame = {
+    val spark = index.codes.sparkSession
+    import spark.implicits._
+    val cb = index.codebooks
+    val m = cb.length
+    val recon = concat((0 until m).map { j =>
+      element_at(typedLit(cb(j).map(_.toSeq).toSeq), element_at(col("codes"), j + 1) + 1)
+    }: _*)
+    val withRecon = index.codes.select(col("id").as("neighbor_id"), recon.as("recon"))
+    val qdf = broadcast(queries.toSeq.toDF("query_id", "qv"))
+    val scored = withRecon.join(qdf, col("neighbor_id") =!= col("query_id"))
+      .select(col("query_id"), col("neighbor_id"),
+        graft.plans.expressions.vec_sqdist(col("qv"), col("recon")).as("sqdist"))
+    val w = Window.partitionBy("query_id")
+      .orderBy(col("sqdist").asc, col("neighbor_id"))
+    scored
+      .withColumn("rank", row_number().over(w))
+      .filter(col("rank") <= k)
+      .select(col("query_id"), col("neighbor_id"), col("rank"), col("sqdist"))
+  }
+
+  /** `Similarity.pqTopK`'s old plan verbatim (codebooks given): the
+    * corpus encoded and reconstructed in the plan, joined to the
+    * broadcast queries, scored and ranked by the window. */
+  def pqTopK(embs: DataFrame, idCol: String, vecCol: String,
+             queries: Array[(Long, Array[Double])], k: Int, m: Int,
+             cb: Array[Array[Array[Double]]]): DataFrame = {
+    val spark = embs.sparkSession
+    import spark.implicits._
+    val dim = cb.map(_.head.length).sum
+    val sub = dim / m
+    val p = embs.select(col(idCol).cast("long").as("neighbor_id"),
+      VectorOps.toDouble(col(vecCol)).as("v"))
+    val coded = (0 until m).foldLeft(p) { (df, j) =>
+      val (cid, _) = graft.cluster.KMeansNative.argminColumns(
+        slice(col("v"), j * sub + 1, sub), cb(j))
+      df.withColumn(s"_c$j", cid)
+    }
+    val recon = concat((0 until m).map { j =>
+      element_at(typedLit(cb(j).map(_.toSeq).toSeq), col(s"_c$j") + 1)
+    }: _*)
+    val withRecon = coded.select(col("neighbor_id"), recon.as("recon"))
+    val qdf = broadcast(queries.toSeq.toDF("query_id", "qv"))
+    val scored = withRecon.join(qdf, col("neighbor_id") =!= col("query_id"))
+      .select(col("query_id"), col("neighbor_id"),
+        graft.plans.expressions.vec_sqdist(col("qv"), col("recon")).as("sqdist"))
+    val w = Window.partitionBy("query_id")
+      .orderBy(col("sqdist").asc, col("neighbor_id"))
+    scored
+      .withColumn("rank", row_number().over(w))
+      .filter(col("rank") <= k)
+      .select(col("query_id"), col("neighbor_id"), col("rank"), col("sqdist"))
+  }
+
+  /** `Similarity.lshTopK`'s old plan verbatim: the bucket join, then a
+    * window over the deduplicated candidates' cosines. */
+  def lshTopK(embs: DataFrame, idCol: String, vecCol: String,
+              queries: Array[(Long, Array[Double])], k: Int,
+              nTables: Int = 8, bits: Int = 4, seed: Long = 42L): DataFrame = {
+    val scored = lshScores(embs, idCol, vecCol, queries, nTables, bits, seed)
+    val w = Window.partitionBy("query_id")
+      .orderBy(col("cosine").desc, col("neighbor_id"))
+    scored
+      .withColumn("rank", row_number().over(w))
+      .filter(col("rank") <= k)
+      .select(col("query_id"), col("neighbor_id"), col("rank"), col("cosine"))
+  }
+
+  /** `Similarity.lshRadius`'s old plan verbatim: the bucket join and a
+    * Catalyst `>=` filter. */
+  def lshRadius(embs: DataFrame, idCol: String, vecCol: String,
+                queries: Array[(Long, Array[Double])], minCosine: Double,
+                nTables: Int = 8, bits: Int = 4, seed: Long = 42L): DataFrame =
+    lshScores(embs, idCol, vecCol, queries, nTables, bits, seed)
+      .filter(col("cosine") >= minCosine)
+      .select(col("query_id"), col("neighbor_id"), col("cosine"))
+
+  /** Shared LSH candidate scoring: bucket join + exact cosine on the
+    * deduplicated candidate pairs. */
+  private def lshScores(embs: DataFrame, idCol: String, vecCol: String,
+                        queries: Array[(Long, Array[Double])],
+                        nTables: Int, bits: Int, seed: Long): DataFrame = {
+    val spark = embs.sparkSession
+    import spark.implicits._
+    val dim = queries.head._2.length
+    val planes = Similarity.intPlanes(nTables, bits, dim, seed)
+    val pb = spark.sparkContext.broadcast(planes)
+    val p = embs.select(col(idCol).cast("long").as("id"),
+      VectorOps.toDouble(col(vecCol)).as("v")).as[(Long, Array[Double])]
+    val buckets = p.mapPartitions { iter =>
+      val pl = pb.value
+      iter.flatMap { case (id, v) =>
+        val qv = Similarity.quantize(v)
+        pl.iterator.zipWithIndex.map { case (tp, t) => (id, v, t, Similarity.bucketOf(qv, tp)) }
+      }
+    }.toDF("id", "v", "table", "bucket")
+    val qRows = queries.flatMap { case (qid, qv) =>
+      planes.zipWithIndex.map { case (tp, t) =>
+        (qid, qv, math.sqrt(VectorOps.dotSeq(qv, qv)), t,
+          Similarity.bucketOf(Similarity.quantize(qv), tp))
+      }
+    }.toSeq
+    val qdf = qRows.toDF("query_id", "qv", "qn", "table", "bucket")
+    val cand = buckets.join(broadcast(qdf), Seq("table", "bucket"))
+      .filter(col("id") =!= col("query_id"))
+      .dropDuplicates("query_id", "id")
+      .as[(Int, Int, Long, Array[Double], Long, Array[Double], Double)]
+    cand.map { case (_, _, id, v, qid, qv, qn) =>
+      val c = VectorOps.dotSeq(qv, v) / (qn * math.sqrt(VectorOps.dotSeq(v, v)))
+      (qid, id, c)
+    }.toDF("query_id", "neighbor_id", "cosine")
   }
 
   /** `Similarity.sampledTopK`'s old plan verbatim: per-partition heaps
